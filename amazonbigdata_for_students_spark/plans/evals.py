@@ -2785,7 +2785,6 @@ def eval_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fleiss-kappa rater panel: three deterministic document-quality raters
 # (length, token count, sentence-punctuation), each a pure column
 # expression shared verbatim by the Spark plan and the DuckDB oracle.
-_FLEISS_R = 3
 _FLEISS_HI_DUCK = (
     "(CASE WHEN n_chars >= 150 THEN 1 ELSE 0 END"
     f" + CASE WHEN len({SQL_TOKENS}) >= 25 THEN 1 ELSE 0 END"

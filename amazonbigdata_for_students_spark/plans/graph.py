@@ -12,8 +12,6 @@ SQL).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..sources.readers import load_table
@@ -81,9 +79,7 @@ def _width_for_rows(spark, n_rows: int, bytes_per_row: int = 64) -> int:
     return int(min(4096, max(cores, (n_rows * bytes_per_row) // (64 << 20) + 1)))
 
 
-_LOOP_BROADCAST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LOOP_BROADCAST_BYTES", str(256 << 20))
-)
+_LOOP_BROADCAST_BYTES = 256 << 20
 
 
 def _bcast_if_small(df: DataFrame, n_rows: int, bytes_per_row: int = 64) -> DataFrame:
@@ -97,8 +93,8 @@ def _bcast_if_small(df: DataFrame, n_rows: int, bytes_per_row: int = 64) -> Data
     0 BroadcastHashJoin in LPA's FINAL plan, every round re-exchanged
     and sorted the edge table by src). bytes_per_row is a deliberate
     HashedRelation-cost ceiling for the 2-field rows these loops carry;
-    above the cutoff (SPARK_GRAFT_LOOP_BROADCAST_BYTES, default 256 MB
-    -- guide 3.1: "a few hundred MB is usually fine") the join degrades
+    above the cutoff (_LOOP_BROADCAST_BYTES, 256 MB -- guide 3.1: "a
+    few hundred MB is usually fine") the join degrades
     to the scalable SMJ, which is the correct shape when nodes are
     billions (the 100 TB regime)."""
     if n_rows * bytes_per_row <= _LOOP_BROADCAST_BYTES:

@@ -108,10 +108,6 @@ def davg(col: Column | str) -> Column:
     return dsum(c) / F.count(c)
 
 
-def bench_queries() -> dict[str, Query]:
-    return {n: q for n, q in REGISTRY.items() if q.bench}
-
-
 def global_prefix(
     df: DataFrame,
     order_cols: list[Column],

@@ -3943,7 +3943,6 @@ def timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SLO_BUDGET_PPM = 200_000  # 20% error budget: burn 1e6 ppm = burning at budget
 _SLO_WEEK_HOURS = 168
 
 

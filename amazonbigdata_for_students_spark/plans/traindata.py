@@ -19,6 +19,8 @@ from .text import (
     SQL_TOKENS,
     TOKENS,
     _GOPHER_PASS_PRED,
+    _NORM,
+    _NORM_SQL,
     containment_sql_ctes,
     gopher_measures_sql_cte,
     span_cov_sql_ctes,
@@ -46,6 +48,70 @@ def split_col():
     return F.when(nibble < 13, "train").when(nibble == 13, "val").otherwise("test")
 
 
+# --- shared corpus_build_pipeline stages ------------------------------------
+# Each pipeline generation is a chain of these calls; each oracle chains
+# the SQL twins, so a stage cannot drift between generations.
+
+_SHARD_BUDGET = 4000  # tokens per shard
+
+# Single-window twin of token_budget_shards over (doc_id, n_tokens).
+_SHARD_SQL = f"""CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   / {_SHARD_BUDGET}) AS BIGINT)"""
+
+
+def _canon_ids(d: DataFrame) -> DataFrame:
+    """Exact-dedup canonical ids (dedup_exact_docs' key): the min doc_id
+    per normalized-text fingerprint, as a one-column doc_id frame."""
+    return (
+        d.select("doc_id", _NORM().alias("fp"))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+
+
+def _canon_sql(src: str) -> str:
+    """DuckDB twin of _canon_ids over ``src``: the ``canon`` CTE."""
+    return f"canon AS (SELECT min(doc_id) AS doc_id FROM {src} GROUP BY {_NORM_SQL})"
+
+
+def _account(kept: DataFrame, key: str, en_docs: bool = True) -> DataFrame:
+    """Per-`key` corpus accounting over (n_tokens[, lang]): n_docs,
+    total_tokens and, with `en_docs`, n_en_docs."""
+    aggs = [
+        F.count("*").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("total_tokens"),
+    ]
+    if en_docs:
+        aggs.append(
+            F.sum((F.col("lang") == "en").cast("long")).cast("long").alias("n_en_docs")
+        )
+    return kept.groupBy(key).agg(*aggs)
+
+
+def _account_sql(key: str, src: str, en_docs: bool = True) -> str:
+    """DuckDB twin of _account: the pipeline's final SELECT."""
+    en = (
+        ", CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en_docs"
+        if en_docs
+        else ""
+    )
+    return f"""SELECT {key}, count(*) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS total_tokens{en}
+    FROM {src}
+    GROUP BY {key}"""
+
+
+def _shard_account_sql(src: str) -> str:
+    """Token-budget sharding then per-shard accounting over ``src``
+    (doc_id, lang, n_tokens): the last CTE and the final SELECT."""
+    return f"""sharded AS (
+      SELECT doc_id, lang, n_tokens, {_SHARD_SQL} AS shard FROM {src}
+    )
+    {_account_sql("shard", "sharded")}"""
+
+
 @query(
     "split_train_test",
     oracle=f"""
@@ -71,26 +137,13 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_build_pipeline",
     oracle=f"""
-    WITH canon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
+    WITH {_canon_sql("documents")},
     kept AS (
-      SELECT d.doc_id,
-             len(list_filter(string_split_regex(lower(trim(d.text)), '\\s+'), x -> x <> ''))
-               AS n_tokens,
-             CASE WHEN strpos('{_HEX}', substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)) - 1 < 13
-                    THEN 'train'
-                  WHEN strpos('{_HEX}', substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)) - 1 = 13
-                    THEN 'val'
-                  ELSE 'test' END AS split
+      SELECT len({SQL_TOKENS}) AS n_tokens, {SPLIT_CASE_SQL} AS split
       FROM documents d JOIN canon USING (doc_id)
       WHERE d.n_chars >= 20
     )
-    SELECT split, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-    FROM kept
-    GROUP BY split
+    {_account_sql("split", "kept", en_docs=False)}
     """,
     tags=("U6", "E3", "P2"),
 )
@@ -104,31 +157,13 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the dedup groupBy and the final 3-group aggregate — the membership
     join is left-semi on the canonical-id set (aggregate output, AQE
     broadcasts it when it fits)."""
-    from .text import TOKENS, _NORM
-
     d = load_table(spark, sf_dir, "documents")
-    canon = (
-        d.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    nibble = F.instr(F.lit(_HEX), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) - 1
     kept = (
-        d.join(canon, "doc_id", "left_semi")
+        d.join(_canon_ids(d), "doc_id", "left_semi")
         .filter(F.col("n_chars") >= 20)
-        .select(
-            F.size(TOKENS()).alias("n_tokens"),
-            F.when(nibble < 13, "train")
-            .when(nibble == 13, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
+        .select(F.size(TOKENS()).alias("n_tokens"), split_col().alias("split"))
     )
-    return kept.groupBy("split").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-    )
+    return _account(kept, "split", en_docs=False)
 
 
 _SAMPLE_FRACS = (
@@ -188,9 +223,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHARD_BUDGET = 4000  # tokens per shard
-
-
 @query(
     "shard_by_token_budget",
     oracle=f"""
@@ -200,10 +232,7 @@ _SHARD_BUDGET = 4000  # tokens per shard
                AS n_tokens
       FROM documents
     )
-    SELECT doc_id, n_tokens,
-           CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 / {_SHARD_BUDGET}) AS BIGINT) AS shard
+    SELECT doc_id, n_tokens, {_SHARD_SQL} AS shard
     FROM t
     """,
     tags=("W3", "A7"),
@@ -279,9 +308,6 @@ def token_budget_shards(
         .withColumn("shard", F.floor((F.col("_run") + F.col("offset")) / budget))
         .drop("_part", "_run", "offset", "sub")
     )
-
-
-_N_SHUFFLE_SHARDS = 16
 
 
 @query(
@@ -676,14 +702,9 @@ def seq_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_build_pipeline_v2",
     oracle=f"""
-    WITH canon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
+    WITH {_canon_sql("documents")},
     toks AS (
-      SELECT d.doc_id,
-             list_filter(string_split_regex(lower(trim(d.text)), '\\s+'), x -> x <> '') AS toks
+      SELECT doc_id, {SQL_TOKENS} AS toks
       FROM documents d JOIN canon USING (doc_id)
     ),
     big AS (SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS bg
@@ -700,19 +721,12 @@ def seq_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY b.doc_id
     ),
     kept AS (
-      SELECT t.doc_id, len(t.toks) AS n_tokens,
-             CASE WHEN strpos('{_HEX}', substring(md5(CAST(t.doc_id AS VARCHAR)), 1, 1)) - 1 < 13
-                    THEN 'train'
-                  WHEN strpos('{_HEX}', substring(md5(CAST(t.doc_id AS VARCHAR)), 1, 1)) - 1 = 13
-                    THEN 'val'
-                  ELSE 'test' END AS split
+      SELECT len(t.toks) AS n_tokens, {SPLIT_CASE_SQL} AS split
       FROM toks t JOIN lp USING (doc_id)
       WHERE len(t.toks) >= 5
         AND CAST(lp.total_lp AS DOUBLE) / lp.n_big >= -3.45
     )
-    SELECT split, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-    FROM kept
-    GROUP BY split
+    {_account_sql("split", "kept", en_docs=False)}
     """,
     tags=("U6", "U2", "E3", "P2", "A7"),
 )
@@ -729,16 +743,8 @@ def corpus_build_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     join strategy is left to AQE; everything else is unchanged from v1.
     This is the judge-visible proof the new operators are pipeline stages,
     not demos."""
-    from .text import TOKENS, _NORM
-
     d = load_table(spark, sf_dir, "documents")
-    canon = (
-        d.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    docs = d.join(canon, "doc_id", "left_semi").select(
+    docs = d.join(_canon_ids(d), "doc_id", "left_semi").select(
         "doc_id", TOKENS().alias("toks")
     )
     n1 = F.greatest(F.size("toks") - 1, F.lit(0))
@@ -768,26 +774,13 @@ def corpus_build_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("lp").alias("total_lp"), F.count("*").alias("n_big"))
     )
-    nibble = (
-        F.instr(F.lit(_HEX), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1))
-        - 1
-    )
     kept = (
         docs.join(lp, "doc_id")
         .filter(F.size("toks") >= 5)
         .filter(F.col("total_lp").cast("double") / F.col("n_big") >= -3.45)
-        .select(
-            F.size("toks").alias("n_tokens"),
-            F.when(nibble < 13, "train")
-            .when(nibble == 13, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
+        .select(F.size("toks").alias("n_tokens"), split_col().alias("split"))
     )
-    return kept.groupBy("split").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-    )
+    return _account(kept, "split", en_docs=False)
 
 
 # --------------------------------------------------------------------------
@@ -973,14 +966,9 @@ def distributed_ntile(df: DataFrame, score: str, id_col: str, k: int) -> DataFra
 @query(
     "corpus_build_pipeline_v3",
     oracle=f"""
-    WITH canon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
+    WITH {_canon_sql("documents")},
     docs AS (
-      SELECT d.doc_id, d.lang, d.n_chars,
-             list_filter(string_split_regex(lower(trim(d.text)), '\\s+'), x -> x <> '') AS toks
+      SELECT doc_id, lang, n_chars, {SQL_TOKENS} AS toks
       FROM documents d JOIN canon USING (doc_id)
     ),
     u AS (SELECT doc_id, lang, unnest(toks) AS w FROM docs),
@@ -1005,15 +993,10 @@ def distributed_ntile(df: DataFrame, score: str, id_col: str, k: int) -> DataFra
     ),
     staged AS (
       SELECT lang, n_tokens,
-             ntile(4) OVER (ORDER BY n_chars, doc_id) AS stage
+             CAST(ntile(4) OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS stage
       FROM kept
     )
-    SELECT CAST(stage AS BIGINT) AS stage,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en_docs
-    FROM staged
-    GROUP BY stage
+    {_account_sql("stage", "staged")}
     """,
     tags=("U6", "U2", "A7", "W4"),
 )
@@ -1031,16 +1014,8 @@ def corpus_build_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed_ntile, the same helper curriculum_stage_assign
     registers. The oracle chains the identical stages in SQL, ntile
     spelled literally."""
-    from .text import TOKENS, _NORM
-
     d = load_table(spark, sf_dir, "documents")
-    canon = (
-        d.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    docs = d.join(canon, "doc_id", "left_semi").select(
+    docs = d.join(_canon_ids(d), "doc_id", "left_semi").select(
         "doc_id", "lang", "n_chars", TOKENS().alias("toks")
     )
     u = docs.select("doc_id", "lang", F.explode("toks").alias("w"))
@@ -1067,11 +1042,7 @@ def corpus_build_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lw") >= 0)
     )
     staged = distributed_ntile(kept, score="n_chars", id_col="doc_id", k=4)
-    return staged.groupBy("stage").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum((F.col("lang") == "en").cast("long")).cast("long").alias("n_en_docs"),
-    )
+    return _account(staged, "stage")
 
 
 _HRW_N1 = 8  # shard count before the reshard
@@ -1243,41 +1214,47 @@ def sample_weighted_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "corpus_build_pipeline_v4",
-    oracle=f"""
-    WITH canon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
-    src AS (
+def _semantic_kept(spark: SparkSession, sf_dir: str, ids: DataFrame) -> DataFrame:
+    """SemDeDup stage: the rows of `ids` (doc_id, ...) whose embedding
+    semantic_cells_drops does not drop. Documents without an embedding
+    row pass untouched (the drop set only ever names vectors it scored)."""
+    from .vectors import _as_double, semantic_cells_drops
+
+    e = (
+        load_table(spark, sf_dir, "embeddings")
+        .join(ids, F.col("vec_id") == F.col("doc_id"), "left_semi")
+        .select("vec_id", _as_double("embedding").alias("v"))
+    )
+    _, dropped = semantic_cells_drops(e)
+    return ids.join(
+        dropped.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
+    )
+
+
+def _semantic_kept_sql(ids: str) -> str:
+    """DuckDB twin of _semantic_kept over the ``ids`` CTE; the last CTE
+    is ``kept``."""
+    return f"""src AS (
       SELECT em.vec_id, em.embedding
-      FROM embeddings em JOIN canon c ON em.vec_id = c.doc_id
+      FROM embeddings em JOIN {ids} k ON em.vec_id = k.doc_id
     ),
     {sem_sql_ctes("src")},
     kept AS (
-      SELECT c2.doc_id FROM canon c2 LEFT JOIN dropped d ON c2.doc_id = d.vec_id
-      WHERE d.vec_id IS NULL
-    ),
+      SELECT k.* FROM {ids} k LEFT JOIN dropped dr ON k.doc_id = dr.vec_id
+      WHERE dr.vec_id IS NULL
+    )"""
+
+
+@query(
+    "corpus_build_pipeline_v4",
+    oracle=f"""
+    WITH {_canon_sql("documents")},
+    {_semantic_kept_sql("canon")},
     t AS (
-      SELECT d.doc_id, d.lang,
-             len(list_filter(string_split_regex(lower(trim(d.text)), '\\s+'), x -> x <> ''))
-               AS n_tokens
+      SELECT doc_id, lang, len({SQL_TOKENS}) AS n_tokens
       FROM documents d JOIN kept k USING (doc_id)
     ),
-    sharded AS (
-      SELECT doc_id, lang, n_tokens,
-             CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   / 4000) AS BIGINT) AS shard
-      FROM t
-    )
-    SELECT shard, count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en_docs
-    FROM sharded
-    GROUP BY shard
+    {_shard_account_sql("t")}
     """,
     tags=("U5", "U6", "U2", "W3", "A7"),
 )
@@ -1294,55 +1271,26 @@ def corpus_build_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     modality — the multimodal-join discipline every mixed pipeline
     needs. The oracle chains the identical stages in SQL with the
     single-window prefix sum spelled literally."""
-    from .text import _NORM, TOKENS
-    from .vectors import _as_double, semantic_cells_drops
-
     d = load_table(spark, sf_dir, "documents")
-    canon = (
-        d.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .join(canon, F.col("vec_id") == F.col("doc_id"), "left_semi")
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
-    _, dropped = semantic_cells_drops(e)
-    kept = canon.join(
-        dropped.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
-    )
     t = (
-        d.join(kept, "doc_id", "left_semi")
+        d.join(_semantic_kept(spark, sf_dir, _canon_ids(d)), "doc_id", "left_semi")
         .select("doc_id", "lang", F.size(TOKENS()).alias("n_tokens"))
         # materialize once: downstream the sharder consumes t from THREE
         # plans (min/max collect, subtotal branch, window branch) and
         # each would otherwise re-execute the dedup + semantic subtree
         .localCheckpoint(eager=False)
     )
-    sharded = token_budget_shards(t, _SHARD_BUDGET)
-    return sharded.groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum((F.col("lang") == "en").cast("long")).cast("long").alias("n_en_docs"),
-    )
+    return _account(token_budget_shards(t, _SHARD_BUDGET), "shard")
 
 
 @query(
     "corpus_build_pipeline_v5",
     oracle=f"""
-    WITH canon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
+    WITH {_canon_sql("documents")},
     b AS (
       SELECT doc_id, lang, toks, CAST(len(toks) AS BIGINT) AS n_tokens
       FROM (
-        SELECT d.doc_id, d.lang,
-               list_filter(string_split_regex(lower(trim(d.text)), '\\s+'),
-                           x -> x <> '') AS toks
+        SELECT doc_id, lang, {SQL_TOKENS} AS toks
         FROM documents d JOIN canon USING (doc_id)
       )
     ),
@@ -1352,28 +1300,8 @@ def corpus_build_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM b LEFT JOIN span_cov sc USING (doc_id)
       WHERE coalesce(sc.covered, 0) * 5 <= b.n_tokens
     ),
-    src AS (
-      SELECT em.vec_id, em.embedding
-      FROM embeddings em JOIN spankept k ON em.vec_id = k.doc_id
-    ),
-    {sem_sql_ctes("src")},
-    kept AS (
-      SELECT s2.doc_id, s2.lang, s2.n_tokens
-      FROM spankept s2 LEFT JOIN dropped dr ON s2.doc_id = dr.vec_id
-      WHERE dr.vec_id IS NULL
-    ),
-    sharded AS (
-      SELECT doc_id, lang, n_tokens,
-             CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   / {_SHARD_BUDGET}) AS BIGINT) AS shard
-      FROM kept
-    )
-    SELECT shard, count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en_docs
-    FROM sharded
-    GROUP BY shard
+    {_semantic_kept_sql("spankept")},
+    {_shard_account_sql("kept")}
     """,
     tags=("U5", "U6", "U2", "W3", "A7", "F7"),
 )
@@ -1390,18 +1318,11 @@ def corpus_build_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the span stage's corpus-wide count naturally runs over the
     post-exact-dedup survivors — dedup ordering matters (exact first
     makes span counts reflect distinct content, not storage copies)."""
-    from .text import _NORM, TOKENS, span_coverage
-    from .vectors import _as_double, semantic_cells_drops
+    from .text import span_coverage
 
     d = load_table(spark, sf_dir, "documents")
-    canon = (
-        d.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
     b = (
-        d.join(canon, "doc_id", "left_semi")
+        d.join(_canon_ids(d), "doc_id", "left_semi")
         .select("doc_id", "lang", TOKENS().alias("toks"))
         .withColumn("n_tokens", F.size("toks").cast("long"))
         # consumed by span_coverage and spankept — dedup+tokenize once
@@ -1413,25 +1334,9 @@ def corpus_build_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.coalesce("covered", F.lit(0).cast("long")) * 5 <= F.col("n_tokens"))
         .select("doc_id", "lang", "n_tokens")
     )
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .join(spankept, F.col("vec_id") == F.col("doc_id"), "left_semi")
-        .select("vec_id", _as_double("embedding").alias("v"))
-    )
-    _, dropped = semantic_cells_drops(e)
-    t = (
-        spankept.join(
-            dropped.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
-        )
-        # materialize once: the sharder consumes this from three plans
-        .localCheckpoint(eager=False)
-    )
-    sharded = token_budget_shards(t, _SHARD_BUDGET)
-    return sharded.groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum((F.col("lang") == "en").cast("long")).cast("long").alias("n_en_docs"),
-    )
+    # materialize once: the sharder consumes this from three plans
+    t = _semantic_kept(spark, sf_dir, spankept).localCheckpoint(eager=False)
+    return _account(token_budget_shards(t, _SHARD_BUDGET), "shard")
 
 
 # Gopher's required-stop rule is a per-corpus/language parameter; the
@@ -1442,22 +1347,31 @@ def corpus_build_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .text import STOPWORDS as _PIPE_STOP  # noqa: E402
 
 
-@query(
-    "corpus_build_pipeline_v6",
-    oracle=f"""
-    WITH {{gopher_cte}},
+def _gopher_dedup(d: DataFrame) -> DataFrame:
+    """Gopher quality gate, then exact dedup among the survivors."""
+    from .text import gopher_measure_cols
+
+    *_, passes = gopher_measure_cols(stop=_PIPE_STOP)
+    g = d.filter(passes)
+    return g.join(_canon_ids(g), "doc_id", "left_semi")
+
+
+# DuckDB twin of _gopher_dedup over documents; the last CTE is ``base``.
+_GOPHER_DEDUP_SQL = f"""{gopher_measures_sql_cte("documents", stop=_PIPE_STOP)},
     g AS (
       SELECT d.doc_id, d.text, d.lang
       FROM documents d JOIN gm USING (doc_id)
-      WHERE {{gopher_pred}}
+      WHERE {_GOPHER_PASS_PRED}
     ),
-    gcanon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM g
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
-    base AS (SELECT g.* FROM g JOIN gcanon USING (doc_id)),
-    {{containment_ctes}},
+    {_canon_sql("g")},
+    base AS (SELECT g.* FROM g JOIN canon USING (doc_id))"""
+
+
+@query(
+    "corpus_build_pipeline_v6",
+    oracle=f"""
+    WITH {_GOPHER_DEDUP_SQL},
+    {containment_sql_ctes("base")},
     cdrops AS (
       SELECT DISTINCT doc_sub AS doc_id FROM containment
       WHERE doc_super < doc_sub
@@ -1469,24 +1383,8 @@ from .text import STOPWORDS as _PIPE_STOP  # noqa: E402
       LEFT JOIN cdrops dr USING (doc_id)
       WHERE dr.doc_id IS NULL
     ),
-    sharded AS (
-      SELECT doc_id, lang, n_tokens,
-             CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   / {{budget}}) AS BIGINT) AS shard
-      FROM kept
-    )
-    SELECT shard, count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en_docs
-    FROM sharded
-    GROUP BY shard
-    """.format(
-        gopher_cte=gopher_measures_sql_cte("documents", stop=_PIPE_STOP),
-        gopher_pred=_GOPHER_PASS_PRED,
-        containment_ctes=containment_sql_ctes("base"),
-        budget=_SHARD_BUDGET,
-    ),
+    {_shard_account_sql("kept")}
+    """,
     tags=("U5", "U6", "U2", "W3", "A7", "J7"),
 )
 def corpus_build_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1508,24 +1406,14 @@ def corpus_build_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment_sql_ctes), so the composition cannot drift from its
     stages."""
     from .text import (
-        TOKENS,
-        _NORM,
         _containment_directed,
         _containment_pair_counts,
         _deskewed_shingles,
-        gopher_measure_cols,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    *_, passes = gopher_measure_cols(stop=_PIPE_STOP)
-    g = d.filter(passes)
-    gcanon = (
-        g.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    base = _gopher_dedup(load_table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=False
     )
-    base = g.join(gcanon, "doc_id", "left_semi").localCheckpoint(eager=False)
     sh = _deskewed_shingles(base).localCheckpoint(eager=True)
     directed = _containment_directed(_containment_pair_counts(sh))
     drops = (
@@ -1540,12 +1428,7 @@ def corpus_build_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(drops, "doc_id", "left_anti")
         .localCheckpoint(eager=False)  # the sharder consumes it thrice
     )
-    sharded = token_budget_shards(kept, _SHARD_BUDGET)
-    return sharded.groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum((F.col("lang") == "en").cast("long")).cast("long").alias("n_en_docs"),
-    )
+    return _account(token_budget_shards(kept, _SHARD_BUDGET), "shard")
 
 
 # --- T5-style span corruption -------------------------------------------
@@ -1811,26 +1694,15 @@ from .text import MINHASH_BAND_SQL as _PIPE_BAND_SQL  # noqa: E402
 @query(
     "corpus_build_pipeline_v7",
     oracle=f"""
-    WITH {{gopher_cte}},
-    g AS (
-      SELECT d.doc_id, d.text, d.lang
-      FROM documents d JOIN gm USING (doc_id)
-      WHERE {{gopher_pred}}
-    ),
-    gcanon AS (
-      SELECT min(doc_id) AS doc_id
-      FROM g
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-    ),
-    base AS (SELECT g.* FROM g JOIN gcanon USING (doc_id)),
+    WITH {_GOPHER_DEDUP_SQL},
     tok AS (
-      SELECT doc_id, unnest(list_distinct({{sql_tokens}})) AS tok FROM base
+      SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS tok FROM base
     ),
-    sig AS (SELECT doc_id, {{sig_sql}} FROM tok GROUP BY doc_id),
+    sig AS (SELECT doc_id, {_PIPE_SIG_SQL} FROM tok GROUP BY doc_id),
     banded AS (
       SELECT doc_id,
-             {{band_concat}} AS band_key,
-             {{split_case}} AS split
+             {_PIPE_BAND_SQL} AS band_key,
+             {SPLIT_CASE_SQL} AS split
       FROM sig
     ),
     train_bands AS (
@@ -1842,27 +1714,14 @@ from .text import MINHASH_BAND_SQL as _PIPE_BAND_SQL  # noqa: E402
     ),
     kept AS (
       SELECT b.split, base.lang,
-             CAST(len({{sql_tokens}}) AS BIGINT) AS n_tokens
+             CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens
       FROM banded b
       JOIN base USING (doc_id)
       LEFT JOIN quar q ON b.doc_id = q.doc_id
       WHERE q.doc_id IS NULL
     )
-    SELECT split,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_en_docs
-    FROM kept
-    GROUP BY split
-    """.format(
-        gopher_cte=gopher_measures_sql_cte("documents", stop=_PIPE_STOP),
-        gopher_pred=_GOPHER_PASS_PRED,
-        sql_tokens=SQL_TOKENS,
-        sig_sql=_PIPE_SIG_SQL,
-        band_concat=_PIPE_BAND_SQL,
-        split_case=SPLIT_CASE_SQL,
-    ),
+    {_account_sql("split", "kept")}
+    """,
     tags=("U5", "U6", "U2", "F8", "J3", "J2"),
 )
 def corpus_build_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1893,24 +1752,9 @@ def corpus_build_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     imported, not re-typed: gopher_measure_cols, minhash_sig_cols,
     split_col — the composition cannot drift from its standalone
     stages."""
-    from .text import (
-        TOKENS,
-        _NORM,
-        gopher_measure_cols,
-        minhash_band_col,
-        minhash_sig_cols,
-    )
+    from .text import minhash_band_col, minhash_sig_cols
 
-    d = load_table(spark, sf_dir, "documents")
-    *_, passes = gopher_measure_cols(stop=_PIPE_STOP)
-    g = d.filter(passes)
-    gcanon = (
-        g.select("doc_id", _NORM().alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    base = g.join(gcanon, "doc_id", "left_semi")
+    base = _gopher_dedup(load_table(spark, sf_dir, "documents"))
     banded = (
         base.select(
             "doc_id", "lang", split_col().alias("split"), TOKENS().alias("toks")
@@ -1940,14 +1784,7 @@ def corpus_build_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(train_bands, "band_key", "left_semi")
         .select("doc_id")
     )
-    kept = banded.join(quar, "doc_id", "left_anti")
-    return kept.groupBy("split").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("long")
-        .alias("n_en_docs"),
-    )
+    return _account(banded.join(quar, "doc_id", "left_anti"), "split")
 
 
 @query(

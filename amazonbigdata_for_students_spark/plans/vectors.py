@@ -58,33 +58,10 @@ def _fence_quadratic_audit(e: DataFrame, name: str) -> DataFrame:
     return e
 
 
-# Max centroid dimension for unrolling _d2_lit/_dot literal folds into
-# flat codegen arithmetic. 16-dim x K=16 argmins compile and run inside
-# the scan's generated code (r11: 32.3 s -> 4.7 s for the PQ code-
-# assignment pass over 2M vectors); 64-dim x K=8 argmins push the fused
-# doConsume past Janino's 64KB method limit — the compile FAILS (~13 s
-# per attempt per distinct literal set) and the interpreted fallback of
-# the unrolled tree is slower than the zip_with/aggregate HOF, so large
-# dims keep the HOF form.
-_UNROLL_MAX_DIM = 16
-
-
 def _dot(a, b):
-    """Dot product. With a COLUMN `b` (or a long list): the zip_with/
-    aggregate fold (higher-order functions are interpreted, never
-    codegen'd — fine off the hot per-row path). With a PYTHON-LIST `b`
-    of <= _UNROLL_MAX_DIM elements (a collected codebook/query row):
-    the same left fold unrolled as flat codegen arithmetic —
-    ``lit(0.0) + a[0]*b0 + a[1]*b1 + ...`` reproduces the HOF's
-    ``acc + x*y`` accumulation order term by term, so the doubles are
-    bit-identical while WholeStageCodegen gets plain multiply-adds."""
-    if isinstance(b, (list, tuple)):
-        if len(b) <= _UNROLL_MAX_DIM:
-            acc = F.lit(0.0)
-            for i, y in enumerate(b):
-                acc = acc + a[i] * F.lit(float(y))
-            return acc
-        b = F.array(*[F.lit(float(y)) for y in b])
+    """Dot product of two array Columns as a zip_with/aggregate left fold
+    (acc + x*y, element by element; higher-order functions are
+    interpreted, never codegen'd)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -188,6 +165,65 @@ def vec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cosine(a, b, anrm, bnrm):
+    return _dot(a, b) / (anrm * bnrm)
+
+
+def _seed_cells(e: DataFrame, k: int):
+    """The deterministic IVF coarse quantizer of vec_ann_ivf_topk and
+    vec_ann_recall_curve. The seeds are the k lowest-vec_id rows of `e`
+    (vec_id, v, nrm), returned as ``c`` (cid, cv, cnrm). Each row of `e`
+    goes to the seed with the highest round(cos, 6), ties to the lowest
+    cid — the oracle's row_number over (round(cos) DESC, cid) — returned
+    as ``cell`` (vec_id, v, nrm, cid).
+
+    The k seed rows are collected and the argmin is one
+    least(struct(key, cid)) expression over literal seed arrays, so
+    assignment runs inside the scan: no join, no shuffle. Struct ordering
+    is lexicographic, so equal keys resolve to the lowest cid. The key
+    0 - round(cos, 6) is ascending. In a non-ANSI session a zero-norm
+    seed's cosine is NULL, and a NULL key would sort FIRST (win), so it
+    is coalesced to +inf — the window's DESC NULLS LAST, where a
+    zero-norm seed never wins. ANSI sessions raise on the zero division.
+
+    The key stays a Spark expression rather than an _argmin_arrow arm:
+    Spark's round() is HALF_UP over Double.toString, which on JDK 17 does
+    not always give the shortest digits, so a numpy port cannot be shown
+    bit-exact.
+
+    Raises ValueError on an empty `e` (no seeds)."""
+    c = e.orderBy("vec_id").limit(k).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
+    )
+    seeds = c.collect()
+    if not seeds:
+        raise ValueError(
+            "_seed_cells: empty input — no seed vectors to quantize against; "
+            "short-circuit to an empty result before assignment"
+        )
+    cands = [
+        F.struct(
+            F.coalesce(
+                F.lit(0.0)
+                - F.round(
+                    _cosine(
+                        F.col("v"),
+                        F.array(*[F.lit(float(x)) for x in r["cv"]]),
+                        F.col("nrm"),
+                        F.lit(float(r["cnrm"])),
+                    ),
+                    6,
+                ),
+                F.lit(float("inf")),
+            ).alias("k"),
+            F.lit(int(r["cid"])).cast("long").alias("cid"),
+        )
+        for r in seeds
+    ]
+    m = F.least(*cands) if len(cands) > 1 else cands[0]
+    return c, e.select("vec_id", "v", "nrm", m["cid"].alias("cid"))
+
+
 @query(
     "vec_ann_ivf_topk",
     oracle="""
@@ -242,35 +278,14 @@ def vec_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", _as_double("embedding").alias("v"))
         .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
     )
-    c = e.orderBy("vec_id").limit(K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-    )
+    c, cell = _seed_cells(e, K)
     q = e.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
-
-    def cos(a, b, anrm, bnrm):
-        return _dot(a, b) / (anrm * bnrm)
-
-    # deterministic 8-seed quantizer — bounded collect, literal
-    # zero-shuffle assignment (coalesce: the old window was cos DESC,
-    # nulls LAST — a zero-norm centroid's null cosine must keep LOSING)
-    crows = [(r["cid"], list(r["cv"]), float(r["cnrm"])) for r in c.collect()]
-    cell = e.withColumn(
-        "_m",
-        _argmin_lit(
-            crows,
-            lambda cvl, cn: F.coalesce(
-                F.lit(0.0)
-                - F.round(cos(F.col("v"), cvl, F.col("nrm"), F.lit(cn)), 6),
-                F.lit(float("inf")),
-            ),
-        ),
-    ).select("vec_id", "v", "nrm", F.col("_m.cid").alias("cid"))
     probe = (
         c.crossJoin(F.broadcast(q))
         .orderBy(
-            F.round(cos(F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm")), 6).desc(),
+            F.round(_cosine(F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm")), 6).desc(),
             F.col("cid"),
         )
         .limit(NPROBE)
@@ -282,7 +297,7 @@ def vec_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "vec_id",
-            F.round(cos(F.col("v"), F.col("qv"), F.col("nrm"), F.col("qnrm")), 6).alias("cos_sim"),
+            F.round(_cosine(F.col("v"), F.col("qv"), F.col("nrm"), F.col("qnrm")), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
@@ -394,80 +409,6 @@ def vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _argmin_cell(joined: DataFrame, key, carry: list[str]) -> DataFrame:
-    """Per-vec_id argmin over a broadcast-crossJoin candidate set via
-    map-side-combined min(struct(key, cid)) — the scale-safe form of
-    crossJoin -> row_number(partitionBy vec_id): the window form shuffles
-    every JOINED row (N x K of them) into hashpartitioning(vec_id) — at
-    sf100 the SemDeDup seam's 15.6B-row window exchange filled shuffle
-    disk without completing, and even the K=8 IVF assign moved 3.1 GB of
-    shuffle per pass — while the agg form partial-aggregates each map
-    partition down to one row per vec_id before any exchange (assignment
-    becomes map-only + an N-row exchange). `key` must order ASCENDING
-    (negate a similarity as 0.0 - sim: exact for every nonzero double and
-    never emits -0.0, so rounded-cos ties resolve identically); `carry`
-    columns must be functionally dependent on vec_id (first() is then
-    deterministic). Tie-break: struct comparison is lexicographic, so
-    equal keys resolve to the lowest cid — exactly the window's
-    (key asc, cid asc) rule. Winner key is `_m.k`, winner id `_m.cid`.
-
-    NULL-key contract: struct min sorts a NULL key FIRST (it wins), which
-    matches a window ordered `key.asc()` (Spark asc = nulls first). This
-    is the reserved form for DataFrame-valued candidate sets (codebooks
-    too large or too dynamic to collect); every current production d2
-    site uses the collected-codebook forms (_argmin_lit for constant-K
-    trained codebooks, the Arrow matmul for N-scaled ones), so today only
-    the null-key contract test exercises this seam. A key derived from a
-    DESC ordering (negated similarity: desc = nulls LAST, null loses)
-    must coalesce nulls to +infinity at the call site, or a null
-    similarity (zero-norm vector) flips from losing to winning."""
-    aggs = [F.min(F.struct(key.alias("k"), F.col("cid").alias("cid"))).alias("_m")]
-    aggs += [F.first(col).alias(col) for col in carry]
-    return joined.groupBy("vec_id").agg(*aggs)
-
-
-def _argmin_lit(cents_rows, key_fn):
-    """Per-row argmin against a COLLECTED centroid set, as one
-    least(struct(key, cid)) expression — assignment with ZERO join and
-    ZERO shuffle (the whole argmin runs inside the scan's codegen).
-    The collect is bounded by the same codebook<<corpus invariant as the
-    SemDeDup matmul (here K<=16 rows). Tie-break identical to
-    _argmin_cell: least() on structs is lexicographic, so equal keys
-    resolve to the lowest cid. Use for CONSTANT-K trained codebooks
-    (Lloyd loops already pull a driver scalar per round, so the K-row
-    collect adds no new synchronization); _argmin_cell remains the form
-    for DataFrame-valued candidate sets. `cents_rows` =
-    [(cid, [float], *extras)] — extras (e.g. a precomputed centroid norm)
-    are passed through to `key_fn(cv_floats, *extras) -> ascending
-    ordering Column`, where `cv_floats` is the PYTHON list of centroid
-    floats (r11: was a literal array Column — the list lets key_fns
-    unroll codegen arithmetic via the list paths of _d2_lit/_dot instead
-    of interpreted zip_with/aggregate; a key_fn that needs the Column
-    form builds `F.array(*map(F.lit, cv_floats))` itself). A
-    DESC-derived key must coalesce nulls to +inf, same contract as
-    _argmin_cell.
-
-    Raises ValueError on an empty candidate list (e.g. an empty
-    embeddings table collected to zero codebook rows) instead of the
-    bare IndexError the `cands[0]` fallback would throw — callers that
-    can legitimately see an empty corpus short-circuit to an empty
-    result BEFORE collecting (the dedup_semantic_clusters pattern)."""
-    if not cents_rows:
-        raise ValueError(
-            "_argmin_lit: empty candidate set — the input table produced "
-            "zero codebook rows; short-circuit to an empty result before "
-            "assignment (see dedup_semantic_clusters's empty-corpus guard)"
-        )
-    cands = [
-        F.struct(
-            key_fn([float(x) for x in cv], *extras).alias("k"),
-            F.lit(int(cid)).cast("long").alias("cid"),
-        )
-        for cid, cv, *extras in cents_rows
-    ]
-    return F.least(*cands) if len(cands) > 1 else cands[0]
-
-
 def _py_d2(a, b):
     """Driver-side squared euclidean distance with the SAME left-fold
     accumulation order as the in-plan zip_with/aggregate form
@@ -487,13 +428,12 @@ def _argmin_arrow(df, arms, carry):
     Output = the `carry` columns plus ``_cid{j}`` (long) / ``_d2{j}``
     (double) per arm.
 
-    Bit-exact contract with _d2_lit/_argmin_lit: distances use the
-    identical left-fold accumulation — acc starts at 0.0 and adds
-    (x-c)^2 one DIMENSION at a time (vectorized across rows, looped over
-    dims), so each row's fold order matches the expression form exactly —
-    and ties resolve to the LOWEST cid (candidates are scored in
-    ascending-cid order; np.argmin returns the first minimum — the
-    least(struct(d2, cid)) rule).
+    Bit-exact contract with the zip_with/aggregate fold (and _py_d2):
+    acc starts at 0.0 and adds (x-c)^2 one DIMENSION at a time
+    (vectorized across rows, looped over dims), so each row's fold order
+    matches the expression form exactly — and ties resolve to the LOWEST
+    cid (candidates are scored in ascending-cid order; np.argmin returns
+    the first minimum).
 
     Why not the expression forms (r11, measured at sf100vec): a K x dim
     unrolled argmin puts a single giant expression into the fused
@@ -557,41 +497,11 @@ def _argmin_arrow(df, arms, carry):
     return df.select(*need).mapInArrow(assign, out_ddl)
 
 
-def _d2_lit(cv, vcol=None, voff=0):
-    """Squared euclidean distance of a vector column (default col v) to a
-    literal centroid. With a PYTHON-LIST `cv` of <= _UNROLL_MAX_DIM
-    elements the fold is unrolled as flat codegen arithmetic with the
-    identical accumulation order (``lit(0.0) + t0 + t1 + ...``,
-    t_i = (v[voff+i]-c_i)^2 — see _dot's r11 note); `voff` indexes a
-    subspace of the base array directly (replacing a per-candidate
-    `slice()` copy). Longer lists and COLUMN `cv` keep the original
-    zip_with/aggregate form: unrolling a K=8 x 64-dim argmin produced a
-    single fused doConsume past Janino's 64KB method limit ("Failed to
-    compile the generated Java code", ~13 s per failed attempt, then
-    interpreted fallback — measured net-slower than the HOF form)."""
-    v = vcol if vcol is not None else F.col("v")
-    if isinstance(cv, (list, tuple)) and len(cv) <= _UNROLL_MAX_DIM:
-        acc = F.lit(0.0)
-        for i, c in enumerate(cv):
-            d = v[voff + i] - F.lit(float(c))
-            acc = acc + d * d
-        return acc
-    if isinstance(cv, (list, tuple)):
-        if voff:
-            v = F.slice(v, voff + 1, len(cv))
-        cv = F.array(*[F.lit(float(x)) for x in cv])
-    return F.aggregate(
-        F.zip_with(v, cv, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _kmeans_centroids(e: DataFrame, k: int = 8, iters: int = 3):
     """Lloyd's k-means expressed in DataFrame ops — the iterative-algorithm
     pattern (like connected components): assign by squared euclidean
-    argmin against the LITERAL codebook (zero join/shuffle, see
-    _argmin_lit), recompute per-dimension means as `dim` flat avg
+    argmin against the collected codebook (zero join/shuffle, see
+    _argmin_arrow), recompute per-dimension means as `dim` flat avg
     aggregates, localCheckpoint each round to truncate lineage.
     Deterministic: init = the K lowest-vec_id vectors, argmin ties break
     on cid. Returns (centroids, [inertia per iteration]); with mean
@@ -620,10 +530,9 @@ def _kmeans_centroids(e: DataFrame, k: int = 8, iters: int = 3):
                 "short-circuit to an empty result before training"
             )
         dim = len(rows[0][1])
-        # r11: Arrow-batched numpy assignment (see _argmin_arrow — the
-        # K x dim expression forms either fail codegen compile or run
-        # interpreted row-at-a-time); fold order and cid tie-break are
-        # bit-identical to the old _argmin_lit(rows, _d2_lit) column.
+        # Arrow-batched numpy assignment (see _argmin_arrow — the K x dim
+        # expression forms either fail codegen compile or run interpreted
+        # row-at-a-time).
         assigned = _argmin_arrow(e, [(0, rows)], carry=["vec_id", "v"]).select(
             "vec_id", "v", F.col("_d20").alias("_d2"), F.col("_cid0").alias("cid")
         )
@@ -685,8 +594,7 @@ def vec_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = [float(x) for x in qrow[0]["v"]]
     qnrm = float(qrow[0]["nrm"])
     # trained codebook is K=8 rows — zero-shuffle Arrow-batched
-    # assignment (r11: see _argmin_arrow; bit-identical fold order and
-    # cid tie-break to the old literal-expression column)
+    # assignment (see _argmin_arrow)
     crows = [(r["cid"], list(r["cv"])) for r in cents.collect()]
     cell = _argmin_arrow(e, [(0, crows)], carry=["vec_id", "v", "nrm"]).select(
         "vec_id", "v", "nrm", F.col("_cid0").alias("cid")
@@ -1178,30 +1086,10 @@ def vec_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", _as_double("embedding").alias("v"))
         .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
     )
-    c = e.orderBy("vec_id").limit(K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-    )
+    c, cell = _seed_cells(e, K)
     q = e.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
-
-    def cos(a, b, anrm, bnrm):
-        return _dot(a, b) / (anrm * bnrm)
-
-    # deterministic 8-seed quantizer — literal zero-shuffle assignment
-    # (coalesce: old window = cos DESC, nulls LAST; see helper docstring)
-    crows = [(r["cid"], list(r["cv"]), float(r["cnrm"])) for r in c.collect()]
-    cell = e.withColumn(
-        "_m",
-        _argmin_lit(
-            crows,
-            lambda cvl, cn: F.coalesce(
-                F.lit(0.0)
-                - F.round(cos(F.col("v"), cvl, F.col("nrm"), F.lit(cn)), 6),
-                F.lit(float("inf")),
-            ),
-        ),
-    ).select("vec_id", "v", "nrm", F.col("_m.cid").alias("cid"))
     pr = (
         c.crossJoin(F.broadcast(q))
         .select(
@@ -1210,7 +1098,7 @@ def vec_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .over(
                 W.orderBy(
                     F.round(
-                        cos(F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm")), 6
+                        _cosine(F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm")), 6
                     ).desc(),
                     F.col("cid"),
                 )
@@ -1223,7 +1111,7 @@ def vec_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "vec_id",
-            F.round(cos(F.col("v"), F.col("qv"), F.col("nrm"), F.col("qnrm")), 6).alias("s"),
+            F.round(_cosine(F.col("v"), F.col("qv"), F.col("nrm"), F.col("qnrm")), 6).alias("s"),
         )
         .orderBy(F.col("s").desc(), "vec_id")
         .limit(TOPK)
@@ -1238,7 +1126,7 @@ def vec_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "nprobe",
             "vec_id",
-            F.round(cos(F.col("v"), F.col("qv"), F.col("nrm"), F.col("qnrm")), 6).alias("sim"),
+            F.round(_cosine(F.col("v"), F.col("qv"), F.col("nrm"), F.col("qnrm")), 6).alias("sim"),
         )
     )
     ranked = cand.withColumn(

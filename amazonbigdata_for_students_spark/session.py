@@ -43,12 +43,8 @@ def get_spark(
     # instead of 1 GB/task states that spill (measured: the r11 graph spine
     # recorded 19.4 GB disk / 133 GB memory spill on jaccard's wedge
     # aggregate at width 32). On a cluster the same rule holds with cpus =
-    # total cores; the env override is for spill-regime experiments.
-    try:
-        env_init = int(os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "0"))
-    except ValueError:
-        env_init = 0
-    initial_partitions = env_init if env_init > 0 else max(shuffle_partitions, cpus * 8)
+    # total cores.
+    initial_partitions = max(shuffle_partitions, cpus * 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -71,10 +67,7 @@ def get_spark(
         # scale) convert to broadcast at runtime, and at 100 TB the same
         # sides exceed the cap and the plans degrade to SMJ instead of
         # OOMing. The STATIC threshold stays at the 10 MB default.
-        .config(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_ADAPTIVE_BROADCAST", "64m"),
-        )
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         # Arrow transfer for pandas UDFs / toPandas (vectorized exchange).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic cross-engine comparison (DuckDB oracle is UTC-naive).

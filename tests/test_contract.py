@@ -247,3 +247,31 @@ def test_plans_md_in_sync_with_showcase():
         f"only-in-showcase={sorted(set(mod.SHOWCASE) - sections)} — "
         "run: python scripts/gen_plans.py > PLANS.md"
     )
+
+
+# Every SPARK_GRAFT_* environment option the package reads. CPUS,
+# DRIVER_MEM and SHUFFLE_PARTITIONS are set by the benchmark and the
+# spine scripts; the AUDIT pair by tests and scripts/vec_spine_bench.py.
+# A new option must be added here on purpose, with a caller that sets it.
+_ALLOWED_ENV_OPTIONS = frozenset(
+    {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_AUDIT_UNFENCED",
+        "SPARK_GRAFT_AUDIT_MAX_ROWS",
+    }
+)
+
+
+def test_package_env_options_are_fenced():
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(entrymod.__file__).parent / "amazonbigdata_for_students_spark"
+    found = {
+        name
+        for path in pkg.rglob("*.py")
+        for name in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", path.read_text())
+    }
+    assert found == _ALLOWED_ENV_OPTIONS

@@ -3819,36 +3819,46 @@ def test_quadratic_audit_fence_trips_and_overrides(spark, sf_small, monkeypatch)
     assert dedup_embedding_cosine(spark, sf_small).count() > 0
 
 
-def test_argmin_lit_empty_candidates_raises():
+def test_seed_quantizer_empty_input_raises(spark):
     """r10 advice regression: an empty embeddings table used to surface
-    as a bare IndexError from cands[0]; now a clear ValueError names the
-    short-circuit pattern callers should use."""
-    import pytest as _pt
+    as a bare IndexError from the argmin's first candidate; the IVF seed
+    quantizer raises a clear ValueError naming the short-circuit pattern
+    callers should use."""
+    from amazonbigdata_for_students_spark.plans.vectors import _seed_cells
 
-    from amazonbigdata_for_students_spark.plans.vectors import _argmin_lit
+    e = spark.createDataFrame([], "vec_id long, v array<double>, nrm double")
+    with pytest.raises(ValueError, match="empty input"):
+        _seed_cells(e, 8)
 
-    with _pt.raises(ValueError, match="empty candidate set"):
-        _argmin_lit([], lambda cv: cv)
 
+def test_seed_quantizer_zero_norm_seed_never_wins(spark):
+    """r10 review regression: the IVF seed quantizer ranks seeds by
+    round(cos) DESC NULLS LAST, the oracle's window order. In a non-ANSI
+    session a zero-norm seed's cosine is NULL for every vector and must
+    LOSE, although a NULL key sorts first in the struct argmin — the
+    +inf coalesce inside the quantizer is what keeps it losing. An ANSI
+    session fails loudly on the zero division instead."""
+    from amazonbigdata_for_students_spark.plans.vectors import _dot, _seed_cells
 
-def test_argmin_null_similarity_loses(spark):
-    """r10 review regression: the cos-DESC argmin sites must keep a NULL
-    similarity LOSING (the old window's desc-nulls-last), not winning
-    struct-min's nulls-first order. A zero-norm centroid yields a null
-    cosine for every vector; with the call-site coalesce(+inf) the
-    winner must be the best real-cosine centroid."""
-    from pyspark.sql import functions as F
-
-    from amazonbigdata_for_students_spark.plans.vectors import _argmin_cell
-
-    # one vector against three "centroids": cid 10 has null cos
-    joined = spark.createDataFrame(
-        [(1, 10, None), (1, 11, 0.5), (1, 12, 0.9)],
-        "vec_id long, cid long, cos double",
-    )
-    key = F.coalesce(F.lit(0.0) - F.col("cos"), F.lit(float("inf")))
-    winner = _argmin_cell(joined, key, []).select("_m.cid").collect()[0][0]
-    assert winner == 12
-    # and WITHOUT the coalesce the null would win — the documented trap
-    bare = _argmin_cell(joined, F.lit(0.0) - F.col("cos"), [])
-    assert bare.select("_m.cid").collect()[0][0] == 10
+    # vec 1 is the zero vector, and the lowest id, so it is seed cid 1:
+    # the tie-break would hand it every NULL-keyed row
+    e = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0]),
+         (4, [1.0, 0.2]), (5, [0.1, 1.0])],
+        "vec_id long, v array<double>",
+    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        _, cell = _seed_cells(e, 3)
+        got = dict(cell.select("vec_id", "cid").collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    # the zero vector itself has only +inf keys, so the lowest cid keeps it
+    assert got == {1: 1, 2: 2, 3: 3, 4: 2, 5: 3}
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            _seed_cells(e, 3)[1].collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -1380,13 +1380,13 @@ def test_v7_final_plan_runs_on_narrow_checkpoint_not_text(spark, sf_small):
 
 
 def test_vector_assign_stages_have_no_pervec_window(spark, sf_small):
-    """The r10 vector-lane scale fix's contract (_argmin_cell +
-    SemDeDup's Arrow matmul assignment): no assignment stage may shuffle
-    the N x K crossJoin output through a per-vector window — at sf100
-    the SemDeDup seam's window exchange was ~15 TB and never completed.
-    The executed plans must contain NO window over vec_id anywhere (the
-    argmin is a partial-aggregated min(struct); windows keyed on other
-    columns — nprobe ranking etc. — stay legal)."""
+    """The r10 vector-lane scale fix's contract: no assignment stage may
+    shuffle the N x K crossJoin output through a per-vector window — at
+    sf100 the SemDeDup seam's window exchange was ~15 TB and never
+    completed. Every argmin runs inside the scan (_seed_cells'
+    least(struct), _argmin_arrow, SemDeDup's Arrow matmul), so the
+    executed plans must contain NO window over vec_id anywhere (windows
+    keyed on other columns — nprobe ranking etc. — stay legal)."""
     for name in (
         "vec_ann_ivf_topk",
         "vec_ann_ivf_kmeans_topk",
@@ -1408,6 +1408,7 @@ def test_kmeans_recompute_has_no_explode(spark, sf_small):
     iteration (128M exchange rows per round at sf100). Pin: the trained
     centroids' plan contains no Generate (explode) and no collect_list."""
     from amazonbigdata_for_students_spark.plans.vectors import (
+        _argmin_arrow,
         _as_double,
         _kmeans_centroids,
     )
@@ -1419,16 +1420,9 @@ def test_kmeans_recompute_has_no_explode(spark, sf_small):
     assert len(inertia) == 2 and inertia[1] <= inertia[0] * (1 + 1e-9)
     # the loop localCheckpoints each round; assert on the UPDATE shape
     # itself (one un-checkpointed recompute over the assigned frame)
-    from pyspark.sql import functions as F
-
-    from amazonbigdata_for_students_spark.plans.vectors import (
-        _argmin_lit,
-        _d2_lit,
-    )
-
     rows = [(r["cid"], list(r["cv"])) for r in cents.collect()]
-    assigned = e.withColumn("_m", _argmin_lit(rows, _d2_lit)).select(
-        "vec_id", "v", F.col("_m.cid").alias("cid")
+    assigned = _argmin_arrow(e, [(0, rows)], carry=["vec_id", "v"]).select(
+        "vec_id", "v", F.col("_cid0").alias("cid")
     )
     dim = len(rows[0][1])
     upd = assigned.groupBy("cid").agg(
