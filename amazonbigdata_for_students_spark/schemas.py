@@ -2,8 +2,10 @@
 
 Two families:
   * TESTDATA_SCHEMAS — the driver-generated TPC-H-ish star schema +
-    events/documents/embeddings (TESTDATA.md / FIXTURES.md §B). Explicit
-    schemas keep production read paths inference-free.
+    events/documents/embeddings (TESTDATA.md / FIXTURES.md §B): the table
+    names and the declared contract. Parquet reads of these tables take
+    the schema Spark inferred from the file itself — inferred once per
+    file version, then passed explicitly (sources.readers.table_schema).
   * Reference-domain schemas — transcribed from the reference workload
     generator (reference: log-generator/generator.py:167-193 for view/review
     events, :71-84 for users/items); used by the fixture generator and the

@@ -18,6 +18,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 48g: in local mode the driver JVM is
+    the whole engine, and the other half stays for Python workers, the
+    page cache and the OS. SPARK_GRAFT_DRIVER_MEM overrides it."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(48, ram_gb // 2))}g"
+
+
 def get_spark(
     app_name: str = "amazonbigdata_for_students_spark",
     cpus: int | None = None,
@@ -73,7 +81,10 @@ def get_spark(
         # Deterministic cross-engine comparison (DuckDB oracle is UTC-naive).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -556,17 +556,9 @@ class CommitLog:
                     skipped += 1
                     continue
             kept.append((v, t))
-        parts = [
-            spark.read.parquet(os.path.join(self._data_dir, token)).withColumn(
-                "_commit_version", F.lit(v)
-            )
-            for v, token in kept
-        ]
-        if not parts:
+        out = self._read_tokens(spark, kept)
+        if out is None:
             return None, skipped
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
         return out.filter(F.col(col) == F.lit(value)), skipped
 
     def live_tokens_pruned(
@@ -812,21 +804,23 @@ class CommitLog:
         tagged with its commit version as ``_commit_version``. Time travel
         is free: an old snapshot is just the manifest prefix <= as_of.
         None for an empty table."""
-        parts = [
-            spark.read.parquet(os.path.join(self._data_dir, token)).withColumn(
+        return self._read_tokens(spark, self.live_tokens(as_of))
+
+    def _read_tokens(self, spark: SparkSession, pairs) -> DataFrame | None:
+        """One parquet read per (version, token) pair, each row tagged with
+        its ``_commit_version``, unioned by name; None for no pairs.
+        allowMissingColumns = schema evolution on read: a commit that added
+        a column null-fills it for other commits' rows instead of failing
+        the snapshot — the mergeSchema semantic applied at the log layer.
+        Per-token reads (not one multi-path scan) also keep type widening
+        across generations: the union widens int→bigint, where a merged
+        scan raises CANNOT_MERGE_SCHEMAS."""
+        out = None
+        for v, token in pairs:
+            part = spark.read.parquet(os.path.join(self._data_dir, token)).withColumn(
                 "_commit_version", F.lit(v)
             )
-            for v, token in self.live_tokens(as_of)
-        ]
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            # allowMissingColumns = schema evolution on read: a commit
-            # that added a column null-fills it for other commits' rows
-            # instead of failing the snapshot — the mergeSchema semantic
-            # applied at the log layer.
-            out = out.unionByName(p, allowMissingColumns=True)
+            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
         return out
 
     def read_pruned(
@@ -837,22 +831,7 @@ class CommitLog:
         still applies the exact predicate, stats only prove non-overlap —
         and the number of files skipped)."""
         kept, skipped = self.live_tokens_pruned(col, lo, hi, as_of)
-        parts = [
-            spark.read.parquet(os.path.join(self._data_dir, token)).withColumn(
-                "_commit_version", F.lit(v)
-            )
-            for v, token in kept
-        ]
-        if not parts:
-            return None, skipped
-        out = parts[0]
-        for p in parts[1:]:
-            # allowMissingColumns = schema evolution on read: a commit
-            # that added a column null-fills it for other commits' rows
-            # instead of failing the snapshot — the mergeSchema semantic
-            # applied at the log layer.
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out, skipped
+        return self._read_tokens(spark, kept), skipped
 
     def read_changes(
         self, spark: SparkSession, since: int, until: int | None = None
@@ -862,28 +841,17 @@ class CommitLog:
         (the S9 bookmark pattern, with the commit version as the bookmark).
         Remove-actions are metadata-only (compaction), so adds are the
         complete change stream for an upsert table."""
-        parts = []
         # replay only (since, head] — CDC below a pruned horizon raises
         # ManifestsPruned instead of silently emitting a partial stream
-        for v, m in self.snapshot(after=since):
-            if until is not None and v > until:
-                continue
-            for token in m.get("adds", ()):
-                parts.append(
-                    spark.read.parquet(
-                        os.path.join(self._data_dir, token)
-                    ).withColumn("_commit_version", F.lit(v))
-                )
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            # allowMissingColumns = schema evolution on read: a commit
-            # that added a column null-fills it for other commits' rows
-            # instead of failing the snapshot — the mergeSchema semantic
-            # applied at the log layer.
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return self._read_tokens(
+            spark,
+            [
+                (v, token)
+                for v, m in self.snapshot(after=since)
+                if until is None or v <= until
+                for token in m.get("adds", ())
+            ],
+        )
 
     def clone_into(self, dst_path: str) -> "CommitLog":
         """SHALLOW CLONE (Delta CLONE semantics): a new table whose single

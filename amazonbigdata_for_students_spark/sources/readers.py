@@ -7,22 +7,28 @@ filters/projections declaratively (verified by plan-shape tests).
 The hourly-CSV batch source (S1) and JSONL stream-landing source (S2/S3)
 mirror the reference's layouts: one CSV per hour under ``YYYY/MM/DD/HH.csv``
 with header (reference: log-generator/generator.py:227-245) and JSON lines
-with sorted keys (generator.py:158). Reads take explicit schemas; inference
-exists only as the crawler analogue (S10) feeding schema-drift logging.
+with sorted keys (generator.py:158). CSV and JSONL reads take the declared
+schemas. An input parquet table's schema is inferred once per file
+version (``table_schema``) and then passed explicitly to every read — the
+Glue-catalog analogue of the reference, where the crawler stores the schema
+once and every Athena query reads with it (glue_cf_template.json:82-103).
+The other inference is the crawler analogue (S10) feeding schema-drift
+logging.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .. import schemas
 
 # Tables whose parquet footer stores INT64 TIMESTAMP(NANOS,...), which Spark's
 # parquet reader rejects. We read nanos as long (legacy conf, set in
-# session.configure_runtime) and rebuild a microsecond timestamp. Integer
-# `div` keeps full precision — float division loses it above 2^53 ns.
+# session.configure_runtime and table_schema) and rebuild a microsecond
+# timestamp. Integer `div` keeps full precision — float division loses it
+# above 2^53 ns.
 _NANOS_TS_TABLES = {"events": ["ts"]}
 
 
@@ -39,17 +45,46 @@ def sf_suffix(sf_dir: str) -> str:
     )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated parquet table with its schema contract."""
+# path -> ((st_mtime_ns, st_ino), inferred StructType). The version check
+# re-infers a file rewritten in place and a directory Spark overwrote (new
+# mtime or inode); one entry per path keeps the dict bounded. The stat comes
+# before the inference, so a rewrite racing it (or a racing thread storing
+# an older entry) only costs one more inference on the next call.
+_SCHEMAS: dict[str, tuple[tuple[int, int], T.StructType]] = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The parquet schema of table ``name``: inferred by Spark on the first
+    read of each file version (a one-task footer job), then served from this
+    process's memory, so a query's reads plan without a job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Naive parquet timestamps read as TIMESTAMP (LTZ) under the pinned-UTC
     # session — see session.configure_runtime for the full rationale.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for ts_col in _NANOS_TS_TABLES.get(name, []):
-        if dict(df.dtypes).get(ts_col) == "bigint":
-            df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    version = (st.st_mtime_ns, st.st_ino)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != version:
+        hit = _SCHEMAS[path] = (version, spark.read.parquet(path).schema)
+    return hit[1]
+
+
+def rebuild_nanos_ts(df: DataFrame, name: str, schema: T.StructType) -> DataFrame:
+    """Turn the nanos-as-long columns of table ``name`` (its stored
+    ``schema`` says bigint) back into microsecond timestamps."""
+    types = {f.name: f.dataType for f in schema}
+    for c in _NANOS_TS_TABLES.get(name, []):
+        if isinstance(types.get(c), T.LongType):
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one input parquet table with its stored schema."""
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return rebuild_nanos_ts(df, name, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
@@ -119,8 +154,6 @@ def read_jsonl_tolerant(spark: SparkSession, path: str, schema) -> DataFrame:
     disallows queries that reference ONLY the corrupt column straight off
     the raw scan — `.cache()` (or persist to the silver layer first) before
     corrupt-only filters."""
-    from pyspark.sql import types as T
-
     with_corrupt = T.StructType(
         list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )

@@ -25,17 +25,6 @@ from ..plans.relational import (
 
 _COUNTER = itertools.count()
 
-_EVENTS_RAW = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # INT64 TIMESTAMP(NANOS) as long
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
 
 def _final_snapshot(
     res: DataFrame, key: str = "user_id", order_col: str = "n_events"
@@ -56,41 +45,31 @@ def events_stream(
 ) -> DataFrame:
     """S2 — the events table as a parquet file stream, converted exactly like
     the batch loader. Handles every layout the driver has shipped:
-    events.parquet as a directory of Spark part files, as a single file with
-    INT64 TIMESTAMP(NANOS) ts (read as long + rebuilt), or as a single file
-    with plain micros ts (read with the declared schema). The physical type
-    is probed from the parquet footer via a batch read — metadata only."""
+    events.parquet as a directory of Spark part files, or as a single file
+    whose ts is INT64 TIMESTAMP(NANOS) (read as long + rebuilt) or plain
+    micros. A single file streams with the batch loader's stored schema
+    (``readers.table_schema``): one inference per file version serves both."""
     import os
 
     from .. import schemas
+    from ..sources import readers
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(path):
         # Spark-written table: ts is already a proper (micros) timestamp.
-        # max_files_per_trigger forces one micro-batch per part file (the
-        # cross-batch state-carry tests); availableNow otherwise drains in
-        # a single batch.
-        reader = spark.readStream.schema(schemas.EVENTS)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.parquet(path)
-    if dict(spark.read.parquet(path).dtypes).get("ts") == "bigint":
-        raw = spark.readStream.schema(_EVENTS_RAW).option(
+        schema, src = schemas.EVENTS, path
+        reader = spark.readStream.schema(schema)
+    else:
+        schema, src = readers.table_schema(spark, sf_dir, "events"), sf_dir
+        reader = spark.readStream.schema(schema).option(
             "pathGlobFilter", "events.parquet"
         )
-        if max_files_per_trigger:
-            raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-        return raw.parquet(sf_dir).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    reader = spark.readStream.schema(schemas.EVENTS).option(
-        "pathGlobFilter", "events.parquet"
-    )
+    # max_files_per_trigger forces one micro-batch per part file (the
+    # cross-batch state-carry tests); availableNow otherwise drains in a
+    # single batch.
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(sf_dir)
+    return readers.rebuild_nanos_ts(reader.parquet(src), "events", schema)
 
 
 def _drain(

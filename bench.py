@@ -3,9 +3,11 @@
 
 Runs every registry entry marked bench=True at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is
-fully executed via a count-collect (``df.count()`` after a no-op cache-free
-plan) so the measured time covers scan → shuffle → result, not plan
-construction.
+fully materialised into Spark's ``noop`` sink, which computes every output
+column, so the measured time covers scan → shuffle → result, not plan
+construction. A ``df.count()`` lets Catalyst prune the work behind it (q1
+drops all eight decimal aggregates); this round also reports the count()
+total as ``count_total_sec`` beside the noop ``value``.
 """
 
 from __future__ import annotations
@@ -19,6 +21,29 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from amazonbigdata_for_students_spark.plans import REGISTRY
 from amazonbigdata_for_students_spark.session import get_spark
+
+
+def materialise(df) -> None:
+    """Execute ``df`` to its full result and discard it: the timing sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _best_of(run, n: int, best: float = float("inf")) -> float:
+    for _ in range(n):
+        t0 = time.time()
+        run()
+        best = min(best, time.time() - t0)
+    return best
+
+
+def _host_facts() -> dict:
+    import pyspark
+
+    return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "ram_gb": round(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1),
+        "spark": pyspark.__version__,
+    }
 
 
 def _assert_idle(max_wait: float = 480.0) -> tuple[float, float, bool]:
@@ -81,7 +106,7 @@ def main() -> None:
     # Full untimed warmup pass: JIT, parquet footers, and page cache all
     # settle so the timed pass measures the queries, not JVM warmup order.
     for q in bench.values():
-        q.fn(spark, sf_dir).count()
+        materialise(q.fn(spark, sf_dir))
 
     # Min of three timed runs per query: the min is the right estimator for
     # "how fast does this plan run" — it sheds GC pauses and co-located
@@ -89,15 +114,16 @@ def main() -> None:
     # runs take min over TWO full suite passes (VERDICT r9 item 3): a load
     # transient that straddles one pass cannot inflate the committed JSON.
     times: dict[str, float] = {}
+    count_times: dict[str, float] = {}
     suite_passes = 2 if isolated else 1
     for _ in range(suite_passes):
         for name, q in bench.items():
-            best = times.get(name, float("inf"))
-            for _ in range(3):
-                t0 = time.time()
-                q.fn(spark, sf_dir).count()
-                best = min(best, time.time() - t0)
-            times[name] = best
+            times[name] = _best_of(
+                lambda: materialise(q.fn(spark, sf_dir)), 3, times.get(name, float("inf"))
+            )
+            count_times[name] = _best_of(
+                lambda: q.fn(spark, sf_dir).count(), 3, count_times.get(name, float("inf"))
+            )
     times = {n: round(t, 3) for n, t in times.items()}
 
     total = round(sum(times.values()), 3)
@@ -106,7 +132,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": times,
+        "count_total_sec": round(sum(count_times.values()), 3),
         "sf": sf,
+        "host": _host_facts(),
     }
     if idle_info is not None:
         result["isolated"] = idle_info
@@ -128,15 +156,11 @@ def main() -> None:
         dst = f"/tmp/scale_{os.path.basename(os.path.normpath(sf_dir))}_x{scale_n}"
         sc.build_replica(spark, sf_dir, dst, scale_n)
         for q in bench.values():
-            q.fn(spark, dst).count()  # warm
-        scale_times: dict[str, float] = {}
-        for name, q in bench.items():
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                q.fn(spark, dst).count()
-                best = min(best, time.time() - t0)
-            scale_times[name] = round(best, 3)
+            materialise(q.fn(spark, dst))  # warm
+        scale_times = {
+            name: round(_best_of(lambda: materialise(q.fn(spark, dst)), 2), 3)
+            for name, q in bench.items()
+        }
         result[f"scale_x{scale_n}"] = {
             "total_sec": round(sum(scale_times.values()), 3),
             "queries": scale_times,

@@ -39,6 +39,24 @@ def test_commit_then_snapshot_read(spark, tmp_path):
     assert got == {1: 10, 2: 21, 3: 30}  # later commit wins per key
 
 
+def test_reads_widen_and_null_fill_across_generations(spark, tmp_path):
+    """Every read path unions one read per token by name: a later commit
+    that widened v from int to bigint and added a column reads back as one
+    bigint column, with the new column null for the older rows."""
+    log = CommitLog(str(tmp_path / "t"))
+    log.commit([_stage_rows(spark, log, [(1, 10)], schema="user_id bigint, v int")])
+    log.commit(
+        [_stage_rows(spark, log, [(2, 2**40, "x")], schema="user_id bigint, v bigint, w string")]
+    )
+    want = {(1, 10, None, 0), (2, 2**40, "x", 1)}
+    point, _ = log.read_point(spark, "user_id", 2)
+    pruned, _ = log.read_pruned(spark, "user_id", 0, 9)
+    for df in (log.read(spark), log.read_changes(spark, -1), pruned):
+        assert dict(df.dtypes)["v"] == "bigint"
+        assert {tuple(r) for r in df.select("user_id", "v", "w", "_commit_version").collect()} == want
+    assert [tuple(r) for r in point.select("v", "w").collect()] == [(2**40, "x")]
+
+
 def test_staged_data_invisible_until_commit(spark, tmp_path):
     log = CommitLog(str(tmp_path / "t"))
     _stage_rows(spark, log, [(1, 1)])  # staged, never committed

@@ -34,6 +34,25 @@ def test_q1_column_pruning(spark, sf_small):
     assert "l_quantity" in read_schema
 
 
+def _last_executed_plan(spark) -> str:
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    return store.executionsList(n - 1, 1).head().physicalPlanDescription()
+
+
+def test_bench_timed_q1_keeps_its_aggregates(spark, sf_small):
+    """bench.py times q1 through its noop sink, whose executed plan still
+    computes every sum; a count() over the same DataFrame prunes them all."""
+    import bench
+
+    df = REGISTRY["q1_pricing_summary"].fn(spark, sf_small)
+    bench.materialise(df)
+    timed = _last_executed_plan(spark)
+    assert "partial_sum(" in timed and "l_tax" in timed  # sum_charge kept
+    df.count()
+    assert "sum(" not in _last_executed_plan(spark)
+
+
 def test_projection_prunes_scan(spark, sf_small):
     df = REGISTRY["projection_rename"].fn(spark, sf_small)
     read_schema = plan_of(df).split("ReadSchema: ")[1].split("\n")[0]

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Row
+from pyspark.sql import Row, functions as F
 
 from amazonbigdata_for_students_spark import schemas
 from amazonbigdata_for_students_spark.sources.readers import (
@@ -249,3 +249,80 @@ def test_python_stream_reader_offsets_and_replay(spark, sf_small):
         spark.read.format("hourly_csv").option("path", d).load().count()
     )
     assert len(seen) == n_batch_rows
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once(spark, sf_small, tmp_path):
+    """The footer-inference job runs on the first load of a file version
+    only; a repeat load plans from the stored schema with no job."""
+    import shutil
+
+    from amazonbigdata_for_students_spark.sources.readers import load_table
+
+    shutil.copy(os.path.join(sf_small, "customer.parquet"), tmp_path)
+    d = str(tmp_path)
+    first = _jobs_in_group(spark, "schema_first", lambda: load_table(spark, d, "customer"))
+    repeat = _jobs_in_group(spark, "schema_repeat", lambda: load_table(spark, d, "customer"))
+    assert first >= 1 and repeat == 0
+
+
+def test_load_table_sees_rewritten_file(spark, sf_small, tmp_path):
+    """A file rewritten in place is a new version: its schema is inferred
+    again, so an added column shows on the next load."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from amazonbigdata_for_students_spark.sources.readers import load_table
+
+    path = str(tmp_path / "customer.parquet")
+    t = pq.read_table(os.path.join(sf_small, "customer.parquet"))
+    pq.write_table(t, path)
+    assert "c_extra" not in load_table(spark, str(tmp_path), "customer").columns
+    pq.write_table(t.append_column("c_extra", pa.array(range(t.num_rows), pa.int64())), path)
+    df = load_table(spark, str(tmp_path), "customer")
+    assert "c_extra" in df.columns
+    assert df.agg({"c_extra": "sum"}).first()[0] == sum(range(t.num_rows))
+
+
+def test_nanos_events_load_as_micros_timestamps(spark, sf_small, tmp_path):
+    """events.parquet written by pyarrow with ts as timestamp[ns] (INT64
+    TIMESTAMP(NANOS)) reads through load_table and events_stream as a
+    microsecond timestamp, on the first read and on a repeat."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import amazonbigdata_for_students_spark.plans  # noqa: F401  registration order
+    from amazonbigdata_for_students_spark.sources.readers import load_table
+    from amazonbigdata_for_students_spark.streaming.batch_twins import (
+        _drain,
+        events_stream,
+    )
+
+    t = pq.read_table(os.path.join(sf_small, "events.parquet"))
+    ts_us = t.column("ts").cast(pa.timestamp("us"))
+    i = t.schema.get_field_index("ts")
+    pq.write_table(
+        t.set_column(i, "ts", ts_us.cast(pa.timestamp("ns"))),
+        str(tmp_path / "events.parquet"),
+    )
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == pa.timestamp("ns")
+    want = sorted(ts_us.cast(pa.int64()).to_pylist())
+    d = str(tmp_path)
+
+    def micros(df) -> list[int]:
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+
+    for _ in range(2):
+        assert micros(load_table(spark, d, "events")) == want
+        stream = events_stream(spark, d).select("event_id", "ts")
+        assert micros(_drain(stream, "nanos_events", mode="append")) == want
