@@ -77,9 +77,7 @@ def _build_three_commits(spark: SparkSession, sf_dir: str, name: str) -> CommitL
             "bal", F.round(F.col("bal") - 50, 2)
         ),
     ):
-        staged = log.stage_dir()
-        delta.write.mode("overwrite").parquet(staged)
-        log.commit([staged], writer=name)
+        log.commit([log.stage(delta)], writer=name)
     return log
 
 
@@ -223,8 +221,7 @@ def acid_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, so at 100 TB its cost is a directory listing, not a scan."""
     log = _build_three_commits(spark, sf_dir, "vacuum")
     # a crashed writer: staged data, no commit
-    orphan = log.stage_dir()
-    _balances(spark, sf_dir).limit(10).write.mode("overwrite").parquet(orphan)
+    log.stage(_balances(spark, sf_dir).limit(10))
     log.compact(spark, ["c_custkey"])  # retires the 3 input deltas
     swept = log.vacuum()
     live_files = len(log.live_tokens())
@@ -281,11 +278,12 @@ def acid_stats_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("1999-01-01", "2002-01-01"),
     ]
     for lo, hi in slices:
-        staged = log.stage_dir()
-        orders.filter(
-            (F.col("o_orderdate") >= F.lit(lo).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(hi).cast("timestamp"))
-        ).write.mode("overwrite").parquet(staged)
+        staged = log.stage(
+            orders.filter(
+                (F.col("o_orderdate") >= F.lit(lo).cast("timestamp"))
+                & (F.col("o_orderdate") < F.lit(hi).cast("timestamp"))
+            )
+        )
         log.commit(
             [staged],
             writer="ingest",
@@ -437,9 +435,7 @@ def src_commitlog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def commit(delta: DataFrame) -> None:
-        staged = log.stage_dir()
-        delta.write.mode("overwrite").parquet(staged)
-        log.commit([staged], writer="stream_src")
+        log.commit([log.stage(delta)], writer="stream_src")
 
     commit(deltas[0])
     commit(deltas[1])
@@ -509,9 +505,7 @@ def acid_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", F.round(F.col("c_acctbal"), 2).alias("bal")
     )
-    staged0 = log.stage_dir()
-    cust.write.mode("overwrite").parquet(staged0)
-    log.commit([staged0], writer="base")
+    log.commit([log.stage(cust)], writer="base")
 
     errors: list[Exception] = []
     barrier = threading.Barrier(2, timeout=120)  # a crashed sibling must FAIL the query, not hang it
@@ -529,9 +523,7 @@ def acid_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             barrier.wait()
             for half in halves:
-                staged = log.stage_dir()
-                half.write.mode("overwrite").parquet(staged)
-                log.commit([staged], writer=name)
+                log.commit([log.stage(half)], writer=name)
         except Exception as exc:  # noqa: BLE001 — surfaced below
             errors.append(exc)
 
@@ -648,9 +640,7 @@ def acid_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tier", F.when(F.col("bal") >= 5000, "gold").otherwise("std")
     )
     for delta in (v0, v1):
-        staged = log.stage_dir()
-        delta.write.mode("overwrite").parquet(staged)
-        log.commit([staged], writer="schema_evolution")
+        log.commit([log.stage(delta)], writer="schema_evolution")
     snap = log.read(spark)
     return (
         snap.select(F.coalesce("tier", F.lit("legacy")).alias("tier"), "bal")
@@ -696,8 +686,7 @@ def merge_with_conflict_retry(
         if post_read_hook is not None and n_conflicts == 0:
             post_read_hook()
         delta = derive(current)
-        staged = log.stage_dir()
-        delta.write.mode("overwrite").parquet(staged)
+        staged = log.stage(delta)
         ranges = log.stats_for(spark, staged, key_cols)
         try:
             won = log.commit(
@@ -747,9 +736,7 @@ def acid_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the shared keys; the oracle would catch it every run."""
     log = _fresh_log(sf_dir, "conflict_retry")
     base = _balances(spark, sf_dir)
-    staged0 = log.stage_dir()
-    base.write.mode("overwrite").parquet(staged0)
-    log.commit([staged0], writer="base")
+    log.commit([log.stage(base)], writer="base")
 
     errors: list[Exception] = []
     conflicts: list[int] = []
@@ -852,9 +839,7 @@ def acid_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _balances(spark, sf_dir)
 
     def put(df: DataFrame, writer: str) -> None:
-        staged = log.stage_dir()
-        df.write.mode("overwrite").parquet(staged)
-        log.commit([staged], writer=writer)
+        log.commit([log.stage(df)], writer=writer)
 
     put(base.withColumn("_deleted", F.lit(False)), "base")
     # v1: tombstones only — key-sized, no data rewrite
@@ -1015,9 +1000,7 @@ def acid_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % 3 == 0)
         .withColumn("bal", F.round(F.col("bal") + 777, 2))
     )
-    staged = clone.stage_dir()
-    delta.write.mode("overwrite").parquet(staged)
-    clone.commit([staged], writer="clone_mutator")
+    clone.commit([clone.stage(delta)], writer="clone_mutator")
     return (
         at_fork.unionByName(audit(clone, "clone_mutated"))
         .unionByName(audit(src, "source_untouched"))
@@ -1071,9 +1054,7 @@ def acid_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _balances(spark, sf_dir)
 
     def put(df: DataFrame) -> None:
-        staged = log.stage_dir()
-        df.coalesce(1).write.mode("overwrite").parquet(staged)
-        log.commit([staged], writer="ckpt_fixture")
+        log.commit([log.stage(df.coalesce(1))], writer="ckpt_fixture")
 
     put(base)
     for i in range(1, 11):
@@ -1164,21 +1145,19 @@ def acid_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     for qi in range(4):
         k_lo = qi * q
         k_hi = (qi + 1) * q - 1 if qi < 3 else n - 1
-        staged = log.stage_dir()
-        part = base.filter(F.col("c_custkey").between(k_lo, k_hi)).coalesce(1)
-        part.write.mode("overwrite").parquet(staged)
+        staged = log.stage(
+            base.filter(F.col("c_custkey").between(k_lo, k_hi)).coalesce(1)
+        )
         log.commit(
             [staged],
             writer="quartile",
             stats={staged: log.stats_for(spark, staged, ["c_custkey"])},
         )
-    staged = log.stage_dir()
-    wave = (
+    staged = log.stage(
         base.filter(F.col("c_custkey") % 10 == 0)
         .withColumn("bal", F.round(F.col("bal") + 100, 2))
         .coalesce(1)
     )
-    wave.write.mode("overwrite").parquet(staged)
     log.commit(
         [staged],
         writer="wave",
@@ -1257,9 +1236,7 @@ def acid_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % 3 == 0)
         .withColumn("bal", F.round(F.col("bal") + 9, 2))
     )
-    staged = log.stage_dir()
-    delta.write.mode("overwrite").parquet(staged)
-    log.commit([staged], writer="wave9")  # v4
+    log.commit([log.stage(delta)], writer="wave9")  # v4
 
     swept = len(log.vacuum(retention_as_of=3))
     pruned = len(log.prune_manifests(keep_from=4))
@@ -1344,10 +1321,9 @@ def acid_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     for qi in range(4):
         k_lo = qi * q
         k_hi = (qi + 1) * q - 1 if qi < 3 else n - 1
-        staged = log.stage_dir()
-        base.filter(F.col("c_custkey").between(k_lo, k_hi)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staged)
+        staged = log.stage(
+            base.filter(F.col("c_custkey").between(k_lo, k_hi)).coalesce(1)
+        )
         log.commit(
             [staged],
             writer="quartile",
@@ -1413,13 +1389,10 @@ def acid_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is the usual keyed snapshot read."""
     log = _fresh_log(sf_dir, "wap")
     base = _balances(spark, sf_dir)
-    staged = log.stage_dir()
-    base.write.mode("overwrite").parquet(staged)
-    log.commit([staged], writer="base")
+    log.commit([log.stage(base)], writer="base")
 
     def wap_attempt(delta: DataFrame, name: str) -> tuple[bool, int]:
-        stage = log.stage_dir()
-        delta.write.mode("overwrite").parquet(stage)
+        stage = log.stage(delta)
         # expectations: balances above the domain floor (TPC-H acctbal
         # >= -999.99, so < -1000 is corrupt), unique merge key — scored on
         # the staged rows only; published history is not re-audited.

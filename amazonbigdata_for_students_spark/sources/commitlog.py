@@ -14,6 +14,10 @@ correct kernel:
 
 * **Write-temp**: data files land under ``data/<token>/`` while INVISIBLE —
   readers only ever look at directories referenced by a committed manifest.
+  ``stage`` also records the delta's Spark schema as
+  ``data/<token>/_schema.json`` (Spark's file lister skips ``_`` files), so
+  every later read of the delta passes that schema instead of inferring it
+  from a parquet footer — the table-metadata schema Delta and Iceberg keep.
 * **Atomic manifest swap**: a commit is one JSON file ``_commits/<version>``
   published via ``os.link`` (put-if-absent). POSIX link(2) fails with
   ``EEXIST`` if the version is taken, which gives compare-and-swap on the
@@ -49,10 +53,31 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql.types import StructType
 
 _COMMITS = "_commits"
 _CHECKPOINTS = "_checkpoints"
 _DATA = "data"
+_SCHEMA = "_schema.json"
+
+
+def recorded_schema(token_dir: str) -> StructType | None:
+    """The Spark schema ``CommitLog.stage`` recorded for a delta, or None
+    for a delta staged without one."""
+    try:
+        with open(os.path.join(token_dir, _SCHEMA)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def _scan(spark: SparkSession, token_dir: str) -> DataFrame:
+    """Read one delta with its recorded schema: no footer-inference job.
+    A delta without one (staged by hand) is inferred as before."""
+    schema = recorded_schema(token_dir)
+    if schema is None:
+        return spark.read.parquet(token_dir)
+    return spark.read.schema(schema).parquet(token_dir)
 
 
 class CommitConflict(RuntimeError):
@@ -87,6 +112,7 @@ class CommitLog:
     Layout::
 
         <path>/data/<token>/part-*.parquet   -- staged/committed data dirs
+        <path>/data/<token>/_schema.json     -- the delta's Spark schema
         <path>/_commits/00000000000n.json    -- one manifest per version
 
     A data directory is visible iff some manifest names it in ``adds``.
@@ -109,6 +135,15 @@ class CommitLog:
         """Directory to write a (not-yet-visible) parquet delta into."""
         token = token or uuid.uuid4().hex
         return os.path.join(self._data_dir, token)
+
+    def stage(self, df: DataFrame) -> str:
+        """Write ``df`` as a fresh, not-yet-visible delta and record its
+        schema beside the data; returns the dir to pass to ``commit``."""
+        staged = self.stage_dir()
+        df.write.mode("overwrite").parquet(staged)
+        with open(os.path.join(staged, _SCHEMA), "w") as f:
+            f.write(df.schema.json())
+        return staged
 
     # -- log inspection ---------------------------------------------------
     def _versions(self) -> list[int]:
@@ -421,7 +456,7 @@ class CommitLog:
         skipping at read time — pruning decided from the LOG, before any
         parquet footer is opened."""
         row = (
-            spark.read.parquet(staged)
+            _scan(spark, staged)
             .agg(
                 *[F.min(c).alias(f"min_{c}") for c in cols],
                 *[F.max(c).alias(f"max_{c}") for c in cols],
@@ -472,7 +507,7 @@ class CommitLog:
         rate; a false positive only costs one extra file read, never a
         wrong answer (no false negatives by construction)."""
         words = bits // 64
-        src = spark.read.parquet(staged)
+        src = _scan(spark, staged)
         # xxhash64 is TYPE-dependent: record the column's dtype so the
         # probe literal hashes as the same type (int32 vs int64 literals
         # would otherwise produce disjoint positions -> false negatives)
@@ -530,15 +565,7 @@ class CommitLog:
         are conservatively read. At 100 TB a keyed point read touches
         O(1) files instead of O(live files) — the difference between a
         lookup and a scan."""
-        ck = self._latest_checkpoint(as_of)
-        stats_by_token: dict[str, dict] = (
-            dict(ck[1].get("stats", {})) if ck else {}
-        )
-        for v, m in self.snapshot(after=ck[0] if ck else -1):
-            if as_of is not None and v > as_of:
-                break  # a time-travel read must not see FUTURE blooms
-            for t, s in (m.get("stats") or {}).items():
-                stats_by_token[t] = s
+        stats_by_token = self._stats_as_of(as_of)
         pos_cache: dict[tuple[int, int], list[int]] = {}
         kept, skipped = [], 0
         for v, t in self.live_tokens(as_of):
@@ -561,6 +588,21 @@ class CommitLog:
             return None, skipped
         return out.filter(F.col(col) == F.lit(value)), skipped
 
+    def _stats_as_of(self, as_of: int | None) -> dict[str, dict]:
+        """Per-token manifest stats visible at ``as_of``: the newest
+        checkpoint's stats, then each later manifest's, up to ``as_of``
+        (never FUTURE stats). A token (re-)added without stats loses any
+        older ones — a missing box only makes a skip decision conservative."""
+        ck = self._latest_checkpoint(as_of)
+        stats_by_token: dict[str, dict] = dict(ck[1].get("stats", {})) if ck else {}
+        for v, m in self.snapshot(after=ck[0] if ck else -1):
+            if as_of is not None and v > as_of:
+                break
+            stats = m.get("stats") or {}
+            for t in m.get("adds", ()):
+                stats_by_token[t] = stats.get(t, {})
+        return stats_by_token
+
     def live_tokens_pruned(
         self, col: str, lo, hi, as_of: int | None = None
     ) -> tuple[list[tuple[int, str]], int]:
@@ -568,13 +610,7 @@ class CommitLog:
         ``col BETWEEN lo AND hi``: a file is skipped iff its manifest stats
         prove [min, max] cannot intersect [lo, hi]. Files without stats for
         ``col`` are conservatively kept."""
-        ck = self._latest_checkpoint(as_of)
-        stats_by_token: dict[str, dict] = dict(ck[1].get("stats", {})) if ck else {}
-        for v, m in self.snapshot(after=ck[0] if ck else -1):
-            if as_of is not None and v > as_of:
-                break  # time travel must not prune from FUTURE stats
-            for t in m.get("adds", ()):
-                stats_by_token[t] = m.get("stats", {}).get(t, {})
+        stats_by_token = self._stats_as_of(as_of)
         kept, skipped = [], 0
         for v, t in self.live_tokens(as_of):
             mm = stats_by_token.get(t, {}).get(col)
@@ -807,8 +843,10 @@ class CommitLog:
         return self._read_tokens(spark, self.live_tokens(as_of))
 
     def _read_tokens(self, spark: SparkSession, pairs) -> DataFrame | None:
-        """One parquet read per (version, token) pair, each row tagged with
-        its ``_commit_version``, unioned by name; None for no pairs.
+        """One parquet read per (version, token) pair, each with the schema
+        recorded in ``data/<token>/_schema.json`` (so building the snapshot
+        submits no footer-inference job), each row tagged with its
+        ``_commit_version``, unioned by name; None for no pairs.
         allowMissingColumns = schema evolution on read: a commit that added
         a column null-fills it for other commits' rows instead of failing
         the snapshot — the mergeSchema semantic applied at the log layer.
@@ -817,7 +855,7 @@ class CommitLog:
         scan raises CANNOT_MERGE_SCHEMAS."""
         out = None
         for v, token in pairs:
-            part = spark.read.parquet(os.path.join(self._data_dir, token)).withColumn(
+            part = _scan(spark, os.path.join(self._data_dir, token)).withColumn(
                 "_commit_version", F.lit(v)
             )
             out = part if out is None else out.unionByName(part, allowMissingColumns=True)
@@ -919,15 +957,7 @@ class CommitLog:
         pred = F.col(col).between(F.lit(lo), F.lit(hi))
         for _ in range(max_txn_retries):
             read_version = self._contiguous_head()
-            ck = self._latest_checkpoint(read_version)
-            stats_by_token: dict[str, dict] = (
-                dict(ck[1].get("stats", {})) if ck else {}
-            )
-            for v, m in self.snapshot(after=ck[0] if ck else -1):
-                if v > read_version:
-                    break
-                for t, s in (m.get("stats") or {}).items():
-                    stats_by_token[t] = s
+            stats_by_token = self._stats_as_of(read_version)
             overlapping, carried = [], 0
             for v, t in self.live_tokens(as_of=read_version):
                 mm = stats_by_token.get(t, {}).get(col)
@@ -950,26 +980,27 @@ class CommitLog:
                 # evaluates BETWEEN to NULL, and filter(~pred) would drop
                 # it — silently deleting the NULL key group the declared
                 # footprint promises not to touch
-                survivors = spark.read.parquet(
-                    os.path.join(self._data_dir, t)
-                ).filter(~F.coalesce(pred, F.lit(False)))
-                staged = self.stage_dir()
-                survivors.write.mode("overwrite").parquet(staged)
+                staged = self.stage(
+                    _scan(spark, os.path.join(self._data_dir, t)).filter(
+                        ~F.coalesce(pred, F.lit(False))
+                    )
+                )
                 staged_dirs.append(staged)
                 adds.append(staged)
                 add_versions[os.path.basename(staged)] = v
                 removes.append(t)
             if replacement is not None:
                 obs = Observation()
-                staged = self.stage_dir()
-                replacement.observe(
-                    obs,
-                    # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
-                    F.sum(
-                        F.when(F.coalesce(pred, F.lit(False)), 0).otherwise(1)
-                    ).alias("violations"),
-                    F.count(F.lit(1)).alias("n"),
-                ).write.mode("overwrite").parquet(staged)
+                staged = self.stage(
+                    replacement.observe(
+                        obs,
+                        # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
+                        F.sum(
+                            F.when(F.coalesce(pred, F.lit(False)), 0).otherwise(1)
+                        ).alias("violations"),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                )
                 staged_dirs.append(staged)
                 if (obs.get["violations"] or 0) > 0:
                     for d in staged_dirs:
@@ -1032,8 +1063,7 @@ class CommitLog:
             merged = self.read_latest_per_key(spark, key_cols, as_of=read_version)
             if merged is None:
                 return None
-            staged = self.stage_dir()
-            merged.write.mode("overwrite").parquet(staged)
+            staged = self.stage(merged)
             try:
                 return self.commit(
                     [staged],

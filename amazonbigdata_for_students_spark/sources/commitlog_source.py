@@ -11,6 +11,10 @@ Offsets ARE commit versions: ``latestOffset`` is one log listing,
 data directories its manifest added — pure metadata on the driver, no row
 read at planning time — and each executor task reads exactly one delta
 directory via pyarrow, yielding Arrow record batches straight to the JVM.
+The stream's schema is the Spark schema ``CommitLog.stage`` recorded for the
+first committed delta (``data/<token>/_schema.json``) plus
+``_commit_version int``; a log whose deltas were staged without one is
+refused with a ``ValueError``.
 Version-granular offsets make recovery exact: after a checkpoint restart
 the stream resumes from the committed version, so every commit is
 processed exactly once (``src_commitlog_stream`` drives this end to end
@@ -33,46 +37,9 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.types import IntegerType, StructType
 
-_PA_DDL = {
-    "int8": "tinyint",
-    "int16": "smallint",
-    "int32": "int",
-    "int64": "bigint",
-    "float": "float",
-    "double": "double",
-    "string": "string",
-    "large_string": "string",
-    "bool": "boolean",
-    "date32[day]": "date",
-}
-
-
-def _ddl_for(path: str) -> str:
-    """Derive the source DDL from one committed file's Arrow schema."""
-    import pyarrow.parquet as pq
-
-    schema = pq.read_schema(_one_parquet_file(path))
-    cols = []
-    for f in schema:
-        t = str(f.type)
-        if t.startswith("timestamp"):
-            ddl = "timestamp"
-        elif t.startswith("decimal"):
-            ddl = t
-        else:
-            ddl = _PA_DDL.get(t)
-            if ddl is None:
-                raise ValueError(f"commitlog source: unmapped arrow type {t}")
-        cols.append(f"{f.name} {ddl}")
-    return ", ".join(cols + ["_commit_version int"])
-
-
-def _one_parquet_file(data_dir: str) -> str:
-    for f in sorted(os.listdir(data_dir)):
-        if f.endswith(".parquet"):
-            return os.path.join(data_dir, f)
-    raise FileNotFoundError(f"no parquet files in {data_dir}")
+from .commitlog import recorded_schema
 
 
 class DeltaPartition(InputPartition):
@@ -140,7 +107,9 @@ class CommitLogDataSource(DataSource):
     def name(cls) -> str:
         return "commitlog"
 
-    def schema(self) -> str:
+    def schema(self) -> StructType:
+        """The first committed delta's recorded schema plus the version
+        column: the schema ``CommitLog.stage`` wrote, never a footer guess."""
         log_path = self.options.get("path")
         snap_dir = os.path.join(log_path, "_commits")
         for name in sorted(os.listdir(snap_dir)):
@@ -148,9 +117,14 @@ class CommitLogDataSource(DataSource):
                 with open(os.path.join(snap_dir, name)) as f:
                     m = json.load(f)
                 if m.get("adds"):
-                    return _ddl_for(
-                        os.path.join(log_path, "data", m["adds"][0])
-                    )
+                    token_dir = os.path.join(log_path, "data", m["adds"][0])
+                    schema = recorded_schema(token_dir)
+                    if schema is None:
+                        raise ValueError(
+                            f"commitlog source: {token_dir} has no recorded "
+                            "schema; stage deltas with CommitLog.stage"
+                        )
+                    return schema.add("_commit_version", IntegerType())
         raise ValueError("commitlog source: empty log, cannot infer schema")
 
     def streamReader(self, schema) -> DataSourceStreamReader:

@@ -616,9 +616,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # full per-key values, already merged across batches by the engine's
         # state store — foreachBatch's job is the transactional apply):
         # stage the delta executor-side, then one atomic manifest commit.
-        staged = log.stage_dir()
-        batch_df.write.mode("overwrite").parquet(staged)
-        log.commit([staged], batch_id=batch_id, writer="stream_upsert_sink")
+        log.commit([log.stage(batch_df)], batch_id=batch_id, writer="stream_upsert_sink")
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1126,10 +1124,8 @@ def stream_atomic_two_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             bytype = batch_df.groupBy(
                 F.lit("bytype").alias("tbl"), F.col("event_type").alias("k")
             ).agg(F.count("*").alias("n"), dsum("value").alias("sv"))
-            staged_a = log.stage_dir()
-            hourly.write.mode("overwrite").parquet(staged_a)
-            staged_b = log.stage_dir()
-            bytype.write.mode("overwrite").parquet(staged_b)
+            staged_a = log.stage(hourly)
+            staged_b = log.stage(bytype)
             # ONE manifest, two adds: the cross-table atomicity point
             log.commit(
                 [staged_a, staged_b],

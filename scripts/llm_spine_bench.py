@@ -39,8 +39,11 @@ def run_spine(names, fixtures, app_name="llm_spine_bench") -> list[dict]:
     result dicts so scripts/spine_gate.py can assemble the committed
     SPINE_rN.json artifact. Shared by the LLM-text, vector, and graph
     spine benches."""
+    from pyspark.sql import Observation, functions as F
+
     from amazonbigdata_for_students_spark.plans import REGISTRY
     from amazonbigdata_for_students_spark.session import get_spark
+    from bench import materialise
 
     spark = get_spark(app_name=app_name, extra_conf={"spark.ui.enabled": "true"})
 
@@ -71,7 +74,13 @@ def run_spine(names, fixtures, app_name="llm_spine_bench") -> list[dict]:
         for name in names:
             before_raw = _stages()
             t0 = time.time()
-            n = REGISTRY[name].fn(spark, sf_dir).count()
+            obs = Observation()
+            materialise(  # the noop sink; rows observed in the same pass
+                REGISTRY[name].fn(spark, sf_dir).observe(
+                    obs, F.count(F.lit(1)).alias("rows")
+                )
+            )
+            n = obs.get["rows"]
             rows[name] = n
             times[name] = round(time.time() - t0, 1)
             after_raw = _stages()

@@ -4,8 +4,8 @@
 Usage: python scripts/probe_one.py <query> <sf_dir> [reps]
 
 Spawns nothing; runs in THIS process with a fresh SparkSession, using the
-same timed action as the spine harness (.count()) so numbers are
-comparable. Prints one JSON line.
+same timed action as the spine harness (the ``noop`` sink) so numbers
+are comparable. Prints one JSON line.
 """
 from __future__ import annotations
 

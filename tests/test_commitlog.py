@@ -27,6 +27,10 @@ def _stage_rows(spark, log, rows, schema="user_id bigint, v bigint"):
     return staged
 
 
+def _stage_df(spark, log, rows, schema="user_id bigint, v bigint"):
+    return log.stage(spark.createDataFrame(rows, schema))
+
+
 def test_commit_then_snapshot_read(spark, tmp_path):
     log = CommitLog(str(tmp_path / "t"))
     s0 = _stage_rows(spark, log, [(1, 10), (2, 20)])
@@ -42,11 +46,13 @@ def test_commit_then_snapshot_read(spark, tmp_path):
 def test_reads_widen_and_null_fill_across_generations(spark, tmp_path):
     """Every read path unions one read per token by name: a later commit
     that widened v from int to bigint and added a column reads back as one
-    bigint column, with the new column null for the older rows."""
+    bigint column, with the new column null for the older rows. The older
+    delta is staged by hand (no recorded schema, so its footer is inferred)
+    and the newer one through stage(): the two kinds mix in one snapshot."""
     log = CommitLog(str(tmp_path / "t"))
     log.commit([_stage_rows(spark, log, [(1, 10)], schema="user_id bigint, v int")])
     log.commit(
-        [_stage_rows(spark, log, [(2, 2**40, "x")], schema="user_id bigint, v bigint, w string")]
+        [_stage_df(spark, log, [(2, 2**40, "x")], schema="user_id bigint, v bigint, w string")]
     )
     want = {(1, 10, None, 0), (2, 2**40, "x", 1)}
     point, _ = log.read_point(spark, "user_id", 2)
@@ -984,3 +990,99 @@ def test_commit_detects_interloper_landing_after_conflict_check(spark, tmp_path)
     assert n_conf == 1  # the interloper was SEEN, never silently shadowed
     final = log.read_latest_per_key(spark, ["user_id"]).collect()
     assert [(r.user_id, r.v) for r in final] == [(1, 13)]  # both bumps land
+
+
+# ---------------------------------------------------------------------------
+# Recorded delta schemas: stage() writes data/<token>/_schema.json and every
+# read of a committed delta plans from it instead of a parquet footer.
+
+
+def test_stage_records_the_schema_spark_infers(spark, sf_small, monkeypatch):
+    """Every delta the acid_* queries and stream_upsert_sink stage reads
+    back with its recorded schema exactly as Spark infers it from the
+    parquet footers (nullability, field order and types)."""
+    from amazonbigdata_for_students_spark.plans import REGISTRY
+    from amazonbigdata_for_students_spark.sources.commitlog import recorded_schema
+
+    seen = []
+    real_stage = CommitLog.stage
+
+    def stage(self, df):
+        d = real_stage(self, df)
+        # compared later: a query may vacuum the dir before it returns
+        seen.append((d, spark.read.schema(recorded_schema(d)).parquet(d).schema,
+                     spark.read.parquet(d).schema))
+        return d
+
+    monkeypatch.setattr(CommitLog, "stage", stage)
+    names = [n for n in REGISTRY if n.startswith("acid_")] + ["stream_upsert_sink"]
+    for n in names:
+        REGISTRY[n].fn(spark, sf_small).collect()
+    assert len(seen) >= len(names)
+    for d, recorded, inferred in seen:
+        assert recorded == inferred, d
+
+
+def test_reads_of_staged_deltas_submit_no_job(spark, tmp_path, jobs_in_group):
+    """Building a snapshot, change-feed or latest-per-key DataFrame over
+    stage()-written deltas is planning only: no footer-inference job."""
+    log = CommitLog(str(tmp_path / "t"))
+    log.commit([_stage_df(spark, log, [(1, 10), (2, 20)])])
+    log.commit([_stage_df(spark, log, [(2, 21)])])
+    builds = {
+        "read": lambda: log.read(spark),
+        "read_changes": lambda: log.read_changes(spark, since=0),
+        "read_latest_per_key": lambda: log.read_latest_per_key(spark, ["user_id"]),
+    }
+    for name, build in builds.items():
+        assert jobs_in_group(f"commitlog_build_{name}", build) == 0, name
+    got = {(r.user_id, r.v) for r in log.read_latest_per_key(spark, ["user_id"]).collect()}
+    assert got == {(1, 10), (2, 21)}
+
+
+def test_clone_links_the_schema_file(spark, tmp_path, jobs_in_group):
+    """clone_into hard-links _schema.json with the data, so the clone's
+    reads plan from the recorded schema too."""
+    src = CommitLog(str(tmp_path / "src"))
+    src.commit([_stage_df(spark, src, [(1, 10), (2, 20)])])
+    clone = src.clone_into(str(tmp_path / "dst"))
+    for _, token in clone.live_tokens():
+        assert os.stat(os.path.join(clone._data_dir, token, "_schema.json")).st_nlink == 2
+    assert jobs_in_group("commitlog_build_clone", lambda: clone.read(spark)) == 0
+    assert {(r.user_id, r.v) for r in clone.read(spark).collect()} == {(1, 10), (2, 20)}
+
+
+def test_vacuum_removes_swept_tokens_entirely(spark, tmp_path):
+    """A swept token's dir goes with every file in it, schema included."""
+    log = CommitLog(str(tmp_path / "t"))
+    log.commit([_stage_df(spark, log, [(1, 10)])])
+    log.commit([_stage_df(spark, log, [(1, 11)])])
+    _stage_df(spark, log, [(9, 9)])  # a crashed writer's orphan
+    log.compact(spark, ["user_id"])
+    swept = log.vacuum()
+    assert len(swept) == 3
+    live = {t for _, t in log.live_tokens()}
+    assert set(os.listdir(log._data_dir)) == live
+    assert all(not os.path.exists(os.path.join(log._data_dir, t)) for t in swept)
+    assert [(r.user_id, r.v) for r in log.read(spark).collect()] == [(1, 11)]
+
+
+def test_stream_source_schema_is_the_recorded_one(spark, tmp_path):
+    """The commitlog stream's schema is the first delta's recorded schema
+    plus the version column; a hand-staged delta is refused by name."""
+    import datetime
+
+    from amazonbigdata_for_students_spark.sources.commitlog_source import (
+        CommitLogDataSource,
+    )
+
+    log = CommitLog(str(tmp_path / "t"))
+    ts = datetime.datetime(2024, 1, 1)
+    log.commit([_stage_df(spark, log, [(1, ts)], "user_id bigint, ts timestamp_ntz")])
+    got = CommitLogDataSource({"path": log.path}).schema()
+    assert got.simpleString() == "struct<user_id:bigint,ts:timestamp_ntz,_commit_version:int>"
+
+    bare = CommitLog(str(tmp_path / "bare"))
+    bare.commit([_stage_rows(spark, bare, [(1, 10)])])
+    with pytest.raises(ValueError, match="CommitLog.stage"):
+        CommitLogDataSource({"path": bare.path}).schema()

@@ -53,6 +53,30 @@ def test_bench_timed_q1_keeps_its_aggregates(spark, sf_small):
     assert "sum(" not in _last_executed_plan(spark)
 
 
+def test_spine_rows_come_from_the_timed_pass(spark, sf_oracle, monkeypatch):
+    """run_spine times the noop sink and takes each query's row count from
+    an Observation on that same pass: DataFrame.count is never called."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "scripts", "llm_spine_bench.py")
+    spec = importlib.util.spec_from_file_location("llm_spine_bench", path)
+    spine = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spine)
+
+    names = ["q1_pricing_summary", "projection_rename"]
+    dfs = {n: REGISTRY[n].fn(spark, sf_oracle) for n in names}
+    want = {n: len(df.collect()) for n, df in dfs.items()}
+
+    def no_count(self):
+        raise AssertionError("run_spine must not call DataFrame.count")
+
+    # the session's concrete DataFrame class, which defines its own count
+    monkeypatch.setattr(type(dfs[names[0]]), "count", no_count)
+    (rec,) = spine.run_spine(names, [("sf0.01", sf_oracle)])
+    assert rec["rows"] == want
+
+
 def test_projection_prunes_scan(spark, sf_small):
     df = REGISTRY["projection_rename"].fn(spark, sf_small)
     read_schema = plan_of(df).split("ReadSchema: ")[1].split("\n")[0]

@@ -251,17 +251,7 @@ def test_python_stream_reader_offsets_and_replay(spark, sf_small):
     assert len(seen) == n_batch_rows
 
 
-def _jobs_in_group(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_table_infers_schema_once(spark, sf_small, tmp_path):
+def test_load_table_infers_schema_once(spark, sf_small, tmp_path, jobs_in_group):
     """The footer-inference job runs on the first load of a file version
     only; a repeat load plans from the stored schema with no job."""
     import shutil
@@ -270,8 +260,8 @@ def test_load_table_infers_schema_once(spark, sf_small, tmp_path):
 
     shutil.copy(os.path.join(sf_small, "customer.parquet"), tmp_path)
     d = str(tmp_path)
-    first = _jobs_in_group(spark, "schema_first", lambda: load_table(spark, d, "customer"))
-    repeat = _jobs_in_group(spark, "schema_repeat", lambda: load_table(spark, d, "customer"))
+    first = jobs_in_group("schema_first", lambda: load_table(spark, d, "customer"))
+    repeat = jobs_in_group("schema_repeat", lambda: load_table(spark, d, "customer"))
     assert first >= 1 and repeat == 0
 
 
