@@ -28,9 +28,9 @@ import os
 import shutil
 import threading
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..sources.commitlog import CommitConflict, CommitLog, ConcurrentKeyConflict
+from ..sources.commitlog import CommitLog
 from ..sources.readers import load_table
 from .registry import query
 
@@ -49,6 +49,12 @@ _BAL_V2 = (
 
 def _dsum(expr: str) -> str:
     return f"CAST(sum(CAST(round({expr}, 2) AS DECIMAL(38,2))) AS DOUBLE)"
+
+
+def _bal_sum() -> Column:
+    """The Spark twin of ``_dsum("bal")``: a decimal-exact balance sum,
+    reported as a double."""
+    return F.sum(F.round("bal", 2).cast("decimal(38,2)")).cast("double")
 
 
 def _fresh_log(sf_dir: str, name: str) -> CommitLog:
@@ -81,6 +87,18 @@ def _build_three_commits(spark: SparkSession, sf_dir: str, name: str) -> CommitL
     return log
 
 
+def _audit(
+    spark: SparkSession, log: CommitLog, probe: str, as_of: int | None = None
+) -> DataFrame:
+    """One probe row over a balances log: the row count and decimal-exact
+    balance checksum of its latest-per-key state at ``as_of``."""
+    return log.read_latest_per_key(spark, ["c_custkey"], as_of=as_of).agg(
+        F.lit(probe).alias("probe"),
+        F.count("*").alias("n_rows"),
+        _bal_sum().alias("total_bal"),
+    )
+
+
 @query(
     "acid_time_travel",
     oracle=f"""
@@ -110,9 +128,7 @@ def acid_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             log.read_latest_per_key(spark, ["c_custkey"], as_of=v)
             .agg(
                 F.count("*").alias("n_rows"),
-                F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-                .cast("double")
-                .alias("total_bal"),
+                _bal_sum().alias("total_bal"),
             )
             .select(F.lit(v).alias("version"), "n_rows", "total_bal")
         )
@@ -148,9 +164,7 @@ def acid_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("_commit_version").alias("version"))
         .agg(
             F.count("*").alias("n_changed"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("changed_bal"),
+            _bal_sum().alias("changed_bal"),
         )
     )
 
@@ -186,9 +200,7 @@ def acid_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.read_latest_per_key(spark, ["c_custkey"])
         .agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            _bal_sum().alias("total_bal"),
         )
         .select(
             F.lit(files_before).cast("long").alias("files_before"),
@@ -229,9 +241,7 @@ def acid_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.read_latest_per_key(spark, ["c_custkey"])
         .agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            _bal_sum().alias("total_bal"),
         )
         .select(
             F.lit(len(swept)).cast("long").alias("swept_dirs"),
@@ -545,9 +555,7 @@ def acid_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_customers"),
             F.lit(n_commits).cast("long").alias("n_commits"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            _bal_sum().alias("total_bal"),
         )
     )
 
@@ -661,47 +669,29 @@ def merge_with_conflict_retry(
     max_txn_retries: int = 8,
     post_read_hook=None,
 ) -> tuple[int, int]:
-    """One MERGE transaction with Delta-style optimistic concurrency:
-    read the latest snapshot, ``derive(snapshot_df) -> delta`` against it,
-    commit with the snapshot's version + the delta's key footprint. On
-    ConcurrentKeyConflict — another writer committed overlapping keys
-    after our read — the stale staged delta is dropped and the WHOLE
-    transaction re-runs against the winner's snapshot (re-read +
-    re-derive), never blind-re-committed. Returns (version won,
-    n_conflicts suffered). Disjoint-key writers never conflict (footprint
-    boxes disjoint) and keep interleaving freely, so this adds zero
-    serialization to the acid_concurrent_merge scenario.
+    """One MERGE transaction as a ``CommitLog.transact`` attempt: read the
+    snapshot at the head, ``derive(snapshot_df) -> delta`` against it, and
+    commit the delta with its key footprint against that version; a
+    same-key conflict re-reads and re-derives (``transact``).
+    Returns (version won, n_conflicts suffered). Disjoint-key writers never
+    conflict (footprint boxes disjoint) and keep interleaving freely, so
+    this adds zero serialization to the acid_concurrent_merge scenario.
 
     ``post_read_hook`` (first attempt only) runs after the snapshot version
     is captured and before the commit — a test seam that lets two racing
     transactions barrier on "both have read" so the conflict is
     deterministic rather than timing-dependent."""
-    for n_conflicts in range(max_txn_retries):
-        # head(): one listdir, no manifest replay — snapshot()[-1][0]
-        # would cost O(#commits) manifest reads per attempt (defeating
-        # checkpoints) and raise ManifestsPruned on a retention-pruned
-        # table, breaking MERGE after prune_manifests
-        read_version = log.head()
-        current = log.read_latest_per_key(spark, key_cols)
-        if post_read_hook is not None and n_conflicts == 0:
+
+    def attempt(read_version: int) -> dict:
+        nonlocal post_read_hook
+        current = log.read_latest_per_key(spark, key_cols, as_of=read_version)
+        if post_read_hook is not None:
             post_read_hook()
-        delta = derive(current)
-        staged = log.stage(delta)
-        ranges = log.stats_for(spark, staged, key_cols)
-        try:
-            won = log.commit(
-                [staged],
-                writer=writer,
-                read_version=read_version,
-                key_ranges=ranges,
-            )
-            return won, n_conflicts
-        except ConcurrentKeyConflict:
-            shutil.rmtree(staged, ignore_errors=True)  # stale — re-derive
-            continue
-    raise CommitConflict(
-        f"transaction {writer!r} conflicted {max_txn_retries} times"
-    )
+            post_read_hook = None
+        staged = log.stage(derive(current))
+        return {"adds": [staged], "key_ranges": log.stats_for(spark, staged, key_cols)}
+
+    return log.transact(attempt, writer=writer, max_txn_retries=max_txn_retries)
 
 
 @query(
@@ -783,9 +773,7 @@ def acid_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_customers"),
             F.lit(n_commits).cast("long").alias("n_commits"),
             F.lit(n_conflicts).cast("long").alias("n_conflicts"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            _bal_sum().alias("total_bal"),
             F.sum(
                 F.when(
                     F.col("c_custkey") % 6 == 0,
@@ -865,9 +853,7 @@ def acid_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         return alive.agg(
             F.lit(v).cast("int").alias("version"),
             F.count("*").alias("n_rows"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            _bal_sum().alias("total_bal"),
         ).select("version", "n_rows", "total_bal")
 
     return state(0).unionByName(state(1)).unionByName(state(2))
@@ -925,21 +911,11 @@ def acid_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_ranges=None,
     )
 
-    def audit(df: DataFrame, probe: str, n_commits: int) -> DataFrame:
-        return df.agg(
-            F.lit(probe).alias("probe"),
-            F.count("*").alias("n_rows"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
-            F.lit(n_commits).cast("long").alias("n_commits"),
-        ).select("probe", "n_rows", "total_bal", "n_commits")
-
-    n_commits = len(log.snapshot())
-    head = log.read_latest_per_key(spark, ["c_custkey"])
-    v2 = log.read_latest_per_key(spark, ["c_custkey"], as_of=2)
-    return audit(head, "post_restore", n_commits).unionByName(
-        audit(v2, "history_intact", n_commits)
+    n_commits = F.lit(len(log.snapshot())).cast("long")
+    return (
+        _audit(spark, log, "post_restore")
+        .unionByName(_audit(spark, log, "history_intact", as_of=2))
+        .withColumn("n_commits", n_commits)
     )
 
 
@@ -980,20 +956,7 @@ def acid_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(dst_path, ignore_errors=True)
     clone = src.clone_into(dst_path)
 
-    def audit(log: CommitLog, probe: str) -> DataFrame:
-        return (
-            log.read_latest_per_key(spark, ["c_custkey"])
-            .agg(
-                F.lit(probe).alias("probe"),
-                F.count("*").alias("n_rows"),
-                F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-                .cast("double")
-                .alias("total_bal"),
-            )
-            .select("probe", "n_rows", "total_bal")
-        )
-
-    at_fork = audit(clone, "clone_at_fork")
+    at_fork = _audit(spark, clone, "clone_at_fork")
     # mutate the CLONE only: +777 on keys %3=0
     delta = (
         clone.read_latest_per_key(spark, ["c_custkey"])
@@ -1002,8 +965,8 @@ def acid_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clone.commit([clone.stage(delta)], writer="clone_mutator")
     return (
-        at_fork.unionByName(audit(clone, "clone_mutated"))
-        .unionByName(audit(src, "source_untouched"))
+        at_fork.unionByName(_audit(spark, clone, "clone_mutated"))
+        .unionByName(_audit(spark, src, "source_untouched"))
     )
 
 
@@ -1073,19 +1036,6 @@ def acid_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def audit(probe: str, as_of: int | None = None) -> DataFrame:
-        return (
-            log.read_latest_per_key(spark, ["c_custkey"], as_of=as_of)
-            .agg(
-                F.lit(probe).alias("probe"),
-                F.count("*").alias("n_rows"),
-                F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-                .cast("double")
-                .alias("total_bal"),
-            )
-            .select("probe", "n_rows", "total_bal")
-        )
-
     cost = log.snapshot_load_cost()
     cost_row = spark.range(1).select(
         F.lit("replay_cost").alias("probe"),
@@ -1093,9 +1043,9 @@ def acid_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(float(cost["checkpoint_version"])).alias("total_bal"),
     )
     return (
-        audit("as_of_5", as_of=5)
-        .unionByName(audit("as_of_10_ck", as_of=10))
-        .unionByName(audit("latest"))
+        _audit(spark, log, "as_of_5", as_of=5)
+        .unionByName(_audit(spark, log, "as_of_10_ck", as_of=10))
+        .unionByName(_audit(spark, log, "latest"))
         .unionByName(cost_row)
     )
 
@@ -1171,17 +1121,7 @@ def acid_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = log.replace_where(spark, "c_custkey", lo, hi, replacement)
 
-    final = (
-        log.read_latest_per_key(spark, ["c_custkey"])
-        .agg(
-            F.lit("final").alias("probe"),
-            F.count("*").alias("n_rows"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
-        )
-        .select("probe", "n_rows", "total_bal")
-    )
+    final = _audit(spark, log, "final")
     files_row = spark.range(1).select(
         F.lit("files").alias("probe"),
         F.lit(res["carried"]).cast("long").alias("n_rows"),
@@ -1241,19 +1181,6 @@ def acid_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     swept = len(log.vacuum(retention_as_of=3))
     pruned = len(log.prune_manifests(keep_from=4))
 
-    def audit(probe: str, as_of: int | None = None) -> DataFrame:
-        return (
-            log.read_latest_per_key(spark, ["c_custkey"], as_of=as_of)
-            .agg(
-                F.lit(probe).alias("probe"),
-                F.count("*").alias("n_rows"),
-                F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-                .cast("double")
-                .alias("total_bal"),
-            )
-            .select("probe", "n_rows", "total_bal")
-        )
-
     from ..sources.commitlog import ManifestsPruned
 
     try:
@@ -1273,8 +1200,8 @@ def acid_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        audit("latest")
-        .unionByName(audit("as_of_checkpoint", as_of=3))
+        _audit(spark, log, "latest")
+        .unionByName(_audit(spark, log, "as_of_checkpoint", as_of=3))
         .unionByName(meta)
     )
 
@@ -1340,7 +1267,7 @@ def acid_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     present = df_p.agg(
         F.lit("point_present").alias("probe"),
         F.count("*").alias("n_rows"),
-        F.sum(F.round("bal", 2).cast("decimal(38,2)")).cast("double").alias("val"),
+        _bal_sum().alias("val"),
     ).select("probe", "n_rows", "val")
 
     df_a, skipped_a = log.read_point(spark, "c_custkey", n + 17)
@@ -1419,9 +1346,7 @@ def acid_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         ok, n_viol = wap_attempt(delta, name)
         state = log.read_latest_per_key(spark, ["c_custkey"]).agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.round("bal", 2).cast("decimal(38,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            _bal_sum().alias("total_bal"),
         )
         row = state.select(
             F.lit(name).alias("candidate"),

@@ -29,6 +29,20 @@ correct kernel:
   version prefix, and unions exactly the data directories those manifests
   name — it can never observe half a commit, because visibility IS the
   manifest file.
+* **One replay**: every piece of table state — the live
+  ``{token: resolution_version}`` map, the committed batch ids and the
+  per-token manifest stats — comes from ONE ordered action replay
+  (``CommitLog._replay``) that starts at the newest checkpoint <= the
+  read's as-of version and reads manifests only up to it. A remove kills
+  what is live at that point, a later re-add revives it, and a token
+  (re-)added without stats has none. ``write_checkpoint`` serialises that
+  same replay, so a checkpoint only ever speeds a read up, never changes
+  its answer.
+* **One transaction loop**: ``CommitLog.transact`` owns optimistic
+  concurrency for every read-derive-commit writer (compaction,
+  ``replace_where``, MERGE): capture the head, let the caller's attempt
+  stage its deltas against it, commit with that read version, and on a
+  same-key conflict drop the staged deltas and re-derive.
 * **Idempotence**: a manifest carries an optional ``batch_id``; re-applying
   an already-committed batch (a streaming retry after a sink crash) is
   detected from the log itself, not from writer-local state, so the
@@ -51,6 +65,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.types import StructType
@@ -98,12 +113,21 @@ class ConcurrentKeyConflict(RuntimeError):
     re-commit is only safe for disjoint keys (latest-per-key resolution is
     commutative across keys); for a same-key race the loser's delta was
     derived from a stale base, so it must re-read the winner's snapshot and
-    re-derive. The caller's retry loop does exactly that (see
-    merge_with_conflict_retry in plans/tableformat.py)."""
+    re-derive. ``CommitLog.transact`` is the retry loop that does exactly
+    that."""
 
     def __init__(self, winner_version: int, message: str) -> None:
         super().__init__(message)
         self.winner_version = winner_version
+
+
+class _Replay(NamedTuple):
+    """Table state at one version, from ``CommitLog._replay``."""
+
+    start: int  # checkpoint version the replay began after (-1: none)
+    live: dict[str, int]  # token -> resolution version, in replay order
+    batch_ids: set
+    stats: dict[str, dict]  # live token -> its manifest stats ({}: none)
 
 
 class CommitLog:
@@ -163,7 +187,7 @@ class CommitLog:
         with open(self._manifest_path(version)) as f:
             return json.load(f)
 
-    def _contiguous_head(self) -> int:
+    def head(self) -> int:
         """Highest readable version (-1 if none): every version from the
         replay base up to it is committed. The base is 0 for an unpruned
         log; after ``prune_manifests`` the base is the newest checkpoint
@@ -174,7 +198,10 @@ class CommitLog:
         every version < N is readable, so a reader racing a writer sees a
         clean prefix of history, never a gap. (With link-based CAS gaps
         cannot occur; the check costs nothing and makes the invariant
-        explicit.) Costs one listdir of small names — no manifest reads.
+        explicit.) Costs one listdir of small names — no manifest reads,
+        which makes it the right way for a transaction to capture its read
+        snapshot version and for a stream to find its latest offset, on a
+        retention-pruned log too.
         """
         versions = self._versions()
         base = 0
@@ -196,24 +223,21 @@ class CommitLog:
             head = v
         return max(head, ck_v)
 
-    def head(self) -> int:
-        """Public accessor for the current head version (-1 if empty).
-        One listdir, zero manifest reads — the right way for a
-        transaction to capture its read snapshot version. Replaying
-        ``snapshot()`` just to take ``[-1][0]`` costs O(#commits)
-        manifest reads and raises ManifestsPruned on any
-        retention-pruned table; this never does either."""
-        return self._contiguous_head()
-
-    def snapshot(self, after: int = -1) -> list[tuple[int, dict]]:
+    def snapshot(
+        self, after: int = -1, until: int | None = None
+    ) -> list[tuple[int, dict]]:
         """(version, manifest) for the contiguous committed prefix,
-        restricted to versions > ``after``. The default replays the whole
-        log; checkpoint-aware readers pass ``after=checkpoint_version`` so
-        only the post-checkpoint suffix is read — that is the entire point
-        of checkpointing: O(#commits since checkpoint) manifest reads, not
-        O(#commits ever). Raises ManifestsPruned if the requested range
+        restricted to versions in (``after``, ``until``] (``until``
+        defaults to the head). The default replays the whole log;
+        checkpoint-aware readers pass ``after=checkpoint_version`` so only
+        the post-checkpoint suffix is read — that is the entire point of
+        checkpointing: O(#commits since checkpoint) manifest reads, not
+        O(#commits ever) — and an as-of read passes ``until`` so no later
+        manifest is opened. Raises ManifestsPruned if the requested range
         reaches below the log-retention horizon."""
-        head = self._contiguous_head()
+        head = self.head()
+        if until is not None:
+            head = min(head, until)
         have = set(self._versions())
         out = []
         for v in range(after + 1, head + 1):
@@ -224,6 +248,41 @@ class CommitLog:
                 )
             out.append((v, self.read_manifest(v)))
         return out
+
+    def _replay(self, as_of: int | None = None, use_checkpoint: bool = True) -> _Replay:
+        """Table state at ``as_of`` (default: the head) from ONE ordered
+        action replay: the newest checkpoint <= as_of (a newer one has
+        already folded in commits this read must not see), then each later
+        manifest up to as_of, in version order. A remove kills only what is
+        live at that point and a LATER re-add of the same token revives it
+        (the Delta log semantic; a global removed-set would disagree with
+        any checkpoint taken between the remove and the re-add). A commit
+        may pin per-token resolution versions different from its own
+        (``add_versions``: clone_into uses negative ranks so a cloned
+        history resolves below every future commit). The stats rule: an
+        add sets the token's stats to the box its manifest carries, so a
+        token (re-)added without stats has none — a missing box only makes
+        a skip decision conservative."""
+        ck = self._latest_checkpoint(as_of) if use_checkpoint else None
+        start, c = ck or (-1, {})
+        state = _Replay(
+            start,
+            {t: int(v) for v, t in c.get("live", ())},
+            set(c.get("batch_ids", ())),
+            dict(c.get("stats", {})),
+        )
+        for v, m in self.snapshot(after=state.start, until=as_of):
+            for t in m.get("removes", ()):
+                state.live.pop(t, None)
+                state.stats.pop(t, None)
+            av = m.get("add_versions") or {}
+            stats = m.get("stats") or {}
+            for t in m.get("adds", ()):
+                state.live[t] = av.get(t, v)
+                state.stats[t] = stats.get(t, {})
+            if m.get("batch_id") is not None:
+                state.batch_ids.add(m["batch_id"])
+        return state
 
     # -- checkpoints (O(1) snapshot load, Delta's _last_checkpoint) -------
     def write_checkpoint(self) -> int | None:
@@ -240,48 +299,19 @@ class CommitLog:
         horizon minus the CDC retention window) the log never grows
         unboundedly — retention is deliberately not automated here so
         time-travel tests keep full history."""
-        head = self._contiguous_head()
+        head = self.head()
         if head < 0:
             return None
-        # bounded replay of (base, head]: starts from the previous
-        # checkpoint when one exists (mandatory once manifests below it
-        # are pruned). The base MUST be capped at <= head: a racing
-        # writer can land commits AND a newer checkpoint between our
-        # head read and this replay, and folding that newer state into a
-        # checkpoint STAMPED head would corrupt every time-travel read
-        # at <= head (and double-apply the replayed suffix).
-        base = self._latest_checkpoint(as_of=head)
-        live: dict[str, int] = {}
-        batch_ids: set = set()
-        stats_by_token: dict[str, dict] = {}
-        start = -1
-        if base is not None:
-            start, state = base
-            live = {t: int(v) for v, t in state["live"]}
-            batch_ids = set(state.get("batch_ids", ()))
-            stats_by_token = dict(state.get("stats", {}))
-        prefix = [
-            (v, m) for v, m in self.snapshot(after=start) if v <= head
-        ]
-        for v, m in prefix:
-            for t in m.get("removes", ()):
-                live.pop(t, None)
-            av = m.get("add_versions") or {}
-            for t in m.get("adds", ()):
-                live[t] = av.get(t, v)
-            if m.get("batch_id") is not None:
-                batch_ids.add(m["batch_id"])
-            for t, s in (m.get("stats") or {}).items():
-                if s:
-                    stats_by_token[t] = s
-        live_set = set(live)
+        # the replay is capped at head: a racing writer can land commits
+        # AND a newer checkpoint between our head read and this replay, and
+        # folding that newer state into a checkpoint STAMPED head would
+        # corrupt every time-travel read at <= head
+        rep = self._replay(head)
         state = {
             "version": head,
-            "live": [[v, t] for t, v in live.items()],
-            "batch_ids": sorted(batch_ids, key=str),
-            "stats": {
-                t: s for t, s in stats_by_token.items() if t in live_set
-            },
+            "live": [[v, t] for t, v in rep.live.items()],
+            "batch_ids": sorted(rep.batch_ids, key=str),
+            "stats": {t: s for t, s in rep.stats.items() if s},
         }
         path = os.path.join(self._checkpoints_dir, f"{head:012d}.json")
         tmp = os.path.join(
@@ -327,7 +357,7 @@ class CommitLog:
         would start from and how many manifests it still replays."""
         ck = self._latest_checkpoint(as_of)
         start = ck[0] if ck else -1
-        head = self._contiguous_head()
+        head = self.head()
         if as_of is not None:
             head = min(head, as_of)
         return {
@@ -336,50 +366,19 @@ class CommitLog:
         }
 
     def committed_batch_ids(self) -> set:
-        ck = self._latest_checkpoint()
-        start = ck[0] if ck else -1
-        ids = set(ck[1].get("batch_ids", ())) if ck else set()
-        ids.update(
-            m.get("batch_id")
-            for _, m in self.snapshot(after=start)
-            if m.get("batch_id") is not None
-        )
-        ids.discard(None)
-        return ids
+        return self._replay().batch_ids
 
     def live_tokens(
         self, as_of: int | None = None, use_checkpoint: bool = True
     ) -> list[tuple[int, str]]:
-        """(add_version, token) pairs visible at ``as_of`` (default: latest):
-        every token added by a commit <= as_of and not named in a later
-        commit's ``removes`` <= as_of. Remove-actions are how compaction
-        retires superseded deltas without rewriting history — the same
-        add/remove file-action model as Delta's log. Resolution starts from
-        the newest checkpoint <= as_of when one exists and replays only the
-        manifests after it; removes replayed after the checkpoint still
-        retire checkpoint-carried tokens (compaction-after-checkpoint)."""
-        ck = self._latest_checkpoint(as_of) if use_checkpoint else None
-        start = ck[0] if ck else -1
-        # ORDERED action replay (the Delta log semantic): a remove kills
-        # only what is live at that point; a LATER re-add of the same
-        # token revives it. A global removed-set would make replay
-        # order-insensitive — and silently disagree with any checkpoint
-        # taken between the remove and the re-add.
-        live: dict[str, int] = (
-            {t: int(v) for v, t in ck[1]["live"]} if ck else {}
-        )
-        for v, m in self.snapshot(after=start):
-            if as_of is not None and v > as_of:
-                break
-            for t in m.get("removes", ()):
-                live.pop(t, None)
-            # add_versions: a commit may pin per-token RESOLUTION versions
-            # different from its own (clone_into uses negative ranks so a
-            # cloned history resolves below every future commit while
-            # preserving its internal per-key order)
-            av = m.get("add_versions") or {}
-            for t in m.get("adds", ()):
-                live[t] = av.get(t, v)
+        """(resolution_version, token) pairs visible at ``as_of`` (default:
+        latest): every token added by a commit <= as_of and not named in a
+        later commit's ``removes`` <= as_of. Remove-actions are how
+        compaction retires superseded deltas without rewriting history —
+        the same add/remove file-action model as Delta's log; removes
+        replayed after a checkpoint still retire checkpoint-carried tokens
+        (compaction-after-checkpoint)."""
+        live = self._replay(as_of, use_checkpoint).live
         return [(v, t) for t, v in live.items()]
 
     def vacuum(self, retention_as_of: int | None = None) -> list[str]:
@@ -565,11 +564,11 @@ class CommitLog:
         are conservatively read. At 100 TB a keyed point read touches
         O(1) files instead of O(live files) — the difference between a
         lookup and a scan."""
-        stats_by_token = self._stats_as_of(as_of)
+        state = self._replay(as_of)
         pos_cache: dict[tuple[int, int], list[int]] = {}
         kept, skipped = [], 0
-        for v, t in self.live_tokens(as_of):
-            bloom = stats_by_token.get(t, {}).get(f"bloom:{col}")
+        for t, v in state.live.items():
+            bloom = state.stats.get(t, {}).get(f"bloom:{col}")
             if bloom is not None:
                 key = (bloom["bits"], bloom["k"], bloom.get("dtype", "bigint"))
                 if key not in pos_cache:
@@ -588,32 +587,19 @@ class CommitLog:
             return None, skipped
         return out.filter(F.col(col) == F.lit(value)), skipped
 
-    def _stats_as_of(self, as_of: int | None) -> dict[str, dict]:
-        """Per-token manifest stats visible at ``as_of``: the newest
-        checkpoint's stats, then each later manifest's, up to ``as_of``
-        (never FUTURE stats). A token (re-)added without stats loses any
-        older ones — a missing box only makes a skip decision conservative."""
-        ck = self._latest_checkpoint(as_of)
-        stats_by_token: dict[str, dict] = dict(ck[1].get("stats", {})) if ck else {}
-        for v, m in self.snapshot(after=ck[0] if ck else -1):
-            if as_of is not None and v > as_of:
-                break
-            stats = m.get("stats") or {}
-            for t in m.get("adds", ()):
-                stats_by_token[t] = stats.get(t, {})
-        return stats_by_token
-
     def live_tokens_pruned(
         self, col: str, lo, hi, as_of: int | None = None
     ) -> tuple[list[tuple[int, str]], int]:
         """(kept (version, token) pairs, n_skipped) for predicate
         ``col BETWEEN lo AND hi``: a file is skipped iff its manifest stats
         prove [min, max] cannot intersect [lo, hi]. Files without stats for
-        ``col`` are conservatively kept."""
-        stats_by_token = self._stats_as_of(as_of)
+        ``col`` are conservatively kept. A box's has_null marker plays no
+        part: BETWEEN never matches NULL, so the numeric bounds alone
+        decide the skip."""
+        state = self._replay(as_of)
         kept, skipped = [], 0
-        for v, t in self.live_tokens(as_of):
-            mm = stats_by_token.get(t, {}).get(col)
+        for t, v in state.live.items():
+            mm = state.stats.get(t, {}).get(col)
             # None bounds (empty delta / all-NULL column) prove nothing
             # about the range — conservative keep, never a TypeError
             if (
@@ -780,7 +766,7 @@ class CommitLog:
             # once-in-many-suites [0, 0]-conflicts flake under load). With
             # next_v fixed first, any later-visible commit must itself take
             # next_v, which fails our link CAS and re-runs the check.
-            next_v = self._contiguous_head() + 1
+            next_v = self.head() + 1
             if read_version is not None:
                 # pure_add: the commit's file plan does not depend on the
                 # physical token layout — no removes to retire, no pinned
@@ -885,8 +871,7 @@ class CommitLog:
             spark,
             [
                 (v, token)
-                for v, m in self.snapshot(after=since)
-                if until is None or v <= until
+                for v, m in self.snapshot(after=since, until=until)
                 for token in m.get("adds", ())
             ],
         )
@@ -920,6 +905,39 @@ class CommitLog:
         dst.commit(adds, writer="clone", add_versions=add_versions)
         return dst
 
+    def transact(
+        self,
+        attempt: Callable[[int], dict | None],
+        *,
+        writer: str,
+        max_txn_retries: int = 8,
+    ) -> tuple[int | None, int]:
+        """The one optimistic-concurrency loop (Delta/Iceberg's abort-and-
+        retry): capture the head as the read version, call
+        ``attempt(read_version)`` — which derives and stages its deltas
+        against that snapshot and returns the ``commit`` keyword arguments
+        (``adds`` included), or None for nothing to do — and commit with
+        that read version. On ConcurrentKeyConflict — another writer
+        committed an overlapping footprint after our read — the staged
+        ``adds`` are dropped and the WHOLE attempt re-runs against the
+        winner's snapshot (re-read + re-derive), never blind-re-committed.
+        Returns (version won or None, n_conflicts suffered); raises
+        CommitConflict after ``max_txn_retries`` conflicts."""
+        for n_conflicts in range(max_txn_retries):
+            read_version = self.head()
+            kw = attempt(read_version)
+            if kw is None:
+                return None, n_conflicts
+            try:
+                won = self.commit(writer=writer, read_version=read_version, **kw)
+                return won, n_conflicts
+            except ConcurrentKeyConflict:
+                for d in kw["adds"]:  # stale — re-derive
+                    shutil.rmtree(d, ignore_errors=True)
+        raise CommitConflict(
+            f"transaction {writer!r} conflicted {max_txn_retries} times at {self.path}"
+        )
+
     def replace_where(
         self,
         spark: SparkSession,
@@ -935,46 +953,35 @@ class CommitLog:
         zero-extra-job ``observe`` on the staging write) is inserted.
         ``replacement=None`` is DELETE WHERE.
 
-        File-level plan: manifest stats split the live set — a file whose
-        [min, max] cannot intersect [lo, hi] is CARRIED FORWARD untouched
-        (never read, never rewritten, not even named in the commit); only
-        overlapping files are rewritten, each to a new token holding its
-        surviving out-of-range rows with ``add_versions`` pinning the
-        ORIGINAL resolution version, so cross-file per-key resolution is
-        bit-identical to before the rewrite. At 100 TB with key-clustered
-        files this touches O(files overlapping the predicate), not O(table)
-        — the same reason Delta's replaceWhere is the partition-overwrite
-        workhorse. The driver-side loop is over file TOKENS (metadata,
-        bounded by live-file count); each rewrite is a distributed job.
+        File-level plan: ``live_tokens_pruned`` splits the live set — a
+        file whose [min, max] cannot intersect [lo, hi] is CARRIED FORWARD
+        untouched (never read, never rewritten, not even named in the
+        commit); only overlapping files are rewritten, each to a new token
+        holding its surviving out-of-range rows with ``add_versions``
+        pinning the ORIGINAL resolution version, so cross-file per-key
+        resolution is bit-identical to before the rewrite. At 100 TB with
+        key-clustered files this touches O(files overlapping the
+        predicate), not O(table) — the same reason Delta's replaceWhere is
+        the partition-overwrite workhorse. The driver-side loop is over
+        file TOKENS (metadata, bounded by live-file count); each rewrite is
+        a distributed job.
 
-        Concurrency: the commit declares footprint {col: [lo, hi]} against
-        its read snapshot — disjoint-range writers interleave freely, a
-        same-range race aborts and re-derives (ConcurrentKeyConflict loop,
-        as compact). Returns {"version", "rewritten", "carried"}.
+        Concurrency: a ``transact`` attempt whose commit declares footprint
+        {col: [lo, hi]} against its read snapshot — disjoint-range writers
+        interleave freely, a same-range race aborts and re-derives.
+        Returns {"version", "rewritten", "carried"}.
         """
         from pyspark.sql import Observation
 
         pred = F.col(col).between(F.lit(lo), F.lit(hi))
-        for _ in range(max_txn_retries):
-            read_version = self._contiguous_head()
-            stats_by_token = self._stats_as_of(read_version)
-            overlapping, carried = [], 0
-            for v, t in self.live_tokens(as_of=read_version):
-                mm = stats_by_token.get(t, {}).get(col)
-                if (
-                    mm is not None
-                    and mm[0] is not None
-                    and mm[1] is not None
-                    and (mm[0] > hi or mm[1] < lo)
-                    # a file whose stats mark NULL keys may still need a
-                    # rewrite decision, but BETWEEN never matches NULL, so
-                    # its NULL rows survive either way; the numeric bounds
-                    # alone decide the skip
-                ):
-                    carried += 1  # provably disjoint: not read, not rewritten
-                else:
-                    overlapping.append((v, t))
-            adds, removes, add_versions, staged_dirs = [], [], {}, []
+        plan: dict = {}
+
+        def attempt(read_version: int) -> dict:
+            overlapping, carried = self.live_tokens_pruned(
+                col, lo, hi, as_of=read_version
+            )
+            plan.update(rewritten=len(overlapping), carried=carried)
+            adds, removes, add_versions = [], [], {}
             for v, t in overlapping:
                 # keep every row where pred is NOT TRUE: a NULL-keyed row
                 # evaluates BETWEEN to NULL, and filter(~pred) would drop
@@ -985,56 +992,45 @@ class CommitLog:
                         ~F.coalesce(pred, F.lit(False))
                     )
                 )
-                staged_dirs.append(staged)
                 adds.append(staged)
                 add_versions[os.path.basename(staged)] = v
                 removes.append(t)
             if replacement is not None:
                 obs = Observation()
-                staged = self.stage(
-                    replacement.observe(
-                        obs,
-                        # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
-                        F.sum(
-                            F.when(F.coalesce(pred, F.lit(False)), 0).otherwise(1)
-                        ).alias("violations"),
-                        F.count(F.lit(1)).alias("n"),
+                adds.append(  # resolves at commit version: wins range
+                    self.stage(
+                        replacement.observe(
+                            obs,
+                            # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
+                            F.sum(
+                                F.when(F.coalesce(pred, F.lit(False)), 0).otherwise(1)
+                            ).alias("violations"),
+                            F.count(F.lit(1)).alias("n"),
+                        )
                     )
                 )
-                staged_dirs.append(staged)
                 if (obs.get["violations"] or 0) > 0:
-                    for d in staged_dirs:
+                    for d in adds:
                         shutil.rmtree(d, ignore_errors=True)
                     raise ValueError(
                         f"replaceWhere replacement violates {col} BETWEEN "
                         f"{lo} AND {hi}: {obs.get['violations']} rows outside"
                     )
-                adds.append(staged)  # resolves at commit version: wins range
-            try:
-                won = self.commit(
-                    adds,
-                    removes=removes,
-                    writer="replace_where",
-                    read_version=read_version,
-                    # BETWEEN never matches NULL: the footprint provably
-                    # excludes the NULL key group (has_null=False), so
-                    # disjoint-range replace_where writers keep
-                    # interleaving freely under the NULL-aware overlap
-                    key_ranges={col: [lo, hi, False]},
-                    add_versions=add_versions or None,
-                )
-                return {
-                    "version": won,
-                    "rewritten": len(overlapping),
-                    "carried": carried,
-                }
-            except ConcurrentKeyConflict:
-                for d in staged_dirs:  # stale rewrite — re-derive
-                    shutil.rmtree(d, ignore_errors=True)
-                continue
-        raise CommitConflict(
-            f"replace_where conflicted {max_txn_retries} times at {self.path}"
+            return {
+                "adds": adds,
+                "removes": removes,
+                # BETWEEN never matches NULL: the footprint provably
+                # excludes the NULL key group (has_null=False), so
+                # disjoint-range replace_where writers keep interleaving
+                # freely under the NULL-aware overlap
+                "key_ranges": {col: [lo, hi, False]},
+                "add_versions": add_versions or None,
+            }
+
+        version, _ = self.transact(
+            attempt, writer="replace_where", max_txn_retries=max_txn_retries
         )
+        return {"version": version, **plan}
 
     def compact(
         self, spark: SparkSession, key_cols: list[str], max_txn_retries: int = 8
@@ -1044,41 +1040,31 @@ class CommitLog:
         retiring every input delta. Readers before the commit see the
         deltas; readers after see the compacted base; no reader ever sees
         both (the swap is the one manifest link). Returns the compaction
-        commit version.
+        commit version (None for an empty table).
 
-        Interleaved-writer safe (the check r5 documented as missing, now
-        wired through check_conflicts): the compaction commit declares NO
-        key footprint — it rewrites every key, so ANY commit landing after
-        its read snapshot conflicts — and on ConcurrentKeyConflict the
-        whole rewrite re-runs against the fresh snapshot. Without this, an
-        interleaved delta would survive in ``removes``-untouched form but
-        lose the per-key version race to the younger compacted base — a
-        silently vanished update. Same abort-and-retry loop as
-        Delta/Iceberg's OPTIMIZE."""
-        for _ in range(max_txn_retries):
-            read_version = self._contiguous_head()
-            if read_version < 0:
-                return None
+        Interleaved-writer safe: the compaction is a ``transact`` attempt
+        that declares NO key footprint — it rewrites every key, so ANY
+        commit landing after its read snapshot conflicts — and on
+        ConcurrentKeyConflict the whole rewrite re-runs against the fresh
+        snapshot. Without this, an interleaved delta would survive in
+        ``removes``-untouched form but lose the per-key version race to the
+        younger compacted base — a silently vanished update."""
+
+        def attempt(read_version: int) -> dict | None:
             live = self.live_tokens(as_of=read_version)
-            merged = self.read_latest_per_key(spark, key_cols, as_of=read_version)
-            if merged is None:
+            if not live:
                 return None
-            staged = self.stage(merged)
-            try:
-                return self.commit(
-                    [staged],
-                    removes=[t for _, t in live],
-                    writer="compact",
-                    read_version=read_version,
-                    key_ranges=None,  # a rewrite of ALL keys conflicts with any
-                    rearrange=True,  # ...but changes no logical state itself
-                )
-            except ConcurrentKeyConflict:
-                shutil.rmtree(staged, ignore_errors=True)  # stale — re-resolve
-                continue
-        raise CommitConflict(
-            f"compaction conflicted {max_txn_retries} times at {self.path}"
-        )
+            merged = self.read_latest_per_key(spark, key_cols, as_of=read_version)
+            return {
+                "adds": [self.stage(merged)],
+                "removes": [t for _, t in live],
+                "key_ranges": None,  # a rewrite of ALL keys conflicts with any
+                "rearrange": True,  # ...but changes no logical state itself
+            }
+
+        return self.transact(
+            attempt, writer="compact", max_txn_retries=max_txn_retries
+        )[0]
 
     def read_latest_per_key(
         self, spark: SparkSession, key_cols: list[str], as_of: int | None = None

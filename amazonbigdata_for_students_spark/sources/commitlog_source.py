@@ -6,11 +6,15 @@ stream — the "table as a change stream" pattern Delta/Iceberg users rely
 on for incremental ETL (reference comps. 10-11: long-term storage feeding
 downstream jobs without re-scans).
 
-Offsets ARE commit versions: ``latestOffset`` is one log listing,
-``partitions(start, end)`` maps each version in ``(start, end]`` to the
-data directories its manifest added — pure metadata on the driver, no row
-read at planning time — and each executor task reads exactly one delta
-directory via pyarrow, yielding Arrow record batches straight to the JVM.
+Offsets ARE commit versions, and the reader sees the log only through
+``CommitLog``: ``latestOffset`` is ``CommitLog.head()`` (one log listing),
+``partitions(start, end)`` maps each version of ``CommitLog.snapshot`` in
+``(start, end]`` to the data directories its manifest added — pure
+metadata on the driver, no row read at planning time — and each executor
+task reads exactly one delta directory via pyarrow, yielding Arrow record
+batches straight to the JVM. A retention-pruned log keeps streaming its
+retained range; a start offset below the horizon raises
+``ManifestsPruned`` rather than silently yielding nothing.
 The stream's schema is the Spark schema ``CommitLog.stage`` recorded for the
 first committed delta (``data/<token>/_schema.json``) plus
 ``_commit_version int``; a log whose deltas were staged without one is
@@ -20,15 +24,14 @@ the stream resumes from the committed version, so every commit is
 processed exactly once (``src_commitlog_stream`` drives this end to end
 with two availableNow runs over one checkpoint).
 
-At 100 TB: planning cost is O(#commits) JSON reads; read parallelism is
-one task per delta dir (compaction keeps that bounded); the stream never
-rewinds into compacted history because offsets advance monotonically with
-the log.
+At 100 TB: planning cost is O(#commits in the batch) JSON reads; read
+parallelism is one task per delta dir (compaction keeps that bounded); the
+stream never rewinds into compacted history because offsets advance
+monotonically with the log.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
@@ -39,7 +42,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import IntegerType, StructType
 
-from .commitlog import recorded_schema
+from .commitlog import CommitLog, recorded_schema
 
 
 class DeltaPartition(InputPartition):
@@ -53,37 +56,24 @@ class CommitLogStreamReader(DataSourceStreamReader):
         path = options.get("path")
         if not path:
             raise ValueError("commitlog source requires .option('path', <table dir>)")
-        self._commits_dir = os.path.join(path, "_commits")
-        self._data_dir = os.path.join(path, "data")
-
-    # -- log inspection (driver-side metadata only) -----------------------
-    def _snapshot(self) -> list[dict]:
-        manifests = []
-        for i, name in enumerate(sorted(os.listdir(self._commits_dir))):
-            if not name.endswith(".json"):
-                continue
-            if name != f"{i:012d}.json":
-                break  # contiguous prefix only — same torn-read guard as reads
-            with open(os.path.join(self._commits_dir, name)) as f:
-                manifests.append(json.load(f))
-        return manifests
+        self._log = CommitLog(path)
 
     def initialOffset(self) -> dict:
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        return {"version": len(self._snapshot()) - 1}
+        return {"version": self._log.head()}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        parts: list[InputPartition] = []
-        for m in self._snapshot():
-            v = m["version"]
-            if start["version"] < v <= end["version"]:
-                parts.extend(
-                    DeltaPartition(os.path.join(self._data_dir, t), v)
-                    for t in m.get("adds", ())
-                )
-        return parts
+        """One partition per delta added in (start, end]; a start below the
+        log-retention horizon raises ManifestsPruned."""
+        return [
+            DeltaPartition(os.path.join(self._log._data_dir, t), v)
+            for v, m in self._log.snapshot(
+                after=start["version"], until=end["version"]
+            )
+            for t in m.get("adds", ())
+        ]
 
     def read(self, partition: DeltaPartition) -> Iterator:
         """Executor-side: stream one delta dir as Arrow batches (never a
@@ -110,21 +100,18 @@ class CommitLogDataSource(DataSource):
     def schema(self) -> StructType:
         """The first committed delta's recorded schema plus the version
         column: the schema ``CommitLog.stage`` wrote, never a footer guess."""
-        log_path = self.options.get("path")
-        snap_dir = os.path.join(log_path, "_commits")
-        for name in sorted(os.listdir(snap_dir)):
-            if name.endswith(".json"):
-                with open(os.path.join(snap_dir, name)) as f:
-                    m = json.load(f)
-                if m.get("adds"):
-                    token_dir = os.path.join(log_path, "data", m["adds"][0])
-                    schema = recorded_schema(token_dir)
-                    if schema is None:
-                        raise ValueError(
-                            f"commitlog source: {token_dir} has no recorded "
-                            "schema; stage deltas with CommitLog.stage"
-                        )
-                    return schema.add("_commit_version", IntegerType())
+        log = CommitLog(self.options.get("path"))
+        for v in log._versions():
+            m = log.read_manifest(v)
+            if m.get("adds"):
+                token_dir = os.path.join(log._data_dir, m["adds"][0])
+                schema = recorded_schema(token_dir)
+                if schema is None:
+                    raise ValueError(
+                        f"commitlog source: {token_dir} has no recorded "
+                        "schema; stage deltas with CommitLog.stage"
+                    )
+                return schema.add("_commit_version", IntegerType())
         raise ValueError("commitlog source: empty log, cannot infer schema")
 
     def streamReader(self, schema) -> DataSourceStreamReader:

@@ -469,7 +469,7 @@ def test_replace_where_delete_only_pruning_and_guard(spark, tmp_path):
     bad = spark.createDataFrame([(50, 1)], "user_id bigint, v bigint")
     with pytest.raises(ValueError):
         log.replace_where(spark, "user_id", 0, 3, bad)
-    assert log._contiguous_head() == 2  # nothing committed
+    assert log.head() == 2  # nothing committed
 
     res = log.replace_where(spark, "user_id", 0, 3, None)  # pure delete
     assert (res["rewritten"], res["carried"]) == (2, 1)
@@ -610,7 +610,7 @@ def test_concurrent_writers_with_auto_checkpoint_races(spark, tmp_path):
     assert not errs
 
     log = CommitLog(path)
-    assert log._contiguous_head() == 23  # 24 commits, every version won once
+    assert log.head() == 23  # 24 commits, every version won once
     cks = os.listdir(os.path.join(path, "_checkpoints"))
     assert len(cks) >= 1  # at least the interval checkpoints landed
     fast = sorted(log.live_tokens())
@@ -644,6 +644,17 @@ def test_readd_after_remove_revives_token(spark, tmp_path):
     got = {r["user_id"]: r["v"] for r in log.read_latest_per_key(spark, ["user_id"]).collect()}
     assert got == {1: 10}
 
+    # one stats rule: a token re-added without stats has none, so a
+    # checkpoint folded after the re-add must not resurrect the old box
+    # and turn a kept file into a skipped one
+    log2 = CommitLog(str(tmp_path / "t2"))
+    log2.commit(["a"], stats={"a": {"k": [1, 1, False]}})
+    log2.commit([], removes=["a"])
+    log2.commit(["a"])
+    before = log2.live_tokens_pruned("k", 50, 60)
+    assert log2.write_checkpoint() == 2
+    assert log2.live_tokens_pruned("k", 50, 60) == before == ([(2, "a")], 0)
+
 
 def test_write_checkpoint_base_capped_at_head(spark, tmp_path):
     """A checkpoint stamped version H must be derived ONLY from commits
@@ -658,7 +669,7 @@ def test_write_checkpoint_base_capped_at_head(spark, tmp_path):
     assert log.write_checkpoint() == 8  # the "newer" checkpoint
 
     stalled = CommitLog(str(tmp_path / "t"))
-    stalled._contiguous_head = lambda: 5  # head read before the race
+    stalled.head = lambda: 5  # head read before the race
     assert stalled.write_checkpoint() == 5
 
     fresh = CommitLog(str(tmp_path / "t"))
@@ -692,7 +703,7 @@ def test_racing_full_rewrites_conflict_and_none_bounds_are_safe(spark, tmp_path)
     log.commit([s1])
 
     # simulate compaction B that read at v1, while compaction A lands v2
-    stale_read = log._contiguous_head()
+    stale_read = log.head()
     stale_live = [t for _, t in log.live_tokens()]
     assert log.compact(spark, ["user_id"]) == 2  # "A" wins
 
@@ -718,7 +729,7 @@ def test_racing_full_rewrites_conflict_and_none_bounds_are_safe(spark, tmp_path)
     ranges = log.stats_for(spark, empty, ["user_id"])
     assert ranges == {"user_id": [None, None, False]}
     assert log.commit(
-        [empty], read_version=log._contiguous_head(), key_ranges=ranges
+        [empty], read_version=log.head(), key_ranges=ranges
     ) is not None
     s2 = _stage_rows(spark, log, [(3, 30)])
     # conservative: the None-bounds commit counts as OVERLAPPING — a
@@ -726,13 +737,13 @@ def test_racing_full_rewrites_conflict_and_none_bounds_are_safe(spark, tmp_path)
     with pytest.raises(ConcurrentKeyConflict):
         log.commit(
             [s2],
-            read_version=log._contiguous_head() - 1,
+            read_version=log.head() - 1,
             key_ranges={"user_id": [3, 3]},
         )
     # and committing against the CURRENT head still works fine
     assert log.commit(
         [s2],
-        read_version=log._contiguous_head(),
+        read_version=log.head(),
         key_ranges={"user_id": [3, 3]},
     ) is not None
 
@@ -1086,3 +1097,31 @@ def test_stream_source_schema_is_the_recorded_one(spark, tmp_path):
     bare.commit([_stage_rows(spark, bare, [(1, 10)])])
     with pytest.raises(ValueError, match="CommitLog.stage"):
         CommitLogDataSource({"path": bare.path}).schema()
+
+
+def test_stream_source_reads_a_pruned_log(tmp_path):
+    """After log retention the stream's latest offset is still the log's
+    head, the retained range still yields its partitions, and a start
+    offset below the horizon is refused loudly instead of yielding
+    nothing."""
+    from amazonbigdata_for_students_spark.sources.commitlog import ManifestsPruned
+    from amazonbigdata_for_students_spark.sources.commitlog_source import (
+        CommitLogStreamReader,
+    )
+
+    log = CommitLog(str(tmp_path / "t"))
+    for i in range(4):
+        log.commit([f"t{i}"])
+    assert log.write_checkpoint() == 3
+    assert log.prune_manifests(keep_from=2) == [0, 1]
+
+    reader = CommitLogStreamReader({"path": log.path})
+    assert reader.latestOffset() == {"version": log.head()} == {"version": 3}
+    parts = reader.partitions({"version": 1}, {"version": 3})
+    assert [(p.version, os.path.basename(p.data_dir)) for p in parts] == [
+        (2, "t2"),
+        (3, "t3"),
+    ]
+    assert [p.version for p in reader.partitions({"version": 1}, {"version": 2})] == [2]
+    with pytest.raises(ManifestsPruned):
+        reader.partitions({"version": -1}, {"version": 3})

@@ -143,15 +143,19 @@ def test_checkpoint_fastpath_equals_full_replay(ops, batch_every):
     checkpoint fast path must produce the SAME live set as full log
     replay at EVERY as-of version — including as-of values below,
     at, and above each checkpoint — and committed_batch_ids must read
-    through checkpoints. The manifests are metadata-only here (tokens
-    never get data dirs), which is exactly the layer checkpointing
-    rewrites."""
+    through checkpoints. Adds carry min/max stats boxes for some tokens
+    (re-adds never do), and stats pruning must keep and skip the same
+    files as a copy of the log with its checkpoints deleted. The
+    manifests are metadata-only here (tokens never get data dirs), which
+    is exactly the layer checkpointing rewrites."""
+    import os
+    import shutil
     import tempfile
 
     from amazonbigdata_for_students_spark.sources.commitlog import CommitLog
 
     with tempfile.TemporaryDirectory() as d:
-        log = CommitLog(d)
+        log = CommitLog(os.path.join(d, "log"))
         counter = 0
         all_tokens: list[str] = []
         n_commits = 0
@@ -183,17 +187,37 @@ def test_checkpoint_fastpath_equals_full_replay(ops, batch_every):
             if kind == "add_pinned":
                 av = {t: -(i + 1) for i, t in enumerate(toks)}
             bid = n_commits if batch_every and n_commits % batch_every == 0 else None
-            log.commit(toks, add_versions=av, batch_id=bid)
+            # token tN's box is [10N, 10N + 5]; every third token has none
+            stats = {
+                t: {"k": [10 * int(t[1:]), 10 * int(t[1:]) + 5, False]}
+                for t in toks
+                if int(t[1:]) % 3
+            }
+            log.commit(toks, add_versions=av, batch_id=bid, stats=stats)
             n_commits += 1
 
-        head = log._contiguous_head()
+        head = log.head()
+        # the same log without its checkpoints: every read is a full replay
+        bare = CommitLog(
+            shutil.copytree(
+                log.path,
+                os.path.join(d, "bare"),
+                ignore=shutil.ignore_patterns("_checkpoints"),
+            )
+        )
         for as_of in [None, *range(head + 1)]:
             fast = sorted(log.live_tokens(as_of))
             slow = sorted(log.live_tokens(as_of, use_checkpoint=False))
             assert fast == slow, f"fork at as_of={as_of}"
+            for lo, hi in ((-10, -1), (10, 35)):
+                kept, skipped = log.live_tokens_pruned("k", lo, hi, as_of)
+                kept_b, skipped_b = bare.live_tokens_pruned("k", lo, hi, as_of)
+                assert (sorted(kept), skipped) == (sorted(kept_b), skipped_b), (
+                    f"pruning fork at as_of={as_of}, k in [{lo}, {hi}]"
+                )
 
         # batch ids must survive checkpoint folding for a fresh reader
-        fresh = CommitLog(d)
+        fresh = CommitLog(log.path)
         expect = {
             m["batch_id"]
             for _, m in log.snapshot()
