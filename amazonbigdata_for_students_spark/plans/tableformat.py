@@ -666,7 +666,6 @@ def merge_with_conflict_retry(
     key_cols: list[str],
     derive,
     writer: str,
-    max_txn_retries: int = 8,
     post_read_hook=None,
 ) -> tuple[int, int]:
     """One MERGE transaction as a ``CommitLog.transact`` attempt: read the
@@ -691,7 +690,7 @@ def merge_with_conflict_retry(
         staged = log.stage(derive(current))
         return {"adds": [staged], "key_ranges": log.stats_for(spark, staged, key_cols)}
 
-    return log.transact(attempt, writer=writer, max_txn_retries=max_txn_retries)
+    return log.transact(attempt, writer=writer)
 
 
 @query(
@@ -902,7 +901,7 @@ def acid_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
             "add_versions; unsupported by this fixture"
         )
     read_version = log.head()
-    data_dir = log._data_dir
+    data_dir = log.data_dir
     log.commit(
         [],
         removes=[f"{data_dir}/{t}" for t in sorted(head_live - target_live)],

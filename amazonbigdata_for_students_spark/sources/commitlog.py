@@ -74,6 +74,9 @@ _COMMITS = "_commits"
 _CHECKPOINTS = "_checkpoints"
 _DATA = "data"
 _SCHEMA = "_schema.json"
+# same-key conflicts a read-derive-commit transaction survives before
+# ``CommitLog.transact`` gives up with CommitConflict
+_MAX_TXN_RETRIES = 8
 
 
 def recorded_schema(token_dir: str) -> StructType | None:
@@ -124,7 +127,6 @@ class ConcurrentKeyConflict(RuntimeError):
 class _Replay(NamedTuple):
     """Table state at one version, from ``CommitLog._replay``."""
 
-    start: int  # checkpoint version the replay began after (-1: none)
     live: dict[str, int]  # token -> resolution version, in replay order
     batch_ids: set
     stats: dict[str, dict]  # live token -> its manifest stats ({}: none)
@@ -146,19 +148,19 @@ class CommitLog:
         self.path = path
         self._commits_dir = os.path.join(path, _COMMITS)
         self._checkpoints_dir = os.path.join(path, _CHECKPOINTS)
-        self._data_dir = os.path.join(path, _DATA)
+        self.data_dir = os.path.join(path, _DATA)
         # auto-checkpoint cadence: every N commits the winning writer also
         # writes a checkpoint (Delta's default is every 10). None = manual.
         self.checkpoint_interval = checkpoint_interval
         os.makedirs(self._commits_dir, exist_ok=True)
         os.makedirs(self._checkpoints_dir, exist_ok=True)
-        os.makedirs(self._data_dir, exist_ok=True)
+        os.makedirs(self.data_dir, exist_ok=True)
 
     # -- staging ----------------------------------------------------------
     def stage_dir(self, token: str | None = None) -> str:
         """Directory to write a (not-yet-visible) parquet delta into."""
         token = token or uuid.uuid4().hex
-        return os.path.join(self._data_dir, token)
+        return os.path.join(self.data_dir, token)
 
     def stage(self, df: DataFrame) -> str:
         """Write ``df`` as a fresh, not-yet-visible delta and record its
@@ -266,12 +268,11 @@ class CommitLog:
         ck = self._latest_checkpoint(as_of) if use_checkpoint else None
         start, c = ck or (-1, {})
         state = _Replay(
-            start,
             {t: int(v) for v, t in c.get("live", ())},
             set(c.get("batch_ids", ())),
             dict(c.get("stats", {})),
         )
-        for v, m in self.snapshot(after=state.start, until=as_of):
+        for v, m in self.snapshot(after=start, until=as_of):
             for t in m.get("removes", ()):
                 state.live.pop(t, None)
                 state.stats.pop(t, None)
@@ -417,9 +418,9 @@ class CommitLog:
             if retention_as_of is None or rv <= retention_as_of:
                 keep.discard(t)
         swept = []
-        for token in sorted(os.listdir(self._data_dir)):
+        for token in sorted(os.listdir(self.data_dir)):
             if token not in keep:
-                shutil.rmtree(os.path.join(self._data_dir, token))
+                shutil.rmtree(os.path.join(self.data_dir, token))
                 swept.append(token)
         return swept
 
@@ -754,7 +755,7 @@ class CommitLog:
         for _ in range(max_retries):
             if batch_id is not None and batch_id in self.committed_batch_ids():
                 for t in tokens:  # retry of an applied batch: drop the dup
-                    shutil.rmtree(os.path.join(self._data_dir, t), ignore_errors=True)
+                    shutil.rmtree(os.path.join(self.data_dir, t), ignore_errors=True)
                 return None
             # head-based, not listdir-max: on a retention-pruned log the
             # next version continues AFTER the checkpoint, never back-fills
@@ -841,7 +842,7 @@ class CommitLog:
         scan raises CANNOT_MERGE_SCHEMAS."""
         out = None
         for v, token in pairs:
-            part = _scan(spark, os.path.join(self._data_dir, token)).withColumn(
+            part = _scan(spark, os.path.join(self.data_dir, token)).withColumn(
                 "_commit_version", F.lit(v)
             )
             out = part if out is None else out.unionByName(part, allowMissingColumns=True)
@@ -895,7 +896,7 @@ class CommitLog:
         live.sort()
         adds, add_versions = [], {}
         for rank, (_, token) in enumerate(live):
-            sdir = os.path.join(self._data_dir, token)
+            sdir = os.path.join(self.data_dir, token)
             ddir = dst.stage_dir(token)
             os.makedirs(ddir, exist_ok=True)
             for fname in os.listdir(sdir):
@@ -910,7 +911,6 @@ class CommitLog:
         attempt: Callable[[int], dict | None],
         *,
         writer: str,
-        max_txn_retries: int = 8,
     ) -> tuple[int | None, int]:
         """The one optimistic-concurrency loop (Delta/Iceberg's abort-and-
         retry): capture the head as the read version, call
@@ -922,8 +922,8 @@ class CommitLog:
         ``adds`` are dropped and the WHOLE attempt re-runs against the
         winner's snapshot (re-read + re-derive), never blind-re-committed.
         Returns (version won or None, n_conflicts suffered); raises
-        CommitConflict after ``max_txn_retries`` conflicts."""
-        for n_conflicts in range(max_txn_retries):
+        CommitConflict after ``_MAX_TXN_RETRIES`` conflicts."""
+        for n_conflicts in range(_MAX_TXN_RETRIES):
             read_version = self.head()
             kw = attempt(read_version)
             if kw is None:
@@ -935,7 +935,7 @@ class CommitLog:
                 for d in kw["adds"]:  # stale — re-derive
                     shutil.rmtree(d, ignore_errors=True)
         raise CommitConflict(
-            f"transaction {writer!r} conflicted {max_txn_retries} times at {self.path}"
+            f"transaction {writer!r} conflicted {_MAX_TXN_RETRIES} times at {self.path}"
         )
 
     def replace_where(
@@ -945,7 +945,6 @@ class CommitLog:
         lo,
         hi,
         replacement: DataFrame | None,
-        max_txn_retries: int = 8,
     ) -> dict:
         """Predicate-scoped atomic overwrite (Delta ``replaceWhere``): in ONE
         commit, every live row with ``col BETWEEN lo AND hi`` is deleted and
@@ -988,7 +987,7 @@ class CommitLog:
                 # it — silently deleting the NULL key group the declared
                 # footprint promises not to touch
                 staged = self.stage(
-                    _scan(spark, os.path.join(self._data_dir, t)).filter(
+                    _scan(spark, os.path.join(self.data_dir, t)).filter(
                         ~F.coalesce(pred, F.lit(False))
                     )
                 )
@@ -1027,14 +1026,10 @@ class CommitLog:
                 "add_versions": add_versions or None,
             }
 
-        version, _ = self.transact(
-            attempt, writer="replace_where", max_txn_retries=max_txn_retries
-        )
+        version, _ = self.transact(attempt, writer="replace_where")
         return {"version": version, **plan}
 
-    def compact(
-        self, spark: SparkSession, key_cols: list[str], max_txn_retries: int = 8
-    ) -> int | None:
+    def compact(self, spark: SparkSession, key_cols: list[str]) -> int | None:
         """OPTIMIZE: rewrite the current live delta set as ONE resolved
         base (latest-per-key), committed atomically with remove-actions
         retiring every input delta. Readers before the commit see the
@@ -1062,9 +1057,7 @@ class CommitLog:
                 "rearrange": True,  # ...but changes no logical state itself
             }
 
-        return self.transact(
-            attempt, writer="compact", max_txn_retries=max_txn_retries
-        )[0]
+        return self.transact(attempt, writer="compact")[0]
 
     def read_latest_per_key(
         self, spark: SparkSession, key_cols: list[str], as_of: int | None = None

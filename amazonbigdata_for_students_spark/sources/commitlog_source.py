@@ -13,10 +13,14 @@ Offsets ARE commit versions, and the reader sees the log only through
 metadata on the driver, no row read at planning time — and each executor
 task reads exactly one delta directory via pyarrow, yielding Arrow record
 batches straight to the JVM. A retention-pruned log keeps streaming its
-retained range; a start offset below the horizon raises
-``ManifestsPruned`` rather than silently yielding nothing.
+retained range to a stream resumed at an offset at or above the horizon;
+a start offset below it raises ``ManifestsPruned`` rather than silently
+yielding nothing. So a NEW stream (initial offset -1) cannot start on a
+pruned log: its history before the horizon is gone, and its first batch
+raises ``ManifestsPruned``.
 The stream's schema is the Spark schema ``CommitLog.stage`` recorded for the
-first committed delta (``data/<token>/_schema.json``) plus
+oldest live delta (``data/<token>/_schema.json``, found by
+``CommitLog.live_tokens``, so a checkpoint-carried delta counts) plus
 ``_commit_version int``; a log whose deltas were staged without one is
 refused with a ``ValueError``.
 Version-granular offsets make recovery exact: after a checkpoint restart
@@ -68,7 +72,7 @@ class CommitLogStreamReader(DataSourceStreamReader):
         """One partition per delta added in (start, end]; a start below the
         log-retention horizon raises ManifestsPruned."""
         return [
-            DeltaPartition(os.path.join(self._log._data_dir, t), v)
+            DeltaPartition(os.path.join(self._log.data_dir, t), v)
             for v, m in self._log.snapshot(
                 after=start["version"], until=end["version"]
             )
@@ -98,21 +102,20 @@ class CommitLogDataSource(DataSource):
         return "commitlog"
 
     def schema(self) -> StructType:
-        """The first committed delta's recorded schema plus the version
-        column: the schema ``CommitLog.stage`` wrote, never a footer guess."""
+        """The oldest live delta's recorded schema plus the version column:
+        the schema ``CommitLog.stage`` wrote, never a footer guess."""
         log = CommitLog(self.options.get("path"))
-        for v in log._versions():
-            m = log.read_manifest(v)
-            if m.get("adds"):
-                token_dir = os.path.join(log._data_dir, m["adds"][0])
-                schema = recorded_schema(token_dir)
-                if schema is None:
-                    raise ValueError(
-                        f"commitlog source: {token_dir} has no recorded "
-                        "schema; stage deltas with CommitLog.stage"
-                    )
-                return schema.add("_commit_version", IntegerType())
-        raise ValueError("commitlog source: empty log, cannot infer schema")
+        live = log.live_tokens()
+        if not live:
+            raise ValueError("commitlog source: no live delta, cannot infer schema")
+        token_dir = os.path.join(log.data_dir, live[0][1])
+        schema = recorded_schema(token_dir)
+        if schema is None:
+            raise ValueError(
+                f"commitlog source: {token_dir} has no recorded "
+                "schema; stage deltas with CommitLog.stage"
+            )
+        return schema.add("_commit_version", IntegerType())
 
     def streamReader(self, schema) -> DataSourceStreamReader:
         return CommitLogStreamReader(self.options)

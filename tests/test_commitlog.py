@@ -156,6 +156,37 @@ def test_commit_conflict_raises_after_retry_budget(tmp_path):
             os.link = orig
 
 
+def test_transact_gives_up_after_retry_budget_and_drops_staged(tmp_path):
+    """A transaction whose every commit loses a same-key race re-derives a
+    bounded number of times, then raises CommitConflict — and no attempt's
+    staged delta is left behind in data/."""
+    from amazonbigdata_for_students_spark.sources.commitlog import (
+        _MAX_TXN_RETRIES,
+        ConcurrentKeyConflict,
+    )
+
+    log = CommitLog(str(tmp_path / "t"))
+    log.commit(["base"])
+    staged: list[str] = []
+
+    def attempt(read_version: int) -> dict:
+        assert read_version == 0
+        d = log.stage_dir()
+        os.makedirs(d)
+        staged.append(d)
+        return {"adds": [d], "key_ranges": {"k": [0, 1]}}
+
+    def jammed_commit(adds, **kw):
+        raise ConcurrentKeyConflict(1, "rival committed an overlapping footprint")
+
+    log.commit = jammed_commit
+    with pytest.raises(CommitConflict, match=f"'jam' conflicted {_MAX_TXN_RETRIES} times"):
+        log.transact(attempt, writer="jam")
+    assert len(staged) == _MAX_TXN_RETRIES
+    assert not any(os.path.exists(d) for d in staged)
+    assert log.head() == 0
+
+
 def test_stream_upsert_sink_has_no_driver_collect(spark):
     """Guard the round-5 rewrite: the upsert apply path must not collect
     batch rows to the driver (VERDICT r4 'what's wrong' 2)."""
@@ -354,7 +385,7 @@ def test_shallow_clone_zero_copy_and_isolation(spark, tmp_path):
     clone = src.clone_into(str(tmp_path / "dst"))
     # zero-copy: every cloned parquet file is a hard link (st_nlink == 2)
     for _, token in clone.live_tokens():
-        d = os.path.join(clone._data_dir, token)
+        d = os.path.join(clone.data_dir, token)
         assert all(os.stat(os.path.join(d, f)).st_nlink == 2 for f in os.listdir(d))
     # per-key resolution survived the clone: the upsert still wins
     assert {(r.user_id, r.v) for r in clone.read_latest_per_key(spark, ["user_id"]).collect()} == {(1, 10), (2, 21)}
@@ -1058,7 +1089,7 @@ def test_clone_links_the_schema_file(spark, tmp_path, jobs_in_group):
     src.commit([_stage_df(spark, src, [(1, 10), (2, 20)])])
     clone = src.clone_into(str(tmp_path / "dst"))
     for _, token in clone.live_tokens():
-        assert os.stat(os.path.join(clone._data_dir, token, "_schema.json")).st_nlink == 2
+        assert os.stat(os.path.join(clone.data_dir, token, "_schema.json")).st_nlink == 2
     assert jobs_in_group("commitlog_build_clone", lambda: clone.read(spark)) == 0
     assert {(r.user_id, r.v) for r in clone.read(spark).collect()} == {(1, 10), (2, 20)}
 
@@ -1073,8 +1104,8 @@ def test_vacuum_removes_swept_tokens_entirely(spark, tmp_path):
     swept = log.vacuum()
     assert len(swept) == 3
     live = {t for _, t in log.live_tokens()}
-    assert set(os.listdir(log._data_dir)) == live
-    assert all(not os.path.exists(os.path.join(log._data_dir, t)) for t in swept)
+    assert set(os.listdir(log.data_dir)) == live
+    assert all(not os.path.exists(os.path.join(log.data_dir, t)) for t in swept)
     assert [(r.user_id, r.v) for r in log.read(spark).collect()] == [(1, 11)]
 
 
@@ -1103,15 +1134,30 @@ def test_stream_source_reads_a_pruned_log(tmp_path):
     """After log retention the stream's latest offset is still the log's
     head, the retained range still yields its partitions, and a start
     offset below the horizon is refused loudly instead of yielding
-    nothing."""
+    nothing. Pruned up to its checkpoint with no commit after it, the log
+    keeps its live deltas only in the checkpoint: the schema still comes
+    from the oldest live delta and a stream resumed at the horizon picks
+    up the next commit."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from amazonbigdata_for_students_spark.sources.commitlog import ManifestsPruned
     from amazonbigdata_for_students_spark.sources.commitlog_source import (
+        CommitLogDataSource,
         CommitLogStreamReader,
     )
 
     log = CommitLog(str(tmp_path / "t"))
+    schema = StructType([StructField("user_id", LongType())])
+
+    def commit_with_schema(token: str) -> None:
+        d = log.stage_dir(token)
+        os.makedirs(d)
+        with open(os.path.join(d, "_schema.json"), "w") as f:
+            f.write(schema.json())
+        log.commit([d])
+
     for i in range(4):
-        log.commit([f"t{i}"])
+        commit_with_schema(f"t{i}")
     assert log.write_checkpoint() == 3
     assert log.prune_manifests(keep_from=2) == [0, 1]
 
@@ -1125,3 +1171,11 @@ def test_stream_source_reads_a_pruned_log(tmp_path):
     assert [p.version for p in reader.partitions({"version": 1}, {"version": 2})] == [2]
     with pytest.raises(ManifestsPruned):
         reader.partitions({"version": -1}, {"version": 3})
+
+    assert log.prune_manifests(keep_from=4) == [2, 3]
+    got = CommitLogDataSource({"path": log.path}).schema()
+    assert got.simpleString() == "struct<user_id:bigint,_commit_version:int>"
+    assert reader.latestOffset() == {"version": 3}
+    commit_with_schema("t4")
+    parts = reader.partitions({"version": 3}, reader.latestOffset())
+    assert [(p.version, os.path.basename(p.data_dir)) for p in parts] == [(4, "t4")]
