@@ -441,19 +441,25 @@ def _kcore_oracle() -> str:
     steps = []
     for i in range(1, _KCORE_ROUNDS + 1):
         steps.append(f"""
-    d{i} AS (
+    d{i} AS MATERIALIZED (
       SELECT n, count(*) AS d FROM (
         SELECT u AS n FROM e{i - 1} UNION ALL SELECT v AS n FROM e{i - 1}
       ) GROUP BY n
     ),
-    e{i} AS (
+    e{i} AS MATERIALIZED (
       SELECT u, v FROM e{i - 1}
       WHERE u IN (SELECT n FROM d{i} WHERE d >= {_KCORE_K})
         AND v IN (SELECT n FROM d{i} WHERE d >= {_KCORE_K})
     )""")
     r = _KCORE_ROUNDS
     return f"""
-    WITH e0 AS (
+    -- MATERIALIZED throughout: each peel round reads the previous
+    -- round's edges five times (once directly, and twice through each
+    -- of its two IN lists on d{{i}}, a UNION ALL of u and v); DuckDB 1.0
+    -- inlines plain CTEs per reference, which expands the 4-round chain
+    -- into ~2,600 copies of the lineitem self-join and runs out of
+    -- memory even at sf0.001 (the CTE-inlining lesson again)
+    WITH e0 AS MATERIALIZED (
       SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
       FROM lineitem a JOIN lineitem b
         ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
