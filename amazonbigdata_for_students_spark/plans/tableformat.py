@@ -8,10 +8,12 @@ operations every lakehouse exposes — time travel, CDC change feed,
 OPTIMIZE/compaction, VACUUM, and concurrent MERGE — each as a registered,
 DuckDB-oracle-checked query.
 
-All five share one deterministic fixture: a balances table evolving over
-three commits (base snapshot, then two update waves keyed on c_custkey
-modulo), rebuilt fresh every run so the commit protocol itself is
-exercised end-to-end, never a cached artifact. The evolution rules are
+Nine of them share one deterministic fixture: a balances table evolving
+over three commits (base snapshot, then two update waves keyed on
+c_custkey modulo), rebuilt fresh every run so the commit protocol itself
+is exercised end-to-end, never a cached artifact. The three deltas do not
+depend on each other, so they are staged together and then committed in
+order. The evolution rules are
 pure functions of the customer table, so every audit number — row counts,
 decimal-exact balance checksums per version, live-file counts, commit
 versions — is pinned by an exact SQL twin.
@@ -71,10 +73,14 @@ def _balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _build_three_commits(spark: SparkSession, sf_dir: str, name: str) -> CommitLog:
+def _build_three_commits(
+    spark: SparkSession, sf_dir: str, name: str, orphan: DataFrame | None = None
+) -> CommitLog:
+    """The three-commit evolution as versions 0-2 of a fresh log. An
+    ``orphan`` frame is staged in the same batch and never committed."""
     log = _fresh_log(sf_dir, name)
     base = _balances(spark, sf_dir)
-    for delta in (
+    deltas = [
         base,
         base.filter(F.col("c_custkey") % 10 == 0).withColumn(
             "bal", F.round(F.col("bal") + 100, 2)
@@ -82,8 +88,10 @@ def _build_three_commits(spark: SparkSession, sf_dir: str, name: str) -> CommitL
         base.filter(F.col("c_custkey") % 7 == 0).withColumn(
             "bal", F.round(F.col("bal") - 50, 2)
         ),
-    ):
-        log.commit([log.stage(delta)], writer=name)
+    ]
+    staged = log.stage_all(deltas + ([orphan] if orphan is not None else []))
+    for d in staged[:3]:
+        log.commit([d], writer=name)
     return log
 
 
@@ -230,10 +238,13 @@ def acid_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit pins the swept count exactly AND proves the live snapshot
     survived untouched (row count + decimal checksum unchanged after the
     sweep). Vacuum is pure local metadata + deletes — it never reads data
-    files, so at 100 TB its cost is a directory listing, not a scan."""
-    log = _build_three_commits(spark, sf_dir, "vacuum")
+    files, so at 100 TB its cost is a directory listing, not a scan. The
+    crashed writer is staged beside the three committed deltas, in the
+    same batch, and never committed."""
     # a crashed writer: staged data, no commit
-    log.stage(_balances(spark, sf_dir).limit(10))
+    log = _build_three_commits(
+        spark, sf_dir, "vacuum", orphan=_balances(spark, sf_dir).limit(10)
+    )
     log.compact(spark, ["c_custkey"])  # retires the 3 input deltas
     swept = log.vacuum()
     live_files = len(log.live_tokens())

@@ -38,6 +38,18 @@ correct kernel:
   (re-)added without stats has none. ``write_checkpoint`` serialises that
   same replay, so a checkpoint only ever speeds a read up, never changes
   its answer.
+* **Concurrent staging**: ``CommitLog.stage_all`` writes a commit's
+  independent deltas at the same time from a thread pool, because Spark's
+  fixed cost per write (planning, launch, job commit) is driver-side and
+  overlaps. That is safe because a staged dir stays invisible until a
+  manifest links it, and commits stay sequential and ordered: staging
+  order never decides a version.
+* **Resolved reads**: ``compact`` marks its output as resolved on its key
+  columns (a reserved ``resolved:`` entry on the per-token stats channel,
+  beside ``bloom:<col>``, so checkpoints carry it). A latest-per-key read
+  whose live set is exactly that one token, on the same keys, scans it
+  without the window: no sort and no shuffle. Any later commit, or a
+  re-add without stats (``clone_into``), brings the window back.
 * **One transaction loop**: ``CommitLog.transact`` owns optimistic
   concurrency for every read-derive-commit writer (compaction,
   ``replace_where``, MERGE): capture the head, let the caller's attempt
@@ -65,10 +77,12 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 _COMMITS = "_commits"
 _CHECKPOINTS = "_checkpoints"
@@ -77,6 +91,12 @@ _SCHEMA = "_schema.json"
 # same-key conflicts a read-derive-commit transaction survives before
 # ``CommitLog.transact`` gives up with CommitConflict
 _MAX_TXN_RETRIES = 8
+# writes ``stage_all`` runs at once. Not the task-slot count: the overlap
+# is each write's driver-side planning, launch and job commit, so one
+# thread per delta helps even when the slots are busy
+_STAGE_THREADS = 8
+# reserved stats entry: the key columns a token is already resolved on
+_RESOLVED = "resolved:"
 
 
 def recorded_schema(token_dir: str) -> StructType | None:
@@ -164,12 +184,40 @@ class CommitLog:
 
     def stage(self, df: DataFrame) -> str:
         """Write ``df`` as a fresh, not-yet-visible delta and record its
-        schema beside the data; returns the dir to pass to ``commit``."""
+        schema beside the data; returns the dir to pass to ``commit``. A
+        write that raises removes its partial dir."""
         staged = self.stage_dir()
-        df.write.mode("overwrite").parquet(staged)
-        with open(os.path.join(staged, _SCHEMA), "w") as f:
-            f.write(df.schema.json())
+        try:
+            df.write.mode("overwrite").parquet(staged)
+            with open(os.path.join(staged, _SCHEMA), "w") as f:
+                f.write(df.schema.json())
+        except Exception:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise
         return staged
+
+    def stage_all(self, dfs: list[DataFrame]) -> list[str]:
+        """``stage`` each of ``dfs`` at the same time; returns their dirs in
+        input order once every write has finished. The frames must not
+        depend on each other. Each thread runs under the caller's local
+        properties (job group, description, a stream's run id), captured
+        here. If any write raises, every dir this call staged is removed
+        and the first error (in input order) is re-raised."""
+        if not dfs:
+            return []
+        spark = dfs[0].sparkSession
+        with ThreadPoolExecutor(min(len(dfs), _STAGE_THREADS)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(self.stage), df)
+                for df in dfs
+            ]
+        errors = [f.exception() for f in futures if f.exception() is not None]
+        if errors:
+            for f in futures:
+                if f.exception() is None:
+                    shutil.rmtree(f.result(), ignore_errors=True)
+            raise errors[0]
+        return [f.result() for f in futures]
 
     # -- log inspection ---------------------------------------------------
     def _versions(self) -> list[int]:
@@ -980,41 +1028,41 @@ class CommitLog:
                 col, lo, hi, as_of=read_version
             )
             plan.update(rewritten=len(overlapping), carried=carried)
-            adds, removes, add_versions = [], [], {}
-            for v, t in overlapping:
-                # keep every row where pred is NOT TRUE: a NULL-keyed row
-                # evaluates BETWEEN to NULL, and filter(~pred) would drop
-                # it — silently deleting the NULL key group the declared
-                # footprint promises not to touch
-                staged = self.stage(
-                    _scan(spark, os.path.join(self.data_dir, t)).filter(
-                        ~F.coalesce(pred, F.lit(False))
-                    )
+            # keep every row where pred is NOT TRUE: a NULL-keyed row
+            # evaluates BETWEEN to NULL, and filter(~pred) would drop it —
+            # silently deleting the NULL key group the declared footprint
+            # promises not to touch
+            frames = [
+                _scan(spark, os.path.join(self.data_dir, t)).filter(
+                    ~F.coalesce(pred, F.lit(False))
                 )
-                adds.append(staged)
-                add_versions[os.path.basename(staged)] = v
-                removes.append(t)
+                for _, t in overlapping
+            ]
             if replacement is not None:
                 obs = Observation()
-                adds.append(  # resolves at commit version: wins range
-                    self.stage(
-                        replacement.observe(
-                            obs,
-                            # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
-                            F.sum(
-                                F.when(F.coalesce(pred, F.lit(False)), 0).otherwise(1)
-                            ).alias("violations"),
-                            F.count(F.lit(1)).alias("n"),
-                        )
+                frames.append(  # resolves at commit version: wins range
+                    replacement.observe(
+                        obs,
+                        # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
+                        F.sum(
+                            F.when(F.coalesce(pred, F.lit(False)), 0).otherwise(1)
+                        ).alias("violations"),
+                        F.count(F.lit(1)).alias("n"),
                     )
                 )
-                if (obs.get["violations"] or 0) > 0:
-                    for d in adds:
-                        shutil.rmtree(d, ignore_errors=True)
-                    raise ValueError(
-                        f"replaceWhere replacement violates {col} BETWEEN "
-                        f"{lo} AND {hi}: {obs.get['violations']} rows outside"
-                    )
+            adds = self.stage_all(frames)
+            add_versions = {
+                os.path.basename(staged): v
+                for staged, (v, _) in zip(adds, overlapping)
+            }
+            removes = [t for _, t in overlapping]
+            if replacement is not None and (obs.get["violations"] or 0) > 0:
+                for d in adds:
+                    shutil.rmtree(d, ignore_errors=True)
+                raise ValueError(
+                    f"replaceWhere replacement violates {col} BETWEEN "
+                    f"{lo} AND {hi}: {obs.get['violations']} rows outside"
+                )
             return {
                 "adds": adds,
                 "removes": removes,
@@ -1046,15 +1094,17 @@ class CommitLog:
         younger compacted base — a silently vanished update."""
 
         def attempt(read_version: int) -> dict | None:
-            live = self.live_tokens(as_of=read_version)
-            if not live:
+            state = self._replay(read_version)
+            if not state.live:
                 return None
-            merged = self.read_latest_per_key(spark, key_cols, as_of=read_version)
+            staged = self.stage(self._resolve(spark, state, key_cols))
             return {
-                "adds": [self.stage(merged)],
-                "removes": [t for _, t in live],
+                "adds": [staged],
+                "removes": list(state.live),
                 "key_ranges": None,  # a rewrite of ALL keys conflicts with any
                 "rearrange": True,  # ...but changes no logical state itself
+                # the base holds one row per key: reads may skip the window
+                "stats": {staged: {_RESOLVED: list(key_cols)}},
             }
 
         return self.transact(attempt, writer="compact")[0]
@@ -1064,8 +1114,20 @@ class CommitLog:
     ) -> DataFrame | None:
         """MERGE-on-read resolution: the highest-version row wins per key —
         one window over the key partitioning, the same shuffle the next
-        writer of a key-partitioned table needs anyway."""
-        df = self.read(spark, as_of)
+        writer of a key-partitioned table needs anyway. A live set that is
+        exactly one base ``compact`` resolved on the same keys is scanned
+        as it is."""
+        return self._resolve(spark, self._replay(as_of), key_cols)
+
+    def _resolve(
+        self, spark: SparkSession, state: _Replay, key_cols: list[str]
+    ) -> DataFrame | None:
+        """Latest-per-key rows of one replayed state (None if empty)."""
+        if len(state.live) == 1:
+            (token,) = state.live
+            if state.stats.get(token, {}).get(_RESOLVED) == list(key_cols):
+                return _scan(spark, os.path.join(self.data_dir, token))
+        df = self._read_tokens(spark, [(v, t) for t, v in state.live.items()])
         if df is None:
             return None
         w = W.partitionBy(*key_cols).orderBy(F.col("_commit_version").desc())

@@ -1040,7 +1040,7 @@ def stream_atomic_two_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE manifest CAS — a reader at any version sees both tables advanced
     by exactly the same batch prefix, never one without the other. Each
     micro-batch computes two aggregate deltas (hourly counts + per-type
-    totals) from the same raw rows, stages both executor-side, and
+    totals) from the same raw rows, stages both at once, and
     commits them together under the batchId (idempotence from the log,
     as stream_upsert_sink). The audit is structural AND data-level:
     every manifest must carry exactly 2 adds (atomic_pairs) and the two
@@ -1124,11 +1124,9 @@ def stream_atomic_two_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             bytype = batch_df.groupBy(
                 F.lit("bytype").alias("tbl"), F.col("event_type").alias("k")
             ).agg(F.count("*").alias("n"), dsum("value").alias("sv"))
-            staged_a = log.stage(hourly)
-            staged_b = log.stage(bytype)
             # ONE manifest, two adds: the cross-table atomicity point
             log.commit(
-                [staged_a, staged_b],
+                log.stage_all([hourly, bytype]),
                 batch_id=batch_id,
                 writer="stream_atomic_two_table_sink",
             )

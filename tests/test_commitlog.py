@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 
 import pytest
@@ -1179,3 +1180,149 @@ def test_stream_source_reads_a_pruned_log(tmp_path):
     commit_with_schema("t4")
     parts = reader.partitions({"version": 3}, reader.latestOffset())
     assert [(p.version, os.path.basename(p.data_dir)) for p in parts] == [(4, "t4")]
+
+
+def test_stage_all_returns_dirs_in_input_order(spark, tmp_path):
+    """stage_all writes every frame and returns its dir at the frame's
+    position, each with the schema stage() records."""
+    from amazonbigdata_for_students_spark.sources.commitlog import recorded_schema
+
+    log = CommitLog(str(tmp_path / "t"))
+    dfs = [spark.range(n).selectExpr("id AS user_id", f"{n} AS v") for n in (300, 1, 40, 7)]
+    dirs = log.stage_all(dfs)
+    assert len(set(dirs)) == len(dfs)
+    for n, d in zip((300, 1, 40, 7), dirs):
+        assert recorded_schema(d) == spark.range(1).selectExpr("id AS user_id", "1 AS v").schema
+        assert {r.v for r in spark.read.parquet(d).collect()} == {n}
+        assert spark.read.parquet(d).count() == n
+    assert log.stage_all([]) == []
+
+
+def test_stage_all_failure_removes_every_staged_dir(spark, tmp_path):
+    """One frame that raises mid-job: the error reaches the caller only
+    after the other writes finished, and none of the call's dirs remain."""
+    from pyspark.sql import functions as F
+
+    log = CommitLog(str(tmp_path / "t"))
+    good = spark.range(2000).repartition(4)
+    bad = spark.range(100).select(
+        F.when(F.col("id") == 50, F.raise_error(F.lit("stage_all boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="stage_all boom"):
+        log.stage_all([good, bad, good])
+    assert os.listdir(log.data_dir) == []
+
+
+def test_stage_all_jobs_land_in_the_callers_job_group(spark, tmp_path, jobs_in_group):
+    """The staging threads inherit the caller's local properties, so their
+    write jobs are attributed to the caller's job group."""
+    log = CommitLog(str(tmp_path / "t"))
+    dfs = [spark.range(10 * (i + 1)) for i in range(3)]
+    assert jobs_in_group("commitlog_stage_all", lambda: log.stage_all(dfs)) >= 3
+
+
+def test_stage_all_leaks_no_threads_and_warns_nothing(spark, tmp_path):
+    """Each call's pool threads end with the call, on the Python side and
+    in the JVM, and the session form of inheritable_thread_target raises
+    no missing-session warning."""
+    import warnings
+
+    log = CommitLog(str(tmp_path / "t"))
+    jvm = spark._jvm.java.lang.Thread
+    calls = 50
+
+    def run():
+        for d in log.stage_all([spark.range(5), spark.range(6)]):
+            shutil.rmtree(d)
+
+    for _ in range(10):  # Spark's own cached pools fill on the first writes
+        run()
+    py_before, jvm_before = threading.active_count(), jvm.activeCount()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for _ in range(calls):
+            run()
+    assert threading.active_count() == py_before
+    # a leak keeps at least one JVM thread per call; Spark's own pools
+    # may still move by a few
+    assert jvm.activeCount() - jvm_before < calls // 2
+    assert not [w for w in caught if "Spark session is not provided" in str(w.message)]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _resolved_log(spark, path, schema="user_id bigint, v bigint"):
+    """Two commits (key 2 updated), then compaction on user_id."""
+    log = CommitLog(path)
+    log.commit([_stage_df(spark, log, [(1, 10), (2, 20), (None, 5)], schema)])
+    log.commit([_stage_df(spark, log, [(2, 21), (3, 30)], schema)])
+    assert "Window" in _plan(log.read_latest_per_key(spark, ["user_id"]))
+    log.compact(spark, ["user_id"])
+    return log
+
+
+def _latest(spark, log):
+    return {tuple(r) for r in log.read_latest_per_key(spark, ["user_id"]).collect()}
+
+
+_WANT = {(None, 5), (1, 10), (2, 21), (3, 30)}
+
+
+def test_compacted_base_reads_without_window_or_exchange(spark, tmp_path):
+    """A live set that is exactly compact's base, read on the same keys,
+    is a plain scan: no Window and no Exchange, same rows. Other keys, an
+    older version and one more commit all run the window."""
+    log = _resolved_log(spark, str(tmp_path / "t"))
+    plan = _plan(log.read_latest_per_key(spark, ["user_id"]))
+    assert "Window" not in plan and "Exchange" not in plan
+    assert _latest(spark, log) == _WANT
+    assert "Window" in _plan(log.read_latest_per_key(spark, ["user_id", "v"]))
+    assert "Window" in _plan(log.read_latest_per_key(spark, ["user_id"], as_of=1))
+
+    log.commit([_stage_df(spark, log, [(1, 11)])])
+    assert "Window" in _plan(log.read_latest_per_key(spark, ["user_id"]))
+    assert _latest(spark, log) == {(None, 5), (1, 11), (2, 21), (3, 30)}
+
+
+def test_resolved_marker_survives_checkpoint_and_pruning(spark, tmp_path):
+    """The marker rides the stats channel: a checkpoint carries it, so a
+    read after the manifests are pruned still skips the window."""
+    log = _resolved_log(spark, str(tmp_path / "t"))
+    assert log.write_checkpoint() == 2
+    assert log.prune_manifests(keep_from=3) == [0, 1, 2]
+    plan = _plan(log.read_latest_per_key(spark, ["user_id"]))
+    assert "Window" not in plan and "Exchange" not in plan
+    assert _latest(spark, log) == _WANT
+
+
+def test_readd_without_stats_drops_the_resolved_marker(spark, tmp_path):
+    """A token re-added without stats has none, the marker included: a
+    clone and a re-add by hand both read through the window again, with
+    the same rows."""
+    log = _resolved_log(spark, str(tmp_path / "t"))
+    clone = log.clone_into(str(tmp_path / "clone"))
+    assert "Window" in _plan(clone.read_latest_per_key(spark, ["user_id"]))
+    assert _latest(spark, clone) == _WANT
+
+    ((_, token),) = log.live_tokens()
+    log.commit([os.path.join(log.data_dir, token)], removes=[token])
+    assert log.live_tokens() == [(3, token)]
+    assert "Window" in _plan(log.read_latest_per_key(spark, ["user_id"]))
+    assert _latest(spark, log) == _WANT
+
+
+def test_resolved_marker_leaves_pruning_and_point_reads_alone(spark, tmp_path):
+    """Stats-pruned and bloom point reads of a compacted log keep the base
+    (it has no column stats and no bloom), also for a column that carries
+    the marker's bare name."""
+    log = _resolved_log(spark, str(tmp_path / "t"), schema="user_id bigint, resolved bigint")
+    ((v, token),) = log.live_tokens()
+    for col in ("user_id", "resolved"):
+        assert log.live_tokens_pruned(col, 100, 200) == ([(v, token)], 0)
+    df, skipped = log.read_point(spark, "resolved", 21)
+    assert skipped == 0
+    assert [tuple(r) for r in df.collect()] == [(2, 21, v)]
