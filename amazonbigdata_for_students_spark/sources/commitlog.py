@@ -1040,7 +1040,7 @@ class CommitLog:
             ]
             if replacement is not None:
                 obs = Observation()
-                frames.append(  # resolves at commit version: wins range
+                frames.append(
                     replacement.observe(
                         obs,
                         # not-TRUE (incl. NULL key: BETWEEN never matches NULL)
@@ -1051,6 +1051,8 @@ class CommitLog:
                     )
                 )
             adds = self.stage_all(frames)
+            # zip stops before the replacement: it resolves at the commit
+            # version, so it wins the range
             add_versions = {
                 os.path.basename(staged): v
                 for staged, (v, _) in zip(adds, overlapping)
