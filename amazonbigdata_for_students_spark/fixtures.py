@@ -188,15 +188,6 @@ def reviews_df(spark, fx: Fixture):
     )
 
 
-def users_df(spark, fx: Fixture):
-    from . import schemas
-
-    return spark.createDataFrame(
-        [(u.user_ip, u.device_type, u.device_id, u.is_bot) for u in fx.users],
-        schemas.USERS,
-    )
-
-
 def items_df(spark, fx: Fixture):
     from pyspark.sql import functions as F
 

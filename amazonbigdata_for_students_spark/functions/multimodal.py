@@ -1,15 +1,15 @@
 """Multimodal (image/audio/video) column plumbing (north star).
 
 Media are opaque `binary` columns plus typed metadata. The Spark-side
-plumbing — schemas, partition sizing, mapInPandas batch shapes, UDF
-signatures — is real and tested; the actual codec calls are stubbed
-behind `Decoder` because the image/audio libraries are not in this
-container (a production deployment injects e.g. a Pillow/ffmpeg-backed
+plumbing — schemas, partition sizing, the one per-row Arrow transform
+(`map_rows`), UDF signatures — is real and tested; the actual codec calls
+are stubbed behind `Decoder` because the image/audio libraries are not in
+this container (a production deployment injects e.g. a Pillow/ffmpeg-backed
 Decoder with the same interface). `FakeDecoder` is deterministic so tests
 pin exact values.
 
 Scale notes: media rows are large and variable-sized — the loader
-repartitions by byte budget (not row count), and mapInPandas streams
+repartitions by byte budget (not row count), and `map_rows` streams
 Arrow batches so an executor never holds more than
 spark.sql.execution.arrow.maxRecordsPerBatch rows of media at once.
 """
@@ -17,12 +17,15 @@ spark.sql.execution.arrow.maxRecordsPerBatch rows of media at once.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import wave
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -36,14 +39,7 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content_sha256", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
+FEATURE_DDL = "media_id long not null, content_sha256 string, n_bytes long, feature array<float>"
 
 
 class Decoder:
@@ -78,9 +74,6 @@ class WavDecoder(Decoder):
         """(sample_rate, n_channels, duration_ms) parsed from the header;
         duration uses exact integer math (frames*1000 // rate) so an SQL
         oracle reproduces it bit-for-bit."""
-        import io
-        import wave
-
         with wave.open(io.BytesIO(content), "rb") as w:
             rate = w.getframerate()
             ch = w.getnchannels()
@@ -94,9 +87,6 @@ class WavDecoder(Decoder):
         decoded 16-bit PCM — the VAD-style gate speech pipelines run
         before feature extraction. Pure integer comparisons so an SQL
         oracle that reconstructs the PCM source reproduces it exactly."""
-        import io
-        import wave
-
         with wave.open(io.BytesIO(content), "rb") as w:
             pcm = w.readframes(w.getnframes())
         n = len(pcm) // 2
@@ -108,9 +98,6 @@ class WavDecoder(Decoder):
         return n, silent
 
     def decode_features(self, kind: str, mime: str, content: bytes, dim: int) -> np.ndarray:
-        import io
-        import wave
-
         with wave.open(io.BytesIO(content or b""), "rb") as w:
             rate = w.getframerate()
             ch = w.getnchannels()
@@ -194,9 +181,6 @@ def synth_wav(sample_rate: int, n_channels: int, n_frames: int, seed_bytes: byte
     """Deterministic 16-bit PCM WAV: n_frames frames whose samples tile
     seed_bytes — a real, `wave`-readable file built from stable inputs so
     distributed re-execution produces identical media."""
-    import io
-    import wave
-
     need = n_frames * n_channels * 2
     seed = seed_bytes or b"\x00\x01"
     pcm = (seed * (need // len(seed) + 1))[:need]
@@ -209,31 +193,54 @@ def synth_wav(sample_rate: int, n_channels: int, n_frames: int, seed_bytes: byte
     return buf.getvalue()
 
 
+def doc_ppm(text: str | None, n_chars: int) -> bytes:
+    """The image of one documents row: a (n_chars % 64 + 1) x
+    (n_chars % 48 + 1) PPM whose raster tiles the text's UTF-8 bytes —
+    the dimensions the image oracles recompute from the same columns."""
+    return synth_ppm(n_chars % 64 + 1, n_chars % 48 + 1, (text or "").encode("utf-8"))
+
+
+def doc_wav(doc_id: int, text: str | None, n_chars: int, mono: bool = False) -> bytes:
+    """The audio of one documents row: n_chars PCM frames tiling the text's
+    UTF-8 bytes, at 8000 + (doc_id % 4) * 4000 Hz with 1 + doc_id % 2
+    channels, or 8000 Hz mono with `mono`."""
+    rate, ch = (8000, 1) if mono else (8000 + doc_id % 4 * 4000, 1 + doc_id % 2)
+    return synth_wav(rate, ch, n_chars, (text or "").encode("utf-8"))
+
+
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]], ddl: str) -> DataFrame:
+    """The lane's one per-row Python transform: `fn(*row)` receives one row
+    of `df` as Python values (None for null) and yields zero or more
+    output tuples in the column order of the DDL string `ddl`. One
+    mapInArrow node: each Arrow batch is read with to_pylist and answered
+    with one RecordBatch typed by `ddl`, so no pandas frame is built either
+    way; the node is narrow, so the decode stays in the scan stage."""
+    schema = to_arrow_schema(T.StructType.fromDDL(ddl))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            rows = [out for row in zip(*(c.to_pylist() for c in b.columns)) for out in fn(*row)]
+            cols = list(zip(*rows)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+            )
+
+    return df.mapInArrow(run, ddl)
+
+
 def extract_features(
     media: DataFrame, decoder: Decoder, dim: int = 16
 ) -> DataFrame:
-    """Decode/feature-extract via mapInPandas: one Arrow batch of media
-    rows in, one batch of fixed-width feature rows out. The decoder rides
-    the closure (broadcast once per task)."""
+    """Decode/feature-extract through `map_rows`: one fixed-width feature
+    row per media row. The decoder rides the closure (shipped once per
+    task)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decoder.decode_features(k, m, c, dim)
-                for k, m, c in zip(pdf["kind"], pdf["mime"], pdf["content"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content_sha256": [
-                        hashlib.sha256(c or b"").hexdigest() for c in pdf["content"]
-                    ],
-                    "n_bytes": [len(c or b"") for c in pdf["content"]],
-                    "feature": feats,
-                }
-            )
+    def features(media_id, kind, mime, content):
+        c = content or b""
+        feature = decoder.decode_features(kind, mime, content, dim)
+        yield media_id, hashlib.sha256(c).hexdigest(), len(c), feature
 
-    return media.mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(media.select("media_id", "kind", "mime", "content"), features, FEATURE_DDL)
 
 
 def repartition_by_bytes(

@@ -3,16 +3,21 @@ binary + typed metadata).
 
 The container has no media codecs, so the *content* is deterministic fake
 media (documents.text encoded to bytes) — but every Spark-side mechanism
-under test is real: binary columns, typed metadata, Arrow-batched
-mapInPandas decode, byte-budget partitioning, UDTF-style frame expansion.
+under test is real: binary columns, typed metadata, per-row decode in
+Arrow batches (the one helper functions.multimodal.map_rows, each query
+keeping only its per-row body and output DDL), byte-budget partitioning,
+UDTF-style frame expansion.
 The DuckDB oracles recompute digests/lengths/frame grids straight from the
 documents table, so the binary plumbing is hash-checked end to end.
 """
 
 from __future__ import annotations
 
+import io
 import os
+import wave
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import multimodal
@@ -53,13 +58,13 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("U1", "F8"),
 )
 def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode / feature-extract over binary media via Arrow-batched
-    mapInPandas (functions.multimodal.extract_features): the FakeDecoder
-    stands in for the codec, and the digest + byte-length columns are
-    recomputed by the oracle from the source text — so batch shape, binary
-    round-trip, and UDF signature are all verified. The float feature
-    vector is dropped from the checked result (cross-engine float-array
-    hashing is not meaningful)."""
+    """Decode / feature-extract over binary media in Arrow batches through
+    the one per-row helper map_rows (functions.multimodal.extract_features):
+    the FakeDecoder stands in for the codec, and the digest + byte-length
+    columns are recomputed by the oracle from the source text — so batch
+    shape, binary round-trip, and UDF signature are all verified. The float
+    feature vector is dropped from the checked result (cross-engine
+    float-array hashing is not meaningful)."""
     media = multimodal.repartition_by_bytes(media_table(spark, sf_dir))
     feats = multimodal.extract_features(media, multimodal.FakeDecoder())
     return feats.select("media_id", "content_sha256", "n_bytes")
@@ -105,45 +110,23 @@ def mm_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     RIFF/WAV PCM file per audio doc (functions.multimodal.synth_wav —
     rate/channels/frames derived from stable doc columns, samples tiling
     the text bytes), then parse the BYTES back with the stdlib WavDecoder
-    inside Arrow-batched mapInPandas. The oracle recomputes
+    in Arrow batches through map_rows. The oracle recomputes
     rate/channels/duration from the same doc columns, so a header
     mis-write or mis-parse fails the hash — unlike the FakeDecoder
     queries, this one round-trips an actual codec."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 3 == 1
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("sample_rate", T.LongType()),
-            T.StructField("n_channels", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-        ]
-    )
     dec = multimodal.WavDecoder()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(pdf["doc_id"], pdf["text"], pdf["n_chars"]):
-                wav = multimodal.synth_wav(
-                    sample_rate=8000 + (doc_id % 4) * 4000,
-                    n_channels=1 + (doc_id % 2),
-                    n_frames=int(n_chars),
-                    seed_bytes=(text or "").encode("utf-8"),
-                )
-                rate, ch, dur = dec.decode_wav_stats(wav)
-                rows.append((doc_id, rate, ch, dur))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "sample_rate", "n_channels", "duration_ms"]
-            )
+    def stats(doc_id, text, n_chars):
+        yield (doc_id, *dec.decode_wav_stats(multimodal.doc_wav(doc_id, text, n_chars)))
 
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        stats,
+        "media_id long, sample_rate long, n_channels long, duration_ms long",
+    )
 
 
 @query(
@@ -194,48 +177,27 @@ def mm_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image RESIZE plumbing — the missing quarter of the decode /
     feature-extract / resize / frame-sample family: nearest-neighbor
     downsample of each image's pixel buffer to a fixed 16x12 thumbnail
-    inside Arrow-batched mapInPandas (numpy gather per batch — a real
+    in Arrow batches through map_rows (numpy gather per image — a real
     codec's decoded array plugs into the same seam). The pixel buffer is
     the deterministic fake media (content bytes tiled row-major into the
     metadata's w x h), source indices use pure integer math
     ((y*h)//12, (x*w)//16), and the oracle recomputes the sampled-pixel
     checksum straight from the text — so batch shape, byte round-trip,
     and the resize index mapping are all hash-verified."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     media = media_table(spark, sf_dir).filter(
         (F.col("kind") == "image") & (F.length("content") > 0)
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("out_w", T.LongType()),
-            T.StructField("out_h", T.LongType()),
-            T.StructField("px_checksum", T.LongType()),
-        ]
-    )
     OW, OH = 16, 12
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, content, w, h in zip(
-                pdf["media_id"], pdf["content"], pdf["width"], pdf["height"]
-            ):
-                buf = np.frombuffer(content, dtype=np.uint8)
-                img = np.resize(buf, (int(h), int(w)))  # row-major modular tiling
-                ys = (np.arange(OH) * int(h)) // OH
-                xs = (np.arange(OW) * int(w)) // OW
-                thumb = img[np.ix_(ys, xs)]
-                rows.append((media_id, OW, OH, int(thumb.sum(dtype=np.int64))))
-            yield pd.DataFrame(rows, columns=["media_id", "out_w", "out_h", "px_checksum"])
+    def thumbnail(media_id, content, w, h):
+        img = np.resize(np.frombuffer(content, dtype=np.uint8), (h, w))  # row-major modular tiling
+        thumb = img[np.ix_((np.arange(OH) * h) // OH, (np.arange(OW) * w) // OW)]
+        yield media_id, OW, OH, int(thumb.sum(dtype=np.int64))
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
-        run, out_schema
+    return multimodal.map_rows(
+        media.select("media_id", "content", "width", "height"),
+        thumbnail,
+        "media_id long, out_w long, out_h long, px_checksum long",
     )
 
 
@@ -256,18 +218,13 @@ def mm_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     media object, read back as (path, modificationTime, length, content)
     with media_id recovered from the file path. The fixture (one .bin per
     documents row with doc_id % 7 = 3, bytes = UTF-8 text) is written by
-    the executors via mapInPandas — no row ever passes through the driver,
+    the executors through map_rows — no row ever passes through the driver,
     the same layout a distributed media-landing job produces on shared
     storage. The oracle recomputes digest + byte length from the source
     table, so path parsing, the source's length metadata, and the binary
     content round-trip are all hash-checked. At 100 TB this scan
     parallelizes per-file (maxPartitionBytes packing) and carries only
     (path, content) columns — the digest/feature pass never shuffles."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources_ops import _build_window, _cache_dir, _mark
 
     d, ready, fp = _cache_dir(sf_dir, "binary_media", tables=("documents",))
@@ -279,18 +236,13 @@ def mm_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("doc_id") % 7 == 3
             )
 
-            def write_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                n = 0
-                for pdf in batches:
-                    for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                        with open(os.path.join(files_dir, f"{int(doc_id)}.bin"), "wb") as f:
-                            f.write((text or "").encode("utf-8"))
-                        n += 1
-                yield pd.DataFrame({"n": [n]})
+            def write_file(doc_id, text):
+                with open(os.path.join(files_dir, f"{doc_id}.bin"), "wb") as f:
+                    f.write((text or "").encode("utf-8"))
+                yield (1,)
 
             wrote = (
-                docs.select("doc_id", "text")
-                .mapInPandas(write_files, T.StructType([T.StructField("n", T.LongType())]))
+                multimodal.map_rows(docs.select("doc_id", "text"), write_file, "n long")
                 .agg(F.sum("n"))
                 .collect()[0][0]
             )
@@ -333,42 +285,25 @@ def mm_ppm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode through the Decoder seam — the image counterpart
     of mm_wav_stats: synthesize a valid binary PPM (P6) per image doc
     (raster = text bytes tiled to w*h*3, dimensions from stable columns),
-    then parse the BYTES back with the stdlib PpmDecoder inside
-    Arrow-batched mapInPandas: header tokenization, raster read, and an
+    then parse the BYTES back with the stdlib PpmDecoder in Arrow
+    batches through map_rows: header tokenization, raster read, and an
     integer pixel-byte sum. The oracle recomputes width/height/sum
     straight from the doc columns (tiling = whole cycles of the text's
     byte sum + a prefix), so a mis-written header, a short raster, or an
     off-by-one in the parse all fail the hash."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 0) & (F.col("n_chars") > 0)
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("px_sum", T.LongType()),
-        ]
-    )
     dec = multimodal.PpmDecoder()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(pdf["doc_id"], pdf["text"], pdf["n_chars"]):
-                w = int(n_chars) % 64 + 1
-                h = int(n_chars) % 48 + 1
-                ppm = multimodal.synth_ppm(w, h, (text or "").encode("utf-8"))
-                pw, ph, psum = dec.decode_ppm_stats(ppm)
-                rows.append((doc_id, pw, ph, psum))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "px_sum"])
+    def stats(doc_id, text, n_chars):
+        yield (doc_id, *dec.decode_ppm_stats(multimodal.doc_ppm(text, n_chars)))
 
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        stats,
+        "media_id long, width long, height long, px_sum long",
+    )
 
 
 @query(
@@ -392,79 +327,36 @@ def mm_wav_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     then decode the RE-ENCODED bytes and verify they reproduce the
     decimated samples exactly (roundtrip_ok). This is the media-transform
     shape (decode → array op → encode) every multimodal pipeline stage
-    follows, Arrow-batched in mapInPandas; the oracle pins the output
+    follows, in Arrow batches through map_rows; the oracle pins the output
     rate/frame/duration arithmetic, and the round-trip boolean is the
     codec-integrity audit the hash gate enforces."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 3 == 1
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("out_rate", T.LongType()),
-            T.StructField("out_frames", T.LongType()),
-            T.StructField("out_duration_ms", T.LongType()),
-            T.StructField("roundtrip_ok", T.BooleanType()),
-        ]
+
+    def decimate(doc_id, text, n_chars):
+        wav = multimodal.doc_wav(doc_id, text, n_chars)
+        with wave.open(io.BytesIO(wav), "rb") as r:
+            rate, ch, frames = r.getframerate(), r.getnchannels(), r.getnframes()
+            pcm = np.frombuffer(r.readframes(frames), dtype="<i2").reshape(frames, ch)
+        dec = pcm[::2]  # keep even frames: 2:1 decimation
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(ch)
+            w.setsampwidth(2)
+            w.setframerate(rate // 2)
+            w.writeframes(dec.tobytes())
+        with wave.open(io.BytesIO(buf.getvalue()), "rb") as r2:
+            rate2, frames2 = r2.getframerate(), r2.getnframes()
+            pcm2 = np.frombuffer(r2.readframes(frames2), dtype="<i2").reshape(frames2, ch)
+        ok = bool(frames2 == dec.shape[0] and np.array_equal(pcm2, dec))
+        yield doc_id, rate2, frames2, (frames2 * 1000) // rate2, ok
+
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        decimate,
+        "media_id long, out_rate long, out_frames long, out_duration_ms long, roundtrip_ok boolean",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(
-                pdf["doc_id"], pdf["text"], pdf["n_chars"]
-            ):
-                rate = 8000 + (doc_id % 4) * 4000
-                ch = 1 + (doc_id % 2)
-                wav = multimodal.synth_wav(
-                    sample_rate=rate,
-                    n_channels=ch,
-                    n_frames=int(n_chars),
-                    seed_bytes=(text or "").encode("utf-8"),
-                )
-                with wave.open(io.BytesIO(wav), "rb") as r:
-                    frames = r.getnframes()
-                    pcm = np.frombuffer(r.readframes(frames), dtype="<i2").reshape(
-                        frames, ch
-                    )
-                dec = pcm[::2]  # keep even frames: 2:1 decimation
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(ch)
-                    w.setsampwidth(2)
-                    w.setframerate(rate // 2)
-                    w.writeframes(dec.tobytes())
-                with wave.open(io.BytesIO(buf.getvalue()), "rb") as r2:
-                    rate2 = r2.getframerate()
-                    frames2 = r2.getnframes()
-                    pcm2 = np.frombuffer(
-                        r2.readframes(frames2), dtype="<i2"
-                    ).reshape(frames2, ch)
-                ok = bool(frames2 == dec.shape[0] and np.array_equal(pcm2, dec))
-                rows.append(
-                    (doc_id, rate2, frames2, (frames2 * 1000) // rate2, ok)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "out_rate",
-                    "out_frames",
-                    "out_duration_ms",
-                    "roundtrip_ok",
-                ],
-            )
-
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
 
 
 _PATCH = 8  # ViT-style square patch edge, in pixels
@@ -509,7 +401,7 @@ def mm_patchify_vit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count and integer byte sum (the stand-in for the patch embedding —
     the real projection slots into the same batch shape). Decoding goes
     through the REAL stdlib PPM codec's full-raster path
-    (PpmDecoder.decode_ppm_raster) inside Arrow-batched mapInPandas;
+    (PpmDecoder.decode_ppm_raster) in Arrow batches through map_rows;
     per-patch sums are numpy slice reductions. The oracle recomputes
     every patch sum from the text-tiling definition of the synthetic
     raster, so a wrong stride, a mis-shaped reshape, or an edge-patch
@@ -517,52 +409,24 @@ def mm_patchify_vit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out: rows multiply by the patch grid INSIDE the scan stage (no
     shuffle added), Arrow batch size bounds executor memory, and the
     byte-budget repartition upstream keeps partitions even."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 0) & (F.col("n_chars") > 0)
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("patch_row", T.LongType()),
-            T.StructField("patch_col", T.LongType()),
-            T.StructField("n_px", T.LongType()),
-            T.StructField("patch_sum", T.LongType()),
-        ]
     )
     dec = multimodal.PpmDecoder()
     p = _PATCH
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(pdf["doc_id"], pdf["text"], pdf["n_chars"]):
-                w = int(n_chars) % 64 + 1
-                h = int(n_chars) % 48 + 1
-                ppm = multimodal.synth_ppm(w, h, (text or "").encode("utf-8"))
-                pw, ph, raster = dec.decode_ppm_raster(ppm)
-                for py in range((ph + p - 1) // p):
-                    for px in range((pw + p - 1) // p):
-                        tile = raster[py * p : (py + 1) * p, px * p : (px + 1) * p, :]
-                        rows.append(
-                            (
-                                doc_id,
-                                py,
-                                px,
-                                tile.shape[0] * tile.shape[1],
-                                int(tile.sum(dtype=np.int64)),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "patch_row", "patch_col", "n_px", "patch_sum"]
-            )
+    def patches(doc_id, text, n_chars):
+        pw, ph, raster = dec.decode_ppm_raster(multimodal.doc_ppm(text, n_chars))
+        for py in range((ph + p - 1) // p):
+            for px in range((pw + p - 1) // p):
+                tile = raster[py * p : (py + 1) * p, px * p : (px + 1) * p, :]
+                yield doc_id, py, px, tile.shape[0] * tile.shape[1], int(tile.sum(dtype=np.int64))
 
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        patches,
+        "media_id long, patch_row long, patch_col long, n_px long, patch_sum long",
+    )
 
 
 @query(
@@ -625,54 +489,36 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_n > total_sum * block_n cross-multiplies in int64, so the
     64-bit fingerprint is bit-identical across engines and the oracle
     hash-gates every bit (emitted as the bit string, row-major). Decode
-    runs through the REAL stdlib PPM codec inside Arrow-batched
-    mapInPandas; per-block sums are numpy slice reductions. At 100 TB
+    runs through the REAL stdlib PPM codec in Arrow batches through
+    map_rows; per-block sums are numpy slice reductions. At 100 TB
     this is a map-only scan fan-out — 64 small rows per image inside the
     scan stage, then one per-image aggregate."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 0) & (F.col("n_chars") > 0)
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("ahash_bits", T.StringType()),
-            T.StructField("n_bright", T.LongType()),
-        ]
-    )
     dec = multimodal.PpmDecoder()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(pdf["doc_id"], pdf["text"], pdf["n_chars"]):
-                w = int(n_chars) % 64 + 1
-                h = int(n_chars) % 48 + 1
-                ppm = multimodal.synth_ppm(w, h, (text or "").encode("utf-8"))
-                _, _, raster = dec.decode_ppm_raster(ppm)
-                r64 = raster.astype(np.int64)
-                s_t = int(r64.sum())
-                n_t = h * w * 3
-                bits = []
-                for by in range(8):
-                    y0, y1 = (by * h) // 8, ((by + 1) * h) // 8
-                    for bx in range(8):
-                        x0, x1 = (bx * w) // 8, ((bx + 1) * w) // 8
-                        blk = r64[y0:y1, x0:x1, :]
-                        n_b = blk.size
-                        s_b = int(blk.sum())
-                        bits.append(
-                            "1" if n_b > 0 and s_b * n_t > s_t * n_b else "0"
-                        )
-                rows.append((doc_id, "".join(bits), sum(c == "1" for c in bits)))
-            yield pd.DataFrame(rows, columns=["media_id", "ahash_bits", "n_bright"])
+    def ahash(doc_id, text, n_chars):
+        w, h, raster = dec.decode_ppm_raster(multimodal.doc_ppm(text, n_chars))
+        r64 = raster.astype(np.int64)
+        s_t = int(r64.sum())
+        n_t = h * w * 3
+        bits = []
+        for by in range(8):
+            y0, y1 = (by * h) // 8, ((by + 1) * h) // 8
+            for bx in range(8):
+                x0, x1 = (bx * w) // 8, ((bx + 1) * w) // 8
+                blk = r64[y0:y1, x0:x1, :]
+                n_b = blk.size
+                s_b = int(blk.sum())
+                bits.append("1" if n_b > 0 and s_b * n_t > s_t * n_b else "0")
+        yield doc_id, "".join(bits), bits.count("1")
 
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        ahash,
+        "media_id long, ahash_bits string, n_bright long",
+    )
 
 
 _FRAME_CHARS = 100  # chars per synthetic video frame
@@ -832,73 +678,36 @@ def mm_goertzel_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle rebuilds the identical sample stream from the documents
     bytes (PCM tiles the UTF-8 text; printable-ASCII corpus, so
     char ascii == byte) and runs the same recurrence as a 64-step
-    recursive CTE. Arrow-batched mapInPandas; per-doc cost is O(64) —
+    recursive CTE. Arrow batches through map_rows; per-doc cost is O(64) —
     scan-bound at any scale, no shuffle at all."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 2) & (F.col("n_chars") > 0)
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("p_low", T.LongType()),
-            T.StructField("p_high", T.LongType()),
-            T.StructField("dominant_band", T.StringType()),
-        ]
-    )
     c_low, c_high, N = _GZ_C_LOW, _GZ_C_HIGH, _GZ_N
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def tone(doc_id, text, n_chars):
+        wav = multimodal.doc_wav(doc_id, text, n_chars, mono=True)
+        with wave.open(io.BytesIO(wav), "rb") as r:
+            pcm = np.frombuffer(r.readframes(r.getnframes()), dtype="<i2")
+        xs = [int(v) for v in pcm[:N]]
+        s1a = s2a = s1b = s2b = 0
+        for i, v in enumerate(xs):
+            if i == 0:
+                s1a = s1b = v
+                continue
+            na = v + _tdiv(c_low * s1a, 16384) - s2a
+            nb = v + _tdiv(c_high * s1b, 16384) - s2b
+            s2a, s1a = s1a, na
+            s2b, s1b = s1b, nb
+        p_low = s1a * s1a + s2a * s2a - _tdiv(c_low * s1a, 16384) * s2a
+        p_high = s1b * s1b + s2b * s2b - _tdiv(c_high * s1b, 16384) * s2b
+        yield doc_id, len(xs), p_low, p_high, "low" if p_low >= p_high else "high"
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(
-                pdf["doc_id"], pdf["text"], pdf["n_chars"]
-            ):
-                wav = multimodal.synth_wav(
-                    sample_rate=8000,
-                    n_channels=1,
-                    n_frames=int(n_chars),
-                    seed_bytes=(text or "").encode("utf-8"),
-                )
-                with wave.open(io.BytesIO(wav), "rb") as r:
-                    frames = r.getnframes()
-                    pcm = np.frombuffer(r.readframes(frames), dtype="<i2")
-                xs = [int(v) for v in pcm[:N]]
-                s1a = s2a = s1b = s2b = 0
-                for i, v in enumerate(xs):
-                    if i == 0:
-                        s1a = s1b = v
-                        continue
-                    na = v + _tdiv(c_low * s1a, 16384) - s2a
-                    nb = v + _tdiv(c_high * s1b, 16384) - s2b
-                    s2a, s1a = s1a, na
-                    s2b, s1b = s1b, nb
-                p_low = s1a * s1a + s2a * s2a - _tdiv(c_low * s1a, 16384) * s2a
-                p_high = s1b * s1b + s2b * s2b - _tdiv(c_high * s1b, 16384) * s2b
-                rows.append(
-                    (
-                        doc_id,
-                        len(xs),
-                        p_low,
-                        p_high,
-                        "low" if p_low >= p_high else "high",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "p_low", "p_high", "dominant_band"],
-            )
-
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        tone,
+        "media_id long, n_samples long, p_low long, p_high long, dominant_band string",
+    )
 
 
 @query(
@@ -960,54 +769,34 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     may be empty for tiny rasters; a bit is set only when BOTH cells
     are non-empty), and the mean comparison cross-multiplies in int64
     (s_l*n_r > s_r*n_l) so no division ever happens. Decode runs the
-    real stdlib PPM codec in Arrow-batched mapInPandas; cell sums are
+    real stdlib PPM codec in Arrow batches through map_rows; cell sums are
     numpy slice reductions. Map-only at any scale."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 0) & (F.col("n_chars") > 0)
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("dhash_bits", T.StringType()),
-            T.StructField("n_set", T.LongType()),
-        ]
-    )
     dec = multimodal.PpmDecoder()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(pdf["doc_id"], pdf["text"], pdf["n_chars"]):
-                w = int(n_chars) % 64 + 1
-                h = int(n_chars) % 48 + 1
-                ppm = multimodal.synth_ppm(w, h, (text or "").encode("utf-8"))
-                _, _, raster = dec.decode_ppm_raster(ppm)
-                r64 = raster.astype(np.int64)
-                bits = []
-                for cy in range(8):
-                    y0, y1 = (cy * h) // 8, ((cy + 1) * h) // 8
-                    sums = []
-                    for cx in range(9):
-                        x0, x1 = (cx * w) // 9, ((cx + 1) * w) // 9
-                        blk = r64[y0:y1, x0:x1, :]
-                        sums.append((int(blk.sum()), blk.size))
-                    for cx in range(8):
-                        (s_l, n_l), (s_r, n_r) = sums[cx], sums[cx + 1]
-                        bits.append(
-                            "1"
-                            if n_l > 0 and n_r > 0 and s_l * n_r > s_r * n_l
-                            else "0"
-                        )
-                rows.append((doc_id, "".join(bits), sum(c == "1" for c in bits)))
-            yield pd.DataFrame(rows, columns=["media_id", "dhash_bits", "n_set"])
+    def dhash(doc_id, text, n_chars):
+        w, h, raster = dec.decode_ppm_raster(multimodal.doc_ppm(text, n_chars))
+        r64 = raster.astype(np.int64)
+        bits = []
+        for cy in range(8):
+            y0, y1 = (cy * h) // 8, ((cy + 1) * h) // 8
+            sums = []
+            for cx in range(9):
+                x0, x1 = (cx * w) // 9, ((cx + 1) * w) // 9
+                blk = r64[y0:y1, x0:x1, :]
+                sums.append((int(blk.sum()), blk.size))
+            for cx in range(8):
+                (s_l, n_l), (s_r, n_r) = sums[cx], sums[cx + 1]
+                bits.append("1" if n_l > 0 and n_r > 0 and s_l * n_r > s_r * n_l else "0")
+        yield doc_id, "".join(bits), bits.count("1")
 
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        dhash,
+        "media_id long, dhash_bits string, n_set long",
+    )
 
 
 _SILENCE_THRESHOLD = 16384  # |int16| < 2^14 counts as silence (VAD gate)
@@ -1048,48 +837,23 @@ def mm_wav_silence_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-write, frame mis-count, or endianness slip anywhere in the
     synth/decode round-trip flips the hash.
 
-    Scale: one mapInPandas over the audio docs (Arrow-batched, media
+    Scale: one map_rows pass over the audio docs (Arrow batches, media
     never leaves the scan stage); output is 3 integers per file. The
     decode loop is per-file Python over bounded PCM (n_chars*ch
     samples) — the codec seam a production deployment swaps for a
     vectorized VAD."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     docs = readers.load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 1) & (F.length("text") > 0)
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("n_silent", T.LongType()),
-            T.StructField("silence_ppm", T.LongType()),
-        ]
-    )
     dec = multimodal.WavDecoder()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, n_chars in zip(
-                pdf["doc_id"], pdf["text"], pdf["n_chars"]
-            ):
-                wav = multimodal.synth_wav(
-                    sample_rate=8000 + (doc_id % 4) * 4000,
-                    n_channels=1 + (doc_id % 2),
-                    n_frames=int(n_chars),
-                    seed_bytes=(text or "").encode("utf-8"),
-                )
-                n, silent = dec.decode_wav_silence(wav, _SILENCE_THRESHOLD)
-                rows.append(
-                    (doc_id, n, silent, silent * 1_000_000 // n if n else 0)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "n_silent", "silence_ppm"],
-            )
+    def silence(doc_id, text, n_chars):
+        wav = multimodal.doc_wav(doc_id, text, n_chars)
+        n, silent = dec.decode_wav_silence(wav, _SILENCE_THRESHOLD)
+        yield doc_id, n, silent, silent * 1_000_000 // n if n else 0
 
-    return docs.select("doc_id", "text", "n_chars").mapInPandas(run, out_schema)
+    return multimodal.map_rows(
+        docs.select("doc_id", "text", "n_chars"),
+        silence,
+        "media_id long, n_samples long, n_silent long, silence_ppm long",
+    )

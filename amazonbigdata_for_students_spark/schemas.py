@@ -183,15 +183,6 @@ ITEMS = T.StructType(  # generator.py:80-84,110-114
     ]
 )
 
-USERS = T.StructType(  # generator.py:71-77,100-107; is_bot is ground truth
-    [
-        T.StructField("user_ip", T.StringType()),
-        T.StructField("device_type", T.StringType()),
-        T.StructField("device_id", T.StringType()),
-        T.StructField("is_bot", T.BooleanType()),
-    ]
-)
-
 SUSPICIOUS_IPS = T.StructType(  # FIXTURES.md §A5; diagram comp. 5 (KV+TTL)
     [
         T.StructField("user_ip", T.StringType()),

@@ -104,6 +104,29 @@ SHAPES = {
 }
 
 
+def _await_tasks_done(spark: SparkSession, group: str, timeout_sec: float = 60.0) -> None:
+    """Block until no task of Spark job group ``group`` is still running.
+    A streaming query runs its jobs under its run id as the job group;
+    ``stop()`` cancels them but returns before their killed tasks end, and
+    those tasks can still be writing state-store files under the
+    checkpoint, so removing it then fails with ``Directory not empty``.
+    Raises TimeoutError when tasks outlive ``timeout_sec``."""
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + timeout_sec
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        stages = [tracker.getStageInfo(s) for j in jobs if j for s in j.stageIds]
+        running = sum(j.status == "RUNNING" for j in jobs if j)
+        running += sum(s.numActiveTasks for s in stages if s)
+        if not running:
+            return
+        if time.monotonic() > deadline:
+            raise TimeoutError(
+                f"job group {group}: {running} jobs/tasks still running {timeout_sec}s after stop()"
+            )
+        time.sleep(0.1)
+
+
 def measure_shape(
     spark: SparkSession,
     shape: str,
@@ -142,6 +165,7 @@ def measure_shape(
         finally:
             q.stop()
             q.awaitTermination()
+            _await_tasks_done(spark, str(q.runId))
     steady = prog[_WARM_BATCHES:][:n_batches]
     if not steady:
         raise RuntimeError(f"{shape}: no steady-state batches within {timeout_sec}s")

@@ -5,9 +5,8 @@ Runs every registry entry marked bench=True at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is
 fully materialised into Spark's ``noop`` sink, which computes every output
 column, so the measured time covers scan → shuffle → result, not plan
-construction. A ``df.count()`` lets Catalyst prune the work behind it (q1
-drops all eight decimal aggregates); this round also reports the count()
-total as ``count_total_sec`` beside the noop ``value``.
+construction. A ``df.count()`` would let Catalyst prune the work behind it
+(q1 drops all eight decimal aggregates).
 """
 
 from __future__ import annotations
@@ -114,15 +113,11 @@ def main() -> None:
     # runs take min over TWO full suite passes (VERDICT r9 item 3): a load
     # transient that straddles one pass cannot inflate the committed JSON.
     times: dict[str, float] = {}
-    count_times: dict[str, float] = {}
     suite_passes = 2 if isolated else 1
     for _ in range(suite_passes):
         for name, q in bench.items():
             times[name] = _best_of(
                 lambda: materialise(q.fn(spark, sf_dir)), 3, times.get(name, float("inf"))
-            )
-            count_times[name] = _best_of(
-                lambda: q.fn(spark, sf_dir).count(), 3, count_times.get(name, float("inf"))
             )
     times = {n: round(t, 3) for n, t in times.items()}
 
@@ -132,7 +127,6 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": times,
-        "count_total_sec": round(sum(count_times.values()), 3),
         "sf": sf,
         "host": _host_facts(),
     }

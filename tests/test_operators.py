@@ -193,6 +193,55 @@ def test_repartition_by_bytes(spark, media_df):
     assert out.count() == 5
 
 
+_CHARS_DDL = "id long, pos long, ch string, even boolean, raw binary"
+
+
+def _chars(doc_id, text):
+    # one row per character: an empty or null text yields no row
+    for pos, ch in enumerate(text or ""):
+        yield doc_id, pos, ch, pos % 2 == 0, ch.encode()
+
+
+def test_map_rows_fans_out_and_types_by_ddl(spark):
+    df = spark.createDataFrame(
+        [(1, "ab"), (2, ""), (3, "xyz")], "id long, text string"
+    ).repartition(8)  # 3 rows over 8 partitions: most partitions are empty
+    out = multimodal.map_rows(df, _chars, _CHARS_DDL)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("id", "bigint"), ("pos", "bigint"), ("ch", "string"),
+        ("even", "boolean"), ("raw", "binary"),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, "a", True, bytearray(b"a")),
+        (1, 1, "b", False, bytearray(b"b")),
+        (3, 0, "x", True, bytearray(b"x")),
+        (3, 1, "y", False, bytearray(b"y")),
+        (3, 2, "z", True, bytearray(b"z")),
+    ]
+
+
+def test_map_rows_with_no_output_rows_keeps_the_ddl_schema(spark):
+    df = spark.createDataFrame([(1, "ab"), (2, "c")], "id long, text string")
+    # a partition with no input rows, and input rows that all yield nothing
+    for out in (
+        multimodal.map_rows(df.filter("id < 0"), _chars, _CHARS_DDL),
+        multimodal.map_rows(df, lambda doc_id, text: iter(()), _CHARS_DDL),
+    ):
+        assert out.collect() == []
+        assert out.schema.simpleString() == (
+            "struct<id:bigint,pos:bigint,ch:string,even:boolean,raw:binary>"
+        )
+
+
+def test_map_rows_passes_null_as_none(spark):
+    df = spark.createDataFrame([(1, "ab"), (2, None)], "id long, text string")
+    out = multimodal.map_rows(
+        df, lambda doc_id, text: [(doc_id, text, text is None)],
+        "id long, text string, was_null boolean",
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [(1, "ab", False), (2, None, True)]
+
+
 def test_hll_sketch_estimates_within_tolerance(spark, sf_small):
     # A5 — sketch estimates must land within HLL error bounds of exact
     # counts, and the merged union must estimate the global distinct.

@@ -275,6 +275,24 @@ def test_mm_frame_sample_expansion_is_jvm_side(spark, sf_small):
     assert "BatchEvalPython" not in plan
 
 
+_MM_PER_ROW_DECODES = (
+    "mm_feature_extract", "mm_wav_stats", "mm_resize_grid", "mm_ppm_stats",
+    "mm_wav_decimate", "mm_patchify_vit", "mm_image_ahash",
+    "mm_goertzel_tone", "mm_image_dhash", "mm_wav_silence_ratio",
+)
+
+
+def test_mm_per_row_decodes_run_as_one_python_map(spark, sf_small):
+    # Each per-row media decode is a single map over Arrow batches: one
+    # Python map node, and no per-row Python UDF evaluation beside it.
+    import re
+
+    for name in _MM_PER_ROW_DECODES:
+        plan = plan_of(REGISTRY[name].fn(spark, sf_small))
+        assert len(re.findall(r"\bMapIn(?:Pandas|Arrow) ", plan)) == 1, (name, plan)
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+
+
 def test_dynamic_partition_pruning_on_partitioned_layout(spark, sf_small):
     # DPP: a dim-side filter must prune fact partitions at runtime via a
     # dynamic pruning subquery, not scan all days.

@@ -435,6 +435,42 @@ def test_streaming_throughput_harness(spark):
     assert 1 <= r["steady_batches"] <= 2
 
 
+def test_checkpoint_teardown_waits_for_running_tasks(spark):
+    """measure_shape removes a checkpoint only once the stopped query's job
+    group has no running task; tasks that outlive the bound raise."""
+    import threading
+    import time
+
+    from amazonbigdata_for_students_spark.streaming.throughput import _await_tasks_done
+
+    sc, group = spark.sparkContext, "teardown_wait_probe"
+    failures = []
+
+    def slow_job():
+        sc.setJobGroup(group, group)  # not interrupted: the task outlives the cancel
+        try:
+            sc.parallelize([0], 1).foreach(lambda _: time.sleep(60))
+        except Exception as e:  # the cancel below fails the job
+            failures.append(e)
+
+    t = threading.Thread(target=slow_job)
+    t.start()
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    with pytest.raises(TimeoutError, match=group):
+        _await_tasks_done(spark, group, timeout_sec=1.0)
+    sc.cancelJobGroup(group)
+    _await_tasks_done(spark, group, timeout_sec=30.0)
+    tracker = sc.statusTracker()
+    (job,) = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    assert job.status == "FAILED"
+    assert [tracker.getStageInfo(s).numActiveTasks for s in job.stageIds] == [0]
+    t.join(timeout=30)
+    assert not t.is_alive()
+    assert "cancelled" in str(failures)
+
+
 def test_token_bucket_state_carries_dt_across_microbatches(spark, tmp_path):
     # Two part files = two micro-batches (maxFilesPerTrigger=1). User 7
     # drains the bucket in batch 1 (12 events -> 10 admitted, 0 tokens
