@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types a
 from .. import schemas
 from ..functions import spam
 from ..sources import catalog, readers, sinks
-from ..streaming.batch_twins import _drain, events_stream
+from ..streaming.batch_twins import _drain, _run_to_end, events_stream
 from .registry import dsum, query
 from .relational import EVENTS
 
@@ -807,15 +807,13 @@ def stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not ready:
         with _build_window(d):
             ev = events_stream(spark, sf_dir).withColumn("day", F.dayofmonth("ts"))
-            q = (
+            writer = (
                 ev.writeStream.format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", ckpt)
                 .partitionBy("day")
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
+            _run_to_end(writer, spark)
             _mark(d, fp)
     back = spark.read.parquet(out)
     return back.groupBy("day").agg(F.count("*").alias("n"))
@@ -1217,29 +1215,22 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
         )
-        q = (
+        writer = (
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        _run_to_end(writer, spark)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for f in parts[:4]:
-            shutil.copy(os.path.join(staging, f), os.path.join(live, f))
-        drain_once("ckpt_phase1")
-        # "crash": the first query object is gone; land the rest and restart
-        # a brand-new query instance on the same checkpoint.
-        for f in parts[4:]:
-            shutil.copy(os.path.join(staging, f), os.path.join(live, f))
-        drain_once("ckpt_phase2")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for f in parts[:4]:
+        shutil.copy(os.path.join(staging, f), os.path.join(live, f))
+    drain_once("ckpt_phase1")
+    # "crash": the first query object is gone; land the rest and restart
+    # a brand-new query instance on the same checkpoint.
+    for f in parts[4:]:
+        shutil.copy(os.path.join(staging, f), os.path.join(live, f))
+    drain_once("ckpt_phase2")
     return spark.table("ckpt_phase2")
 
 

@@ -439,6 +439,7 @@ def src_commitlog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources import commitlog_source
+    from ..streaming.batch_twins import _run_to_end
 
     commitlog_source.register(spark)
     log = _fresh_log(sf_dir, "stream_src")
@@ -478,16 +479,14 @@ def src_commitlog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc[v] = (n0 + r["n"], s0 + r["s"])
 
     def run_once() -> None:
-        q = (
+        writer = (
             spark.readStream.format("commitlog")
             .option("path", log.path)
             .load()
             .writeStream.foreachBatch(drain)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        _run_to_end(writer, spark)
 
     run_once()  # consumes versions 0 and 1
     commit(deltas[2])  # lands AFTER the first run's offsets are checkpointed

@@ -95,6 +95,8 @@ _MAX_TXN_RETRIES = 8
 # is each write's driver-side planning, launch and job commit, so one
 # thread per delta helps even when the slots are busy
 _STAGE_THREADS = 8
+# name prefix of those threads, so a leak check can tell them apart
+_STAGE_THREAD_PREFIX = "commitlog-stage"
 # reserved stats entry: the key columns a token is already resolved on
 _RESOLVED = "resolved:"
 
@@ -206,7 +208,9 @@ class CommitLog:
         if not dfs:
             return []
         spark = dfs[0].sparkSession
-        with ThreadPoolExecutor(min(len(dfs), _STAGE_THREADS)) as pool:
+        with ThreadPoolExecutor(
+            min(len(dfs), _STAGE_THREADS), thread_name_prefix=_STAGE_THREAD_PREFIX
+        ) as pool:
             futures = [
                 pool.submit(inheritable_thread_target(spark)(self.stage), df)
                 for df in dfs

@@ -13,6 +13,7 @@ from __future__ import annotations
 import itertools
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..plans.evals import SPRT_ORACLE
 from ..plans.registry import query
@@ -72,69 +73,84 @@ def events_stream(
     return readers.rebuild_nanos_ts(reader.parquet(src), "events", schema)
 
 
-def _drain(
-    df: DataFrame, prefix: str, mode: str = "complete", state_partitions: int = 4
-) -> DataFrame:
-    """Run the streaming plan to completion into a memory sink.
+# Stateful streaming parallelism is a different sizing problem from batch
+# shuffles: every state partition pays a per-micro-batch state store
+# open/commit, so width should follow STATE VOLUME, not core count — and it
+# is frozen into the checkpoint at first start. Every query here keys state
+# on low-cardinality windows/types (hundreds of keys, KB-scale state), where
+# measured cost is ~linear in partition count: 32 → 8 cut the fixed
+# micro-batch cost ~40%, 8 → 4 another ~27% (1.38s → 1.01s at sf0.1), with 4
+# keeping store commits off the single-thread floor. On a cluster this is
+# the knob sized as state_bytes / target_partition_bytes.
+_STATE_PARTITIONS = 4
 
-    Stateful streaming parallelism is a different sizing problem from
-    batch shuffles: every state partition pays a per-micro-batch state
-    store open/commit, so width should follow STATE VOLUME, not core
-    count — and it is frozen into the checkpoint at first start. Every
-    query here keys state on low-cardinality windows/types (hundreds of
-    keys, KB-scale state), where measured cost is ~linear in partition
-    count: 32 → 8 cut the fixed micro-batch cost ~40%, 8 → 4 another
-    ~27% (1.38s → 1.01s at sf0.1), with 4 keeping store commits off the
-    single-thread floor. On a cluster this is the knob sized as
-    state_bytes / target_partition_bytes. Applied around start() only —
-    batch queries keep the session's shuffle width."""
-    spark = df.sparkSession
-    name = f"{prefix}_{next(_COUNTER)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+
+def _run_to_end(
+    writer: DataStreamWriter, spark: SparkSession, conf: dict | None = None
+) -> StreamingQuery:
+    """Start ``writer`` with Trigger.AvailableNow and wait until it has
+    drained everything available; returns the terminated query (its
+    ``recentProgress`` stays readable). The state width (and any extra
+    ``conf``, e.g. a state-store provider) is set around ``start()`` only:
+    the stream captures the session conf when it starts, so batch queries
+    keep the session's own settings, and the previous values come back
+    even if ``start()`` raises. The one AvailableNow drain of the package."""
+    conf = {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS), **(conf or {})}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        q = writer.trigger(availableNow=True).start()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    q.awaitTermination()
+    return q
 
 
+def _to_memory(df: DataFrame, prefix: str, mode: str) -> tuple[DataStreamWriter, str]:
+    """A memory-sink writer for ``df`` under a fresh query name, and the name."""
+    name = f"{prefix}_{next(_COUNTER)}"
+    return df.writeStream.format("memory").queryName(name).outputMode(mode), name
 
-def _drain_checkpointed(
-    df: DataFrame, prefix: str, mode: str, state_partitions: int = 4
-) -> str:
-    """Drain a streaming plan through a CHECKPOINT (AvailableNow, memory
-    sink) and return the checkpoint path — the shared protocol of every
-    state-reader audit (the checkpoint, not the sink, is what those
-    queries read back). Same conf save/set/restore discipline as _drain;
-    one implementation so the state-partition sizing and restore-on-error
-    behavior can never drift between the audits."""
+
+def _drain(df: DataFrame, prefix: str, mode: str = "complete") -> DataFrame:
+    """Run the streaming plan to completion into a memory sink and return
+    the sink table."""
+    writer, name = _to_memory(df, prefix, mode)
+    _run_to_end(writer, df.sparkSession)
+    return df.sparkSession.table(name)
+
+
+def _drain_checkpointed(df: DataFrame, prefix: str, mode: str) -> str:
+    """Drain a streaming plan through a CHECKPOINT (memory sink) and return
+    the checkpoint path — the shared protocol of every state-reader audit
+    (the checkpoint, not the sink, is what those queries read back)."""
     import tempfile
 
-    spark = df.sparkSession
     ck = tempfile.mkdtemp(prefix=f"{prefix}_ck_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(f"{prefix}_{next(_COUNTER)}")
-            .outputMode(mode)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    writer, _ = _to_memory(df, prefix, mode)
+    _run_to_end(writer.option("checkpointLocation", ck), df.sparkSession)
     return ck
+
+
+def _fold_drain(keyed: DataFrame, key: str, fold, name: str) -> DataFrame:
+    """Group ``keyed`` by ``key``, run a ``folds.keyed_fold`` fold over it
+    in update mode with no timeout, and drain the per-batch snapshots.
+    The one applyInPandasWithState call of the update-mode twins."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    snap = keyed.groupBy(key).applyInPandasWithState(
+        fold,
+        outputStructType=fold.out_ddl,
+        stateStructType=fold.state_ddl,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return _drain(snap, name, mode="update")
 
 
 @query(
@@ -391,24 +407,10 @@ def stream_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per key. Both numbers are hash-gated against the batch oracle.
     At scale this invariant is the cheap canary for silent data loss
     between source offsets and sink commits."""
-    name = f"progress_audit_{next(_COUNTER)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            events_stream(spark, sf_dir)
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        total_in = sum(int(p["numInputRows"]) for p in q.recentProgress)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    agg = events_stream(spark, sf_dir).groupBy("event_type").agg(F.count("*").alias("n"))
+    writer, name = _to_memory(agg, "progress_audit", "complete")
+    q = _run_to_end(writer, spark)
+    total_in = sum(int(p["numInputRows"]) for p in q.recentProgress)
     n_keys = spark.table(name).count()
     return spark.createDataFrame(
         [(total_in, n_keys)], "total_input_rows bigint, n_result_keys bigint"
@@ -618,18 +620,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stage the delta executor-side, then one atomic manifest commit.
         log.commit([log.stage(batch_df)], batch_id=batch_id, writer="stream_upsert_sink")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_to_end(agg.writeStream.outputMode("update").foreachBatch(upsert), spark)
 
     merged = log.read_latest_per_key(spark, ["user_id"])
     assert merged is not None, "upsert sink committed no batches"
@@ -687,41 +678,23 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     change semantics), and rocksdb_used reports whether the run's progress
     metrics actually came from RocksDB (guards against the conf silently
     not applying)."""
-    name = f"rocksdb_state_{next(_COUNTER)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    agg = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    writer, name = _to_memory(agg, "rocksdb_state", "complete")
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    q = _run_to_end(
+        writer, spark, conf={"spark.sql.streaming.stateStore.providerClass": provider}
     )
-    try:
-        agg = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "n")
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rocksdb_used = any(
-            any("rocksdb" in k.lower() for k in (op.get("customMetrics") or {}))
-            for p in q.recentProgress
-            for op in p.get("stateOperators", [])
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
+    rocksdb_used = any(
+        any("rocksdb" in k.lower() for k in (op.get("customMetrics") or {}))
+        for p in q.recentProgress
+        for op in p.get("stateOperators", [])
+    )
     return spark.table(name).withColumn("rocksdb_used", F.lit(rocksdb_used))
 
 
@@ -826,18 +799,7 @@ def stream_static_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).saveAsTable(tbl)
             spark.catalog.refreshTable(tbl)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            filtered.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_to_end(filtered.writeStream.outputMode("append").foreachBatch(sink), spark)
 
     return spark.createDataFrame(
         sorted(rows_by_type.items()), "event_type string, n bigint"
@@ -887,18 +849,7 @@ def stream_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["n"] > 5:
                 alerts[r["window_start"]] = r["n"]
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(fanout)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_to_end(agg.writeStream.outputMode("complete").foreachBatch(fanout), spark)
 
     consistent = all(archive.get(k) == v for k, v in alerts.items())
     return spark.createDataFrame(
@@ -1133,18 +1084,7 @@ def stream_atomic_two_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(fanout)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_to_end(stream.writeStream.outputMode("append").foreachBatch(fanout), spark)
 
     snap = log.snapshot()
     atomic_pairs = bool(snap) and all(len(m.get("adds", ())) == 2 for _, m in snap)
@@ -1231,62 +1171,15 @@ def stream_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, fold only the settled prefix) — documented, not
     implemented; the sibling window/session twins get this for free from
     the engine's own watermark handling, a sequential fold does not."""
-    from pyspark.sql import Window as PW
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from .folds import ewma_fold
 
-    ev = events_stream(spark, sf_dir)
-    keyed = ev.select(
+    keyed = events_stream(spark, sf_dir).select(
         "user_id",
         "ts",
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("q"),
     )
-
-    def fold_ewma(key, pdfs, state):
-        import pandas as pd  # executor-side
-
-        objs = list(pdfs)
-        if not objs:  # timed-out key invocation: pd.concat([]) would raise
-            return
-        rows = pd.concat(objs, ignore_index=True)
-        if rows.empty:
-            return
-        rows = rows.sort_values(["ts", "event_id"])
-        if state.exists:
-            e, n, a = state.get
-        else:
-            e, n, a = None, 0, 0
-        for q in rows["q"].to_numpy():
-            q = int(q)
-            if e is None:
-                e, n = q, 1
-                continue
-            if n >= 3 and q > 2 * e:
-                a += 1
-            # int() truncates toward zero like SQL div; operands are >= 0
-            e = (3 * e + q) // 4
-            n += 1
-        state.update((e, n, a))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "ewma_cents": [e],
-                "n_anomalies": [a],
-            }
-        )
-
-    out_schema = (
-        "user_id long, n_events long, ewma_cents long, n_anomalies long"
-    )
-    snap = keyed.groupBy("user_id").applyInPandasWithState(
-        fold_ewma,
-        outputStructType=out_schema,
-        stateStructType="e long, n long, a long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    res = _drain(snap, "stream_ewma", mode="update")
+    res = _fold_drain(keyed, "user_id", ewma_fold, "stream_ewma")
     return _final_snapshot(res)
 
 
@@ -1379,27 +1272,13 @@ def token_bucket_stream(
     cross-batch state-carry test drive this one pipeline (projection,
     fold, schemas), so a schema or snapshot change cannot diverge
     between them. Returns the drained update-mode snapshot table."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import token_bucket_fold
 
     ev = events_stream(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
     keyed = ev.select(
         "user_id", "ts", "event_id", F.unix_timestamp("ts").alias("t")
     )
-    snap = keyed.groupBy("user_id").applyInPandasWithState(
-        token_bucket_fold,
-        outputStructType=(
-            "user_id long, n_events long, n_admitted long, tokens_end_scaled long"
-        ),
-        stateStructType="tok long, adm long, n long, last_t long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_token_bucket" if max_files_per_trigger is None else (
-        f"stream_token_bucket_mfpt{max_files_per_trigger}"
-    )
-    return _drain(snap, name, mode="update")
+    return _fold_drain(keyed, "user_id", token_bucket_fold, "stream_token_bucket")
 
 
 @query(
@@ -1435,8 +1314,6 @@ def sprt_stream(
 ) -> DataFrame:
     """Build + drain the SPRT stream: the registered query AND the
     cross-batch decision-carry test drive this one pipeline."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import SPRT_L0, SPRT_L1, sprt_walk_fold
 
     ev = events_stream(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
@@ -1451,19 +1328,7 @@ def sprt_stream(
             f" ELSE {SPRT_L0}L END"
         ).alias("inc"),
     )
-    snap = keyed.groupBy("day_no").applyInPandasWithState(
-        sprt_walk_fold,
-        outputStructType=(
-            "day_no long, n_obs long, n_steps long, decision string, llr_nano long"
-        ),
-        stateStructType="cum long, n long, first_rn long, dec_llr long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_sprt_monitor" if max_files_per_trigger is None else (
-        f"stream_sprt_monitor_mfpt{max_files_per_trigger}"
-    )
-    return _drain(snap, name, mode="update")
+    return _fold_drain(keyed, "day_no", sprt_walk_fold, "stream_sprt_monitor")
 
 
 @query(
@@ -1565,32 +1430,14 @@ def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     each event costs one pending increment, and the model is always
     one flush behind the live edge — exactly how production HW
     monitors run."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import holt_winters_fold
 
-    ev = events_stream(spark, sf_dir)
-    keyed = ev.select(
+    keyed = events_stream(spark, sf_dir).select(
         "event_type",
         F.expr("CAST(datediff(to_date(ts), DATE '1970-01-01') AS BIGINT)").alias("d"),
         F.lit(1).alias("one"),
     )
-    snap = keyed.groupBy("event_type").applyInPandasWithState(
-        holt_winters_fold,
-        outputStructType=(
-            "event_type string, n_obs_total long, n_days long,"
-            " level_milli long, trend_milli long,"
-            " season_next_milli long, forecast_next_milli long"
-        ),
-        stateStructType=(
-            "pend_day long, pend_n long, lvl long, trd long, step long,"
-            " s0 long, s1 long, s2 long, s3 long, s4 long, s5 long, s6 long,"
-            " nobs long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    drained = _drain(snap, "stream_holt_winters", mode="update")
+    drained = _fold_drain(keyed, "event_type", holt_winters_fold, "stream_holt_winters")
     # n_obs_total is the STRICTLY monotone snapshot selector (n_days
     # alone ties when a batch only extends the open day); dropped after
     # selection so the output matches the batch oracle's columns
@@ -1663,33 +1510,16 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(0, S + dv) CUSUM recursion is exactly c - least(0, running min
     c) — Page's reflection identity — so no fold is needed SQL-side):
     exact integers end to end, byte-identical twins."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import cusum_fold
 
-    ev = events_stream(spark, sf_dir)
-    keyed = ev.select(
+    keyed = events_stream(spark, sf_dir).select(
         "event_type",
         F.expr(
             "CAST(unix_micros(date_trunc('hour', ts)) AS BIGINT) div 3600000000"
         ).alias("h"),
         F.lit(1).alias("one"),
     )
-    snap = keyed.groupBy("event_type").applyInPandasWithState(
-        cusum_fold,
-        outputStructType=(
-            "event_type string, n_obs_total long, n_cells long,"
-            " mu_scaled long, first_alert_h long, max_drift long"
-        ),
-        stateStructType=(
-            "pend_h long, pend_n long, n_cells long, burn_sum long,"
-            " mu_s long, cum long, mn long, alert_h long, max_drift long,"
-            " n_obs long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    drained = _drain(snap, "stream_cusum_monitor", mode="update")
+    drained = _fold_drain(keyed, "event_type", cusum_fold, "stream_cusum_monitor")
     return _final_snapshot(
         drained, key="event_type", order_col="n_obs_total"
     ).drop("n_obs_total")
@@ -1719,12 +1549,9 @@ def stream_slo_burn_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-series SLO evaluator has; the hourly pre-aggregation a real
     deployment would add upstream is measured separately in the batch
     twin (which collapses volume BEFORE the walk)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import slo_burn_fold
 
-    ev = events_stream(spark, sf_dir)
-    keyed = ev.select(
+    keyed = events_stream(spark, sf_dir).select(
         F.lit("slo").alias("series"),
         F.expr(
             "CAST(unix_micros(date_trunc('hour', ts)) AS BIGINT) div 3600000000"
@@ -1732,22 +1559,7 @@ def stream_slo_burn_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).alias("one"),
         F.expr("CASE WHEN event_type = 'error' THEN 1 ELSE 0 END").alias("err"),
     )
-    snap = keyed.groupBy("series").applyInPandasWithState(
-        slo_burn_fold,
-        outputStructType=(
-            "h long, n_1h long, err_1h long, burn1_ppm long,"
-            " burn6_ppm long, alert boolean, n_obs_total long"
-        ),
-        stateStructType=(
-            "pend_h long, pend_n long, pend_e long,"
-            " r0h long, r0n long, r0e long, r1h long, r1n long, r1e long,"
-            " r2h long, r2n long, r2e long, r3h long, r3n long, r3e long,"
-            " r4h long, r4n long, r4e long, n_obs long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    drained = _drain(snap, "stream_slo_burn_monitor", mode="update")
+    drained = _fold_drain(keyed, "series", slo_burn_fold, "stream_slo_burn_monitor")
     final = _final_snapshot(drained, key="h", order_col="n_obs_total")
     return final.where("alert").drop("alert", "n_obs_total")
 
@@ -1795,25 +1607,15 @@ def stream_funnel_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user event time is nondecreasing across batches); state is 4
     longs per user — the bounded-state shape a billion-user funnel
     needs."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import funnel_stage_fold
 
-    ev = events_stream(spark, sf_dir)
-    keyed = ev.select(
+    keyed = events_stream(spark, sf_dir).select(
         "user_id",
         F.expr("unix_micros(ts)").alias("us"),
         "event_id",
         "event_type",
     )
-    snap = keyed.groupBy("user_id").applyInPandasWithState(
-        funnel_stage_fold,
-        outputStructType="user_id long, n_events long, funnel_stage long",
-        stateStructType="v_us long, c_us long, p_us long, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    drained = _drain(snap, "stream_funnel_stage", mode="update")
+    drained = _fold_drain(keyed, "user_id", funnel_stage_fold, "stream_funnel_stage")
     return _final_snapshot(drained, key="user_id", order_col="n_events")
 
 
@@ -1922,8 +1724,6 @@ def croston_stream(
 ) -> DataFrame:
     """Build + drain the Croston stream: the registered query AND the
     cross-batch day-straddle test drive this one pipeline."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from .folds import croston_fold
 
     ev = events_stream(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
@@ -1934,23 +1734,7 @@ def croston_stream(
         ),
         F.lit(1).alias("one"),
     )
-    snap = keyed.groupBy("user_id").applyInPandasWithState(
-        croston_fold,
-        outputStructType=(
-            "user_id long, nobs long, n_demands long, size_level long,"
-            " interval_level long, demand_rate_ppm long"
-        ),
-        stateStructType=(
-            "pend_day long, pend_z long, sz long, iv long, pd long,"
-            " t long, nobs long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_croston_monitor" if max_files_per_trigger is None else (
-        f"stream_croston_monitor_mfpt{max_files_per_trigger}"
-    )
-    return _drain(snap, name, mode="update")
+    return _fold_drain(keyed, "user_id", croston_fold, "stream_croston_monitor")
 
 
 _REG["stream_croston_monitor"].oracle = _REG["timeseries_croston"].oracle

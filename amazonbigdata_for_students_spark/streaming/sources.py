@@ -222,20 +222,3 @@ def write_partitioned_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def run_available_now_to_memory(
-    df: DataFrame, name: str, output_mode: str = "append"
-) -> None:
-    """Test/bookmark harness (S9): drain everything currently available
-    through the streaming plan into an in-memory table, then stop —
-    Trigger.AvailableNow is the streaming analogue of Glue job bookmarks
-    (reference: cloudformation/glue_cf_template.json:139): each run
-    processes exactly the files the checkpoint has not seen."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

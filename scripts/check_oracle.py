@@ -13,15 +13,19 @@ gating can hide (the r5 stream_static_refresh lesson).
 workers sharing the SparkSession (concurrent job submission is supported;
 each worker gets its own DuckDB cursor). Queries that mutate session state
 (conf toggles, catalog tables, streaming runs, on-disk fixture caches) are
-detected by source inspection and always run serially afterwards — their
+detected by source inspection (of the query and of the package helpers it
+calls by name) and always run serially afterwards — their
 semantics assume exclusive use of the session.
 """
 
 from __future__ import annotations
 
 import argparse
+import ast
+import importlib
 import inspect
 import sys
+import textwrap
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -47,14 +51,54 @@ _SERIAL_MARKERS = (
     "shutil.rmtree",
     "createOrReplaceTempView",
 )
+# Helpers whose markers are safe to share: table_schema sets the same two
+# read confs to the same constants on every call, and every load calls it.
+_SERIAL_SAFE = ("table_schema",)
+
+
+def _callees(fn, src: str):
+    """Package functions that ``fn``'s source calls by bare name: module
+    globals, and names a function-local ``from ... import`` brings in."""
+    pkg = fn.__module__.partition(".")[0]
+    for node in ast.walk(ast.parse(textwrap.dedent(src))):
+        if isinstance(node, ast.Name):
+            objs = [fn.__globals__.get(node.id)]
+        elif isinstance(node, ast.ImportFrom):
+            mod = importlib.import_module(
+                "." * node.level + (node.module or ""), fn.__module__.rpartition(".")[0]
+            )
+            objs = [getattr(mod, a.name, None) for a in node.names]
+        else:
+            continue
+        for obj in objs:
+            if (
+                inspect.isfunction(obj)
+                and obj.__module__.partition(".")[0] == pkg
+                and obj.__name__ not in _SERIAL_SAFE
+            ):
+                yield obj
 
 
 def _needs_serial(q) -> bool:
-    try:
-        src = inspect.getsource(q.fn)
-    except (OSError, TypeError):
-        return True
-    return any(m in src for m in _SERIAL_MARKERS)
+    """True when the query's own function, or any package function it
+    reaches by name, carries a serial marker. The walk starts below the
+    registry's wrapper, and follows helpers because most streaming queries
+    reach writeStream only through a drain."""
+    todo = [inspect.getclosurevars(q.fn).nonlocals.get("fn", q.fn)]
+    seen = set()
+    while todo:
+        fn = todo.pop()
+        if fn in seen:
+            continue
+        seen.add(fn)
+        try:
+            src = inspect.getsource(fn)
+        except (OSError, TypeError):
+            return True
+        if any(m in src for m in _SERIAL_MARKERS):
+            return True
+        todo.extend(_callees(fn, src))
+    return False
 
 
 def main() -> int:

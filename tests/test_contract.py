@@ -275,3 +275,23 @@ def test_package_env_options_are_fenced():
         for name in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", path.read_text())
     }
     assert found == _ALLOWED_ENV_OPTIONS
+
+
+def test_check_oracle_runs_every_stream_query_serially():
+    """``check_oracle.py --parallel`` must keep streaming queries (most of
+    which reach writeStream through a drain helper) off the thread pool,
+    and still run a plain read in it."""
+    import importlib.util
+
+    from amazonbigdata_for_students_spark.plans import REGISTRY
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle",
+        os.path.join(os.path.dirname(__file__), "..", "scripts", "check_oracle.py"),
+    )
+    co = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(co)
+    streams = [n for n in REGISTRY if "stream_" in n]  # the `stream_` filter
+    assert len(streams) == 36
+    assert [n for n in streams if not co._needs_serial(REGISTRY[n])] == []
+    assert not co._needs_serial(REGISTRY["q1_pricing_summary"])

@@ -3,6 +3,7 @@ the parts whose correctness the SQL oracles can only spot-check."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from amazonbigdata_for_students_spark.functions.multimodal import (
@@ -447,6 +448,82 @@ def test_token_bucket_fold_split_invariance_and_bounds(gaps, split):
     assert n == len(ts)
     assert 1 <= adm <= n
     assert 0 <= tok <= 10000
+
+
+def _run_ewma(batches):
+    """Drive streaming.folds.ewma_fold over lists of cents with one
+    carried state; return the final (n_events, ewma_cents, n_anomalies)."""
+    import pandas as pd
+
+    from amazonbigdata_for_students_spark.streaming.folds import ewma_fold
+
+    state = _FakeGroupState()
+    last, t = None, 0
+    for qs in batches:
+        ts = list(range(t, t + len(qs)))
+        t += len(qs)
+        pdf = pd.DataFrame(
+            {"user_id": [7] * len(qs), "ts": ts, "event_id": ts, "q": list(qs)}
+        )
+        out = list(ewma_fold((7,), iter([pdf]), state))
+        if out:
+            last = out[0].iloc[0]
+    return int(last["n_events"]), int(last["ewma_cents"]), int(last["n_anomalies"])
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    qs=st.lists(st.integers(min_value=0, max_value=100_000), min_size=1, max_size=60),
+    split=st.integers(min_value=0, max_value=60),
+)
+def test_ewma_fold_split_invariance_matches_recurrence(qs, split):
+    # Folding in ONE batch must equal folding with a state hand-off at ANY
+    # split point, and both must equal the recurrence the batch oracle
+    # runs: seed e = q1, then an anomaly when q > 2e after 3 events and
+    # e = (3e + q) div 4.
+    split = min(split, len(qs))
+    one = _run_ewma([qs])
+    two = _run_ewma([qs[:split], qs[split:]] if 0 < split < len(qs) else [qs])
+    assert one == two
+    e, a = qs[0], 0
+    for n, q in enumerate(qs[1:], start=1):
+        if n >= 3 and q > 2 * e:
+            a += 1
+        e = (3 * e + q) // 4
+    assert one == (len(qs), e, a)
+
+
+_FOLDS = (
+    "ewma_fold",
+    "token_bucket_fold",
+    "sprt_walk_fold",
+    "holt_winters_fold",
+    "cusum_fold",
+    "slo_burn_fold",
+    "funnel_stage_fold",
+    "croston_fold",
+)
+
+
+@pytest.mark.parametrize("name", _FOLDS)
+def test_fold_skips_empty_batches_and_pickles_by_reference(name):
+    # No frames (a timed-out key) and an empty frame both yield nothing
+    # and leave the state unset; the wrapped fold still pickles as a
+    # reference to its module attribute, so workers import folds.py.
+    import pickle
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from amazonbigdata_for_students_spark.streaming import folds
+
+    fold = getattr(folds, name)
+    cols = ("ts", "event_id", "q", "t", "inc", "d", "h", "one", "err", "us", "event_type")
+    for pdfs in ([], [pd.DataFrame({c: [] for c in cols})]):
+        state = _FakeGroupState()
+        assert list(fold((1,), iter(pdfs), state)) == []
+        assert not state.exists
+    assert pickle.loads(cloudpickle.dumps(fold)) is fold
 
 
 @settings(max_examples=200, deadline=None)

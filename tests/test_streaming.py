@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from amazonbigdata_for_students_spark import fixtures, schemas
 from amazonbigdata_for_students_spark.plans import botdetect
 from amazonbigdata_for_students_spark.streaming import pipelines, sources
+from amazonbigdata_for_students_spark.streaming.batch_twins import _run_to_end
 
 
 @pytest.fixture(scope="module")
@@ -34,7 +35,8 @@ def stream_dir(fx, tmp_path_factory):
 
 
 def _drain(df, name: str, mode: str = "append"):
-    sources.run_available_now_to_memory(df, name, output_mode=mode)
+    writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    _run_to_end(writer, df.sparkSession)
 
 
 def test_stream_batch_equivalence_windowed_counts(spark, fx, stream_dir):
@@ -264,9 +266,7 @@ def test_streaming_reviews_spam_pipeline(spark, fx, tmp_path):
                                sort_keys=True) + "\n")
     stream = sources.read_jsonl_stream(spark, str(rdir), schemas.REVIEW_EVENT_RAW)
     scored = pipelines.reviews_pipeline(stream)
-    sources.run_available_now_to_memory(
-        scored.select("review_title", "review_text", "is_spam"), "reviews_scored"
-    )
+    _drain(scored.select("review_title", "review_text", "is_spam"), "reviews_scored")
     got = {(r.review_title, r.review_text): r.is_spam
            for r in spark.sql("SELECT * FROM reviews_scored").collect()}
     batch = spam.classify_reviews(fixtures.reviews_df(spark, fx))
@@ -843,3 +843,48 @@ def test_croston_demand_day_straddles_microbatches(spark, tmp_path):
     assert (r.n_demands, r.size_level, r.interval_level) == (2, 4, 1)
     assert r.demand_rate_ppm == 4_000_000
     assert res.count() >= 2  # update mode emitted a snapshot per batch
+
+
+def test_run_to_end_restores_conf_after_drain_and_failed_batch(spark, tmp_path):
+    """The one AvailableNow runner applies the state width and any extra
+    conf to the stream it starts, and hands the session its own values
+    back both after a drain and after a foreachBatch that raises."""
+    from amazonbigdata_for_students_spark.streaming.batch_twins import (
+        _STATE_PARTITIONS,
+    )
+
+    parts = "spark.sql.shuffle.partitions"
+    prov = "spark.sql.streaming.stateStore.providerClass"
+    rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    session_width = spark.conf.get(parts)
+    spark.conf.set(parts, str(_STATE_PARTITIONS + 3))  # a restore must be visible
+    before = {k: spark.conf.get(k, None) for k in (parts, prov)}
+    d = tmp_path / "src"
+    d.mkdir()
+    (d / "a.jsonl").write_text("".join(f'{{"k": {i % 3}}}\n' for i in range(30)))
+    agg = spark.readStream.schema("k long").json(str(d)).groupBy("k").count()
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("sink down")
+
+    try:
+        q = _run_to_end(
+            agg.writeStream.format("memory").queryName("runner_conf").outputMode("complete"),
+            spark,
+            conf={prov: rocks},
+        )
+        assert {k: spark.conf.get(k, None) for k in (parts, prov)} == before
+        assert spark.table("runner_conf").count() == 3
+        ops = [op for p in q.recentProgress for op in p["stateOperators"]]
+        assert ops and all(op["numShufflePartitions"] == _STATE_PARTITIONS for op in ops)
+        assert any("rocksdb" in k.lower() for op in ops for k in op["customMetrics"])
+
+        with pytest.raises(Exception, match="sink down"):
+            _run_to_end(
+                agg.writeStream.outputMode("complete").foreachBatch(boom),
+                spark,
+                conf={prov: rocks},
+            )
+        assert {k: spark.conf.get(k, None) for k in (parts, prov)} == before
+    finally:
+        spark.conf.set(parts, session_width)

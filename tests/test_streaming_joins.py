@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from amazonbigdata_for_students_spark import fixtures, schemas
 from amazonbigdata_for_students_spark.sources import catalog, sinks
 from amazonbigdata_for_students_spark.streaming import pipelines, sources
+from amazonbigdata_for_students_spark.streaming.batch_twins import _run_to_end
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +50,7 @@ def test_stream_stream_join_matches_batch(spark, fx, tmp_path):
         "review_stars",
     )
     joined = pipelines.join_views_reviews(views_s, reviews_s)
-    sources.run_available_now_to_memory(joined, "ss_join")
+    _run_to_end(joined.writeStream.format("memory").queryName("ss_join"), spark)
     got = spark.sql("SELECT * FROM ss_join").count()
 
     # batch twin: same join condition on static frames
