@@ -221,4 +221,3 @@ def write_partitioned_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-

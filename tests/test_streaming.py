@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 from amazonbigdata_for_students_spark import fixtures, schemas
 from amazonbigdata_for_students_spark.plans import botdetect
 from amazonbigdata_for_students_spark.streaming import pipelines, sources
-from amazonbigdata_for_students_spark.streaming.batch_twins import _run_to_end
+from amazonbigdata_for_students_spark.streaming.batch_twins import (
+    _STATE_PARTITIONS,
+    _run_to_end,
+)
 
 
 @pytest.fixture(scope="module")
@@ -849,10 +852,6 @@ def test_run_to_end_restores_conf_after_drain_and_failed_batch(spark, tmp_path):
     """The one AvailableNow runner applies the state width and any extra
     conf to the stream it starts, and hands the session its own values
     back both after a drain and after a foreachBatch that raises."""
-    from amazonbigdata_for_students_spark.streaming.batch_twins import (
-        _STATE_PARTITIONS,
-    )
-
     parts = "spark.sql.shuffle.partitions"
     prov = "spark.sql.streaming.stateStore.providerClass"
     rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
