@@ -225,31 +225,28 @@ def mm_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     content round-trip are all hash-checked. At 100 TB this scan
     parallelizes per-file (maxPartitionBytes packing) and carries only
     (path, content) columns — the digest/feature pass never shuffles."""
-    from .sources_ops import _build_window, _cache_dir, _mark
+    from .sources_ops import _fixture
 
-    d, ready, fp = _cache_dir(sf_dir, "binary_media", tables=("documents",))
+    def build(d: str) -> None:
+        files_dir = os.path.join(d, "files")
+        os.makedirs(files_dir)
+        docs = readers.load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 3)
+
+        def write_file(doc_id, text):
+            with open(os.path.join(files_dir, f"{doc_id}.bin"), "wb") as f:
+                f.write((text or "").encode("utf-8"))
+            yield (1,)
+
+        wrote = (
+            multimodal.map_rows(docs.select("doc_id", "text"), write_file, "n long")
+            .agg(F.sum("n"))
+            .collect()[0][0]
+        )
+        if not wrote:
+            raise RuntimeError(f"binary media fixture wrote 0 files under {files_dir}")
+
+    d = _fixture(sf_dir, "binary_media", build, tables=("documents",))
     files_dir = os.path.join(d, "files")
-    if not ready:
-        with _build_window(d):
-            os.makedirs(files_dir, exist_ok=True)
-            docs = readers.load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 7 == 3
-            )
-
-            def write_file(doc_id, text):
-                with open(os.path.join(files_dir, f"{doc_id}.bin"), "wb") as f:
-                    f.write((text or "").encode("utf-8"))
-                yield (1,)
-
-            wrote = (
-                multimodal.map_rows(docs.select("doc_id", "text"), write_file, "n long")
-                .agg(F.sum("n"))
-                .collect()[0][0]
-            )
-            if not wrote:
-                raise RuntimeError(f"binary media fixture wrote 0 files under {files_dir}")
-            _mark(d, fp)
-
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")

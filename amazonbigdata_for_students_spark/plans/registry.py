@@ -50,24 +50,8 @@ def query(
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Release any source-fixture build locks this THREAD holds if
-            # the query raises mid-build — otherwise the held flock wedges
-            # every other consumer of the same fixture (gate threads AND
-            # other processes) until this process exits.
-            try:
-                return fn(spark, sf_dir)
-            except BaseException:
-                from . import sources_ops
-
-                sources_ops.release_thread_build_locks()
-                raise
-
-        run.__name__ = fn.__name__
-        run.__doc__ = fn.__doc__
         REGISTRY[name] = Query(
-            name=name, fn=run, oracle=oracle, tags=tags, bench=bench, doc=fn.__doc__ or ""
+            name=name, fn=fn, oracle=oracle, tags=tags, bench=bench, doc=fn.__doc__ or ""
         )
         return fn
 

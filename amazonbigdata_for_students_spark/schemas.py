@@ -108,6 +108,12 @@ EVENTS = T.StructType(
     ]
 )
 
+# The first five events columns as the JSON and CSV landing fixtures write
+# them: ts is its ISO text, parsed back after the read.
+EVENTS_TEXT_TS = T.StructType(
+    [T.StructField("ts", T.StringType()) if f.name == "ts" else f for f in EVENTS.fields[:5]]
+)
+
 DOCUMENTS = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

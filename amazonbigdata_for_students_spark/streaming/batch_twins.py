@@ -11,8 +11,10 @@ batch twins (SURVEY.md §5.3).
 from __future__ import annotations
 
 import itertools
+import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..plans.evals import SPRT_ORACLE
@@ -71,6 +73,46 @@ def events_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return readers.rebuild_nanos_ts(reader.parquet(src), "events", schema)
+
+
+def _json_replay(
+    spark: SparkSession, sf_dir: str, name: str, batches: list
+) -> tuple[str, DataFrame]:
+    """Replay fixture ``name``: the events rows matching each condition in
+    ``batches`` as one JSON file, in order, with strictly increasing mtimes
+    (the file source's ordering), read back one file per micro-batch with
+    ts parsed from its text. Returns the fixture dir and the stream."""
+    from .. import schemas
+    from ..plans.sources_ops import _fixture, _text_ts_cols
+    from ..sources import readers
+
+    def build(d: str) -> None:
+        ev = readers.load_table(spark, sf_dir, "events")
+        os.makedirs(os.path.join(d, "batches"))
+        for i, cond in enumerate(batches):
+            staging = os.path.join(d, f"_stage_{i}")
+            ev.filter(cond).select(*_text_ts_cols()).coalesce(1).write.json(staging)
+            (part,) = (f for f in os.listdir(staging) if f.endswith(".json"))
+            target = os.path.join(d, "batches", f"b{i}.json")
+            os.rename(os.path.join(staging, part), target)
+            shutil.rmtree(staging)
+            os.utime(target, times=(1_700_000_000 + i, 1_700_000_000 + i))
+
+    d = _fixture(sf_dir, name, build)
+    stream = (
+        spark.readStream.schema(schemas.EVENTS_TEXT_TS)
+        .option("maxFilesPerTrigger", 1)
+        .json(os.path.join(d, "batches"))
+        .withColumn("ts", F.to_timestamp("ts"))
+    )
+    return d, stream
+
+
+def _day_thirds_replay(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+    """The events as three replay files, days 1-10, 11-20 and 21-31."""
+    day = F.dayofmonth("ts")
+    thirds = [day.between(1, 10), day.between(11, 20), day.between(21, 31)]
+    return _json_replay(spark, sf_dir, "upsert_jsonl", thirds)
 
 
 # Stateful streaming parallelism is a different sizing problem from batch
@@ -441,62 +483,12 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     max. The oracle is the batch aggregate over day > 3 — rows match ONLY
     if the engine dropped precisely the late set (drop-nothing and
     drop-too-much both hash-mismatch)."""
-    import os
-    import shutil
-
-    from ..plans.sources_ops import _build_window, _cache_dir, _mark
-    from ..sources import readers
-
-    d, ready, fp = _cache_dir(sf_dir, "late_jsonl")
-    out = os.path.join(d, "batches")
-    if not ready:
-        with _build_window(d):
-            ev = readers.load_table(spark, sf_dir, "events").select(
-                "event_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-                F.dayofmonth("ts").alias("_day"),
-            )
-            os.makedirs(out, exist_ok=True)
-            batches = [
-                ("b0", F.col("_day").between(4, 12)),
-                ("b1", F.col("_day").between(13, 20)),
-                ("b2", (F.col("_day") <= 3) | (F.col("_day") >= 21)),
-            ]
-            for i, (nm, cond) in enumerate(batches):
-                staging = os.path.join(d, f"_stage_{nm}")
-                ev.filter(cond).drop("_day").coalesce(1).write.mode("overwrite").json(
-                    staging
-                )
-                part = next(
-                    f
-                    for f in sorted(os.listdir(staging))
-                    if f.startswith("part-") and f.endswith(".json")
-                )
-                target = os.path.join(out, f"{nm}.json")
-                os.rename(os.path.join(staging, part), target)
-                shutil.rmtree(staging)
-                # mtime drives FileStreamSource ordering: strictly increasing
-                t = 1_700_000_000 + i
-                os.utime(target, times=(t, t))
-            _mark(d, fp)
-
-    sch = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .json(out)
-        .withColumn("ts", F.to_timestamp("ts"))
+    day = F.dayofmonth("ts")
+    _d, stream = _json_replay(
+        spark,
+        sf_dir,
+        "late_jsonl",
+        [day.between(4, 12), day.between(13, 20), (day <= 3) | (day >= 21)],
     )
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -540,60 +532,9 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     across driver restarts. Three replay files (mtime-ordered) force
     genuine multi-batch merging, so a sink that overwrote instead of
     merged, or dropped a batch, hash-mismatches the single-pass oracle."""
-    import os
-    import shutil
-
     from ..plans.registry import dsum
-    from ..plans.sources_ops import _build_window, _cache_dir, _mark
-    from ..sources import readers
 
-    d, ready, fp = _cache_dir(sf_dir, "upsert_jsonl")
-    out = os.path.join(d, "batches")
-    if not ready:
-        with _build_window(d):
-            ev = readers.load_table(spark, sf_dir, "events").select(
-                "event_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-                F.dayofmonth("ts").alias("_day"),
-            )
-            os.makedirs(out, exist_ok=True)
-            import shutil
-
-            for i, (lo, hi) in enumerate(((1, 10), (11, 20), (21, 31))):
-                staging = os.path.join(d, f"_stage_{i}")
-                ev.filter(F.col("_day").between(lo, hi)).drop("_day").coalesce(
-                    1
-                ).write.mode("overwrite").json(staging)
-                part = next(
-                    f
-                    for f in sorted(os.listdir(staging))
-                    if f.startswith("part-") and f.endswith(".json")
-                )
-                target = os.path.join(out, f"b{i}.json")
-                os.rename(os.path.join(staging, part), target)
-                shutil.rmtree(staging)
-                t = 1_700_000_000 + i
-                os.utime(target, times=(t, t))
-            _mark(d, fp)
-
-    sch = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .json(out)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
+    d, stream = _day_thirds_replay(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         dsum("value").alias("sum_value"),
@@ -719,41 +660,10 @@ def stream_static_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle encodes exactly that batch-boundary semantics; an engine
     that snapshots the static side at query start (letting everything
     pass) or applies the update retroactively both hash-mismatch."""
-    import os
-    import shutil
-
-    from ..plans.sources_ops import _build_window, _cache_dir, _mark
     from ..sources import readers
 
-    d, ready, fp = _cache_dir(sf_dir, "static_refresh")
-    out = os.path.join(d, "batches")
+    d, stream = _day_thirds_replay(spark, sf_dir)
     block_dir = os.path.join(d, "blocklist")
-    if not ready:
-        with _build_window(d):
-            ev = readers.load_table(spark, sf_dir, "events").select(
-                "event_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-                F.dayofmonth("ts").alias("_day"),
-            )
-            os.makedirs(out, exist_ok=True)
-            for i, (lo, hi) in enumerate(((1, 10), (11, 20), (21, 31))):
-                staging = os.path.join(d, f"_stage_{i}")
-                ev.filter(F.col("_day").between(lo, hi)).drop("_day").coalesce(
-                    1
-                ).write.mode("overwrite").json(staging)
-                part = next(
-                    f
-                    for f in sorted(os.listdir(staging))
-                    if f.startswith("part-") and f.endswith(".json")
-                )
-                os.rename(os.path.join(staging, part), os.path.join(out, f"b{i}.json"))
-                shutil.rmtree(staging)
-                t = 1_700_000_000 + i
-                os.utime(os.path.join(out, f"b{i}.json"), times=(t, t))
-            _mark(d, fp)
 
     # blocklist always starts this run EMPTY — a CATALOG table, because a
     # path-based DataFrame freezes its file listing at plan time; the
@@ -762,21 +672,6 @@ def stream_static_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = spark.createDataFrame([], "user_id bigint")
     empty.write.mode("overwrite").option("path", block_dir).saveAsTable(tbl)
 
-    sch = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .json(out)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
     # stream-static anti-join: the catalog table is re-read per batch
     blocklist = spark.table(tbl)
     filtered = stream.join(blocklist, "user_id", "left_anti")
@@ -998,60 +893,10 @@ def stream_atomic_two_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables' event totals must agree (tables_consistent) — a torn pair or
     a dropped half shifts one side and fails both the flag and the
     per-type decimal checksums against the single-pass batch oracle."""
-    import os
-    import shutil
-
     from ..plans.registry import dsum
-    from ..plans.sources_ops import _build_window, _cache_dir, _mark
-    from ..sources import readers
     from ..sources.commitlog import CommitLog
 
-    # same 3-file replay fixture as stream_upsert_sink (shared cache key)
-    d, ready, fp = _cache_dir(sf_dir, "upsert_jsonl")
-    out = os.path.join(d, "batches")
-    if not ready:
-        with _build_window(d):
-            ev = readers.load_table(spark, sf_dir, "events").select(
-                "event_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-                F.dayofmonth("ts").alias("_day"),
-            )
-            os.makedirs(out, exist_ok=True)
-            for i, (lo, hi) in enumerate(((1, 10), (11, 20), (21, 31))):
-                staging = os.path.join(d, f"_stage_{i}")
-                ev.filter(F.col("_day").between(lo, hi)).drop("_day").coalesce(
-                    1
-                ).write.mode("overwrite").json(staging)
-                part = next(
-                    f
-                    for f in sorted(os.listdir(staging))
-                    if f.startswith("part-") and f.endswith(".json")
-                )
-                target = os.path.join(out, f"b{i}.json")
-                os.rename(os.path.join(staging, part), target)
-                shutil.rmtree(staging)
-                t = 1_700_000_000 + i
-                os.utime(target, times=(t, t))
-            _mark(d, fp)
-
-    sch = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .json(out)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
+    d, stream = _day_thirds_replay(spark, sf_dir)
 
     sink_path = os.path.join(d, "two_table_sink")
     shutil.rmtree(sink_path, ignore_errors=True)

@@ -47,7 +47,7 @@ _SERIAL_MARKERS = (
     "saveAsTable",
     "refreshTable",
     "refreshByPath",
-    "_cache_dir",
+    "_fixture",
     "shutil.rmtree",
     "createOrReplaceTempView",
 )
@@ -81,10 +81,10 @@ def _callees(fn, src: str):
 
 def _needs_serial(q) -> bool:
     """True when the query's own function, or any package function it
-    reaches by name, carries a serial marker. The walk starts below the
-    registry's wrapper, and follows helpers because most streaming queries
-    reach writeStream only through a drain."""
-    todo = [inspect.getclosurevars(q.fn).nonlocals.get("fn", q.fn)]
+    reaches by name, carries a serial marker. The walk starts at the
+    registered function, and follows helpers because most streaming
+    queries reach writeStream only through a drain."""
+    todo = [q.fn]
     seen = set()
     while todo:
         fn = todo.pop()

@@ -39,13 +39,17 @@ def run_spine(names, fixtures, app_name="llm_spine_bench") -> list[dict]:
     result dicts so scripts/spine_gate.py can assemble the committed
     SPINE_rN.json artifact. Shared by the LLM-text, vector, and graph
     spine benches."""
-    from pyspark.sql import Observation, functions as F
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     from amazonbigdata_for_students_spark.plans import REGISTRY
     from amazonbigdata_for_students_spark.session import get_spark
     from bench import materialise
 
-    spark = get_spark(app_name=app_name, extra_conf={"spark.ui.enabled": "true"})
+    # An active session (a caller's own) is reused as it is: getOrCreate
+    # would apply this package's defaults to it, its shuffle width included.
+    spark = SparkSession.getActiveSession() or get_spark(
+        app_name=app_name, extra_conf={"spark.ui.enabled": "true"}
+    )
 
     def _stages():
         # per-stage spill/shuffle counters via the UI REST API (VERDICT r9

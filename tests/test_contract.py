@@ -294,4 +294,35 @@ def test_check_oracle_runs_every_stream_query_serially():
     streams = [n for n in REGISTRY if "stream_" in n]  # the `stream_` filter
     assert len(streams) == 36
     assert [n for n in streams if not co._needs_serial(REGISTRY[n])] == []
+    # source-fixture builders (clear + build under the cache lock)
+    builders = ["src_jsonl_scan", "mm_binary_file_scan", "join_bucketed_colocated"]
+    assert [n for n in builders if not co._needs_serial(REGISTRY[n])] == []
     assert not co._needs_serial(REGISTRY["q1_pricing_summary"])
+
+
+def test_each_source_fixture_name_has_one_builder():
+    """Each source-fixture cache name is built by one function: every
+    name literal handed to ``sources_ops._fixture`` (or to
+    ``batch_twins._json_replay``, which hands it on) appears in a single
+    top-level function, and queries that share a layout call that
+    function. delete_propagate_rewrite's invalidate-and-rebuild is a
+    second call inside its one builder."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "amazonbigdata_for_students_spark"
+    builders: dict[str, set[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and getattr(node.func, "id", None) in (
+                    "_fixture",
+                    "_json_replay",
+                ):
+                    for a in node.args:
+                        if isinstance(a, ast.Constant) and isinstance(a.value, str):
+                            builders.setdefault(a.value, set()).add(f"{path.name}:{fn.name}")
+    assert len(builders) >= 20, sorted(builders)
+    assert {n: b for n, b in builders.items() if len(b) > 1} == {}

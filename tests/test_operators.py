@@ -384,13 +384,12 @@ def test_delete_propagation_physically_removes_tombstoned_users(spark, sf_small)
     assert no tombstoned user's rows survive on disk."""
     import os
 
+    from amazonbigdata_for_students_spark.plans import sources_ops as so
+
     REGISTRY["delete_propagate_rewrite"].fn(spark, sf_small).collect()
-    table = os.path.join(
-        "/tmp/abd_srccache",
-        os.path.basename(os.path.normpath(sf_small)),
-        "gdpr_bucketed",
-        "events_by_user_bucket",
-    )
+    # the query left the layout stamped, so this returns its dir unbuilt
+    d = so._fixture(sf_small, "gdpr_bucketed", pytest.fail)
+    table = os.path.join(d, "events_by_user_bucket")
     spark.catalog.refreshByPath(table)
     left = (
         spark.read.parquet(table)
@@ -3460,38 +3459,88 @@ def test_execute_immediate_binds_data_derived_threshold(spark, tmp_path):
     )
 
 
-def test_fixture_cache_build_lock_serializes(tmp_path, monkeypatch):
-    """Two concurrent builders of the same source fixture must serialize
-    on the flock: the second blocks during the first's build and then
-    observes the finished fixture as ready (regression for the
-    TASK_WRITE_FAILED race between the oracle gate and the test suite
-    both rebuilding /tmp/abd_srccache)."""
-    import threading
-    import time
-    from pathlib import Path
-
+def _fixture_sandbox(tmp_path, monkeypatch) -> str:
+    """A testdata dir holding a stand-in events table, with the source
+    fixture cache pointed into ``tmp_path``."""
     from amazonbigdata_for_students_spark.plans import sources_ops as so
 
     monkeypatch.setattr(so, "_CACHE_ROOT", str(tmp_path / "cache"))
     sf = tmp_path / "sf"
     sf.mkdir()
     (sf / "events.parquet").write_bytes(b"x")
-    d, ready, fp = so._cache_dir(str(sf), "fixt")
-    assert not ready
-    results = []
+    return str(sf)
 
-    def second():
-        _d2, r2, _fp2 = so._cache_dir(str(sf), "fixt")
-        results.append(r2)
 
-    t = threading.Thread(target=second)
-    t.start()
-    time.sleep(0.4)
-    assert results == []  # blocked behind the held build lock
-    (Path(d) / "data").write_text("built")
-    so._mark(d, fp)
-    t.join(timeout=10)
-    assert results == [True]  # the waiter saw the finished build, no rebuild
+def test_fixture_cache_build_lock_serializes(tmp_path, monkeypatch):
+    """Two concurrent builders of the same source fixture must serialize
+    on the flock: the second blocks during the first's build, then sees
+    the finished fixture as ready and builds nothing (regression for the
+    TASK_WRITE_FAILED race between the oracle gate and the test suite
+    both rebuilding the shared cache)."""
+    import threading
+    from pathlib import Path
+
+    from amazonbigdata_for_students_spark.plans import sources_ops as so
+
+    sf = _fixture_sandbox(tmp_path, monkeypatch)
+    building, release = threading.Event(), threading.Event()
+    builds, got = [], []
+
+    def slow_build(d):
+        builds.append(d)
+        building.set()
+        release.wait(10)
+        (Path(d) / "data").write_text("built")
+
+    first = threading.Thread(target=so._fixture, args=(sf, "fixt", slow_build))
+    first.start()
+    assert building.wait(10)
+    second = threading.Thread(target=lambda: got.append(so._fixture(sf, "fixt", builds.append)))
+    second.start()
+    second.join(0.4)
+    assert second.is_alive() and got == []  # blocked behind the held build lock
+    release.set()
+    first.join(10)
+    second.join(10)
+    assert not first.is_alive() and not second.is_alive()
+    assert len(builds) == 1 and got == builds  # the waiter saw the build; no rebuild
+    assert (Path(got[0]) / "data").read_text() == "built"
+
+
+def test_fixture_cache_builds_once_under_racing_threads(tmp_path, monkeypatch):
+    """More racing callers than cores, with a short thread switch
+    interval: the fixture is built exactly once and every caller gets
+    the stamped dir."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from amazonbigdata_for_students_spark.plans import sources_ops as so
+
+    sf = _fixture_sandbox(tmp_path, monkeypatch)
+    n = min(64, 2 * (os.cpu_count() or 1) + 1)
+    builds, got = [], []
+
+    def build(d):
+        builds.append(d)
+        time.sleep(0.05)
+
+    def call():
+        got.append(so._fixture(sf, "fixt", build))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and got == builds * n
 
 
 def test_croston_hand_walk(spark, tmp_path):
@@ -3537,97 +3586,57 @@ def test_log_loss_clamped_hand_walk(spark, tmp_path):
 
 
 def test_fixture_cache_failed_build_self_heals(tmp_path, monkeypatch):
-    """A build that raises before _mark leaves the lock held; the same
-    thread's next attempt must retry under that lock (clear + rebuild)
-    instead of flock-blocking against itself forever."""
+    """A build that raises leaves no _OK; the same thread's retry clears
+    the failed build's debris, builds, and leaves the fixture ready."""
+    import os
     from pathlib import Path
 
     from amazonbigdata_for_students_spark.plans import sources_ops as so
 
-    monkeypatch.setattr(so, "_CACHE_ROOT", str(tmp_path / "cache"))
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    (sf / "events.parquet").write_bytes(b"x")
-    d, ready, fp = so._cache_dir(str(sf), "fixt")
-    assert not ready
-    (Path(d) / "halfdone").write_text("junk")  # the failed build's debris
-    # the caller raised; no _mark. Re-enter on the same thread:
-    d2, ready2, fp2 = so._cache_dir(str(sf), "fixt")
-    assert d2 == d and not ready2
-    assert not (Path(d) / "halfdone").exists()  # debris cleared on retry
-    (Path(d2) / "data").write_text("built")
-    so._mark(d2, fp2)
-    _d3, ready3, _fp3 = so._cache_dir(str(sf), "fixt")
-    assert ready3
+    sf = _fixture_sandbox(tmp_path, monkeypatch)
+
+    def broken(d):
+        (Path(d) / "halfdone").write_text("junk")  # the failed build's debris
+        raise RuntimeError("build body failed")
+
+    with pytest.raises(RuntimeError):
+        so._fixture(sf, "fixt", broken)
+    seen = []
+
+    def build(d):
+        seen.append(sorted(os.listdir(d)))
+        (Path(d) / "data").write_text("built")
+
+    d = so._fixture(sf, "fixt", build)
+    assert seen == [[]]  # debris cleared before the retry built
+    assert so._fixture(sf, "fixt", pytest.fail) == d  # ready: no third build
 
 
 def test_failed_build_lock_released_for_other_threads(tmp_path, monkeypatch):
-    """The registry wrapper's release hook must free a raising thread's
-    build lock so OTHER threads (the gate pool sharing a fixture) can
-    acquire and build instead of flock-blocking forever."""
+    """A build that raises must leave no _OK and no held flock, so OTHER
+    threads (the gate pool sharing a fixture) acquire and build instead
+    of blocking forever."""
+    import os
     import threading
-    from pathlib import Path
 
     from amazonbigdata_for_students_spark.plans import sources_ops as so
 
-    monkeypatch.setattr(so, "_CACHE_ROOT", str(tmp_path / "cache"))
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    (sf / "events.parquet").write_bytes(b"x")
-    _d, ready, _fp = so._cache_dir(str(sf), "fixt")
-    assert not ready
-    so.release_thread_build_locks()  # what the wrapper does when fn raises
-    results = []
+    sf = _fixture_sandbox(tmp_path, monkeypatch)
+    failed = []
 
-    def second():
-        d2, r2, fp2 = so._cache_dir(str(sf), "fixt")
-        results.append(r2)
-        (Path(d2) / "x").write_text("b")
-        so._mark(d2, fp2)
-
-    t = threading.Thread(target=second)
-    t.start()
-    t.join(timeout=10)
-    assert results == [False]  # acquired and built; no deadlock
-
-
-def test_build_window_releases_lock_on_direct_invocation_raise(tmp_path, monkeypatch):
-    """ADVICE r9: a builder invoked DIRECTLY (tests, helper compositions —
-    no registry wrapper above it) that raises between _cache_dir and
-    _mark must not leave the thread's flock held. Every build body is now
-    wrapped in _build_window, which releases on exception; another thread
-    must then be able to acquire and build."""
-    import threading
-    from pathlib import Path
-
-    from amazonbigdata_for_students_spark.plans import sources_ops as so
-
-    monkeypatch.setattr(so, "_CACHE_ROOT", str(tmp_path / "cache"))
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    (sf / "events.parquet").write_bytes(b"x")
-
-    def direct_builder():
-        d, ready, fp = so._cache_dir(str(sf), "fixt")
-        assert not ready
-        with so._build_window(d):
-            raise RuntimeError("build body failed")
+    def broken(d):
+        failed.append(d)
+        raise RuntimeError("build body failed")
 
     with pytest.raises(RuntimeError):
-        direct_builder()
-    assert not so._BUILD_LOCKS, "flock leaked past the build window"
-    results = []
-
-    def second():
-        d2, r2, fp2 = so._cache_dir(str(sf), "fixt")
-        results.append(r2)
-        (Path(d2) / "x").write_text("b")
-        so._mark(d2, fp2)
-
-    t = threading.Thread(target=second)
+        so._fixture(sf, "fixt", broken)
+    assert not os.path.exists(os.path.join(failed[0], "_OK"))
+    builds = []
+    t = threading.Thread(target=so._fixture, args=(sf, "fixt", builds.append))
     t.start()
     t.join(timeout=10)
-    assert results == [False]  # acquired and built; no deadlock
+    assert not t.is_alive() and builds == failed  # acquired and built; no deadlock
+    assert os.path.exists(os.path.join(failed[0], "_OK"))
 
 
 def test_wl_refinement_symmetric_graph_stops_splitting(spark, tmp_path):
@@ -3760,19 +3769,13 @@ def test_bucketed_join_reregisters_over_fresh_files_without_rebuild(spark, sf_sm
 
     q = REGISTRY["join_bucketed_colocated"].fn
     first = {tuple(r) for r in q(spark, sf_small).collect()}
-    fp8 = __import__("hashlib").sha1(
-        so._src_fingerprint(sf_small, ("lineitem", "orders")).encode()
-    ).hexdigest()[:8]
-    from amazonbigdata_for_students_spark.sources.readers import sf_suffix
-
-    suffix = sf_suffix(sf_small)
-    d = os.path.join(so._CACHE_ROOT, os.path.basename(sf_small), f"bucketed_{fp8}")
+    d, specs = so._bucketed_fixture(spark, sf_small)
     files_before = {
         p: os.stat(p).st_mtime_ns
         for p in glob.glob(os.path.join(d, "*", "*"))
     }
     assert files_before, "bucket files missing under the fixture dir"
-    for t in (f"bkt_lineitem_{suffix}_{fp8}", f"bkt_orders_{suffix}_{fp8}"):
+    for _t, t, _key in specs:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     second = {tuple(r) for r in q(spark, sf_small).collect()}
     assert second == first

@@ -55,7 +55,8 @@ def test_bench_timed_q1_keeps_its_aggregates(spark, sf_small):
 
 def test_spine_rows_come_from_the_timed_pass(spark, sf_oracle, monkeypatch):
     """run_spine times the noop sink and takes each query's row count from
-    an Observation on that same pass: DataFrame.count is never called."""
+    an Observation on that same pass: DataFrame.count is never called, and
+    the active session's shuffle width is untouched."""
     import importlib.util
     import os
 
@@ -73,8 +74,11 @@ def test_spine_rows_come_from_the_timed_pass(spark, sf_oracle, monkeypatch):
 
     # the session's concrete DataFrame class, which defines its own count
     monkeypatch.setattr(type(dfs[names[0]]), "count", no_count)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
     (rec,) = spine.run_spine(names, [("sf0.01", sf_oracle)])
     assert rec["rows"] == want
+    # the shared session's runtime conf is left as it was found
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
 
 
 def test_projection_prunes_scan(spark, sf_small):
@@ -298,12 +302,9 @@ def test_dynamic_partition_pruning_on_partitioned_layout(spark, sf_small):
     # dynamic pruning subquery, not scan all days.
     import pyspark.sql.functions as F
 
-    REGISTRY["src_partitioned_sink_prune"].fn(spark, sf_small)  # ensure layout
-    import os
-    base = os.path.join(
-        "/tmp/abd_srccache", os.path.basename(sf_small), "part_sink", "events_part"
-    )
-    fact = spark.read.parquet(base)
+    from amazonbigdata_for_students_spark.plans import sources_ops
+
+    fact = spark.read.parquet(sources_ops._part_sink_fixture(spark, sf_small))
     dim = spark.range(1, 31).select(
         F.col("id").cast("int").alias("day"), (F.col("id") % 7 == 0).alias("special")
     )
